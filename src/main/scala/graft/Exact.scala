@@ -180,4 +180,40 @@ object Exact {
       qr(1).longValueExact().toDouble + fr.doubleValue()
     if (neg) -conv else conv
   }
+
+  /** `n` exact integer sums kept in PLAIN LONGS with a BigInteger carry —
+    * the typed-aggregate buffer of [[graft.ml.DetKMeans.fit]]'s Lloyd's
+    * loop and [[graft.ann.Ann.isClustered]]. [[add]] allocates nothing
+    * unless the long partial would overflow; then the partial moves into
+    * the carry and the long restarts at the addend. Exact for ANY long
+    * addends, and the decomposition into carried chunks is associative, so
+    * partition order cannot change [[total]]. A BigInteger per row per
+    * term was the first cut of the Lloyd's loop (~600M objects at the
+    * 100× probe; GC made rep times grow run-over-run). */
+  final class LongSums(val size: Int) extends Serializable {
+    private val lo = new Array[Long](size)
+    private val carry = Array.fill(size)(java.math.BigInteger.ZERO)
+
+    def add(i: Int, v: Long): Unit = {
+      val a = lo(i)
+      val s = a + v
+      if (((a ^ s) & (v ^ s)) < 0) { // signed overflow (Math.addExact's test)
+        carry(i) = carry(i).add(java.math.BigInteger.valueOf(a))
+        lo(i) = v
+      } else lo(i) = s
+    }
+
+    /** Folds `o` into this buffer (the treeAggregate combOp). */
+    def merge(o: LongSums): Unit = {
+      var i = 0
+      while (i < size) {
+        carry(i) = carry(i).add(o.carry(i))
+        add(i, o.lo(i))
+        i += 1
+      }
+    }
+
+    def total(i: Int): java.math.BigInteger =
+      carry(i).add(java.math.BigInteger.valueOf(lo(i)))
+  }
 }

@@ -479,30 +479,30 @@ object Ann {
   /** Exact clusteredness decision over the FINAL fit assignment:
     * `4*withinSS < totalSS`, where withinSS uses FLOORED centers and
     * totalSS a TRUNCATED global mean — so both sides of the comparison
-    * are exact integers (decimal(38) sums + BigInteger compare here,
-    * HUGEINT there, [[probeCtes]]) and the threshold can never drift
-    * between engines, even for a corpus sitting exactly on it. Flooring
-    * perturbs the ratio by ~1e-6 relative on q20-scale features —
-    * irrelevant three orders of magnitude from the 1/4 threshold on
-    * either side (isotropic KMeans at k << n leaves wss/tss ~ 0.9; a real
-    * cluster mixture leaves ~1e-6).
+    * are exact integers (long sums with a BigInteger carry + BigInteger
+    * compare here, HUGEINT there, [[probeCtes]]) and the threshold can
+    * never drift between engines, even for a corpus sitting exactly on
+    * it. Flooring perturbs the ratio by ~1e-6 relative on q20-scale
+    * features — irrelevant three orders of magnitude from the 1/4
+    * threshold on either side (isotropic KMeans at k << n leaves
+    * wss/tss ~ 0.9; a real cluster mixture leaves ~1e-6).
     *
-    * Cost (optimization r17, guide §1.2/§2.3): ONE groupBy(cluster) pass
-    * producing ≤ k rows of exact per-cluster moments (n_c, Σx_d, Σx_d²; the
-    * x·x per-row term is a plain long multiply, |x| ≤ 2^20 ⇒ x² ≤ 2^40),
-    * from which BOTH sums reconstruct exactly by the integer identity
-    * Σ(x−c)² = Σx² − 2cΣx + n·c² — the first cut ran TWO full-corpus
-    * aggregate passes whose per-row expression was 64 nested element_at
-    * lookups in decimal arithmetic, and it re-ran on EVERY probe-consuming
-    * call (measured: ann_ivf 3.0 → 8.3 s across the r16→r17 bench). The
-    * within-cluster term attaches floored centers to the ≤ k moment rows
-    * (not to corpus rows); the total term is pure driver BigInteger over
-    * the 64 column totals. Decision values are bit-identical to the
-    * two-pass form — same integers, same truncated mean, same compare —
-    * so every oracle gate is unchanged. Memoized per assignment plan
-    * (the plan digest embeds the centers literal): a fit is deterministic,
-    * so its statistic is fit-once data, exactly like the [[DetKMeans]]
-    * model cache and [[cachedCount]] this mirrors. */
+    * Cost: ONE typed treeAggregate over the assigned rows (one Spark job)
+    * accumulates per-cluster exact moments (m_c, Σx_d, Σx_d²) in an
+    * [[graft.Exact.LongSums]] buffer — per-row long adds, the x·x term a
+    * `Math.multiplyExact`, a BigInteger only when a long partial would
+    * overflow — the cost shape of the [[DetKMeans]] Lloyd's loop that
+    * precedes it. The driver then reconstructs both sums from the k×d
+    * moments by the integer identity Σ(x−c)² = Σx² − 2cΣx + n·c². The
+    * DataFrame form this replaces (a groupBy with 129 decimal(38,0) sum
+    * buffers, then a 130-expression aggregate of 64-way element_at sums)
+    * cost ~10 s and 3 jobs of every cold ann_ivf at 2,000 rows, nearly
+    * all of it planning and code generation before the first row. Same
+    * integers, same truncated mean, same compare, so the bit — and every
+    * oracle gate — is unchanged. Memoized per assignment plan (the plan
+    * digest embeds the centers literal): a fit is deterministic, so its
+    * statistic is fit-once data, exactly like the [[DetKMeans]] model
+    * cache and [[cachedCount]] this mirrors. */
   private val clusteredMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
@@ -517,51 +517,74 @@ object Ann {
     v
   }
 
-  private def computeClustered(assigned: DataFrame,
-                               centers: Array[Array[Double]]): Boolean = {
+  /** The un-memoized decision behind [[isClustered]]. */
+  private[graft] def computeClustered(assigned: DataFrame,
+                                      centers: Array[Array[Double]]): Boolean = {
+    val (wss, tss) = clusteredSums(assigned, centers)
+    wss.shiftLeft(2).compareTo(tss) < 0
+  }
+
+  /** (withinSS, totalSS) of [[computeClustered]] as exact integers (both 0
+    * for an empty frame). `assigned` carries `cluster` in
+    * [0, centers.length) and integral `x0..x{IvfDims-1}`. */
+  private[graft] def clusteredSums(assigned: DataFrame, centers: Array[Array[Double]])
+      : (java.math.BigInteger, java.math.BigInteger) = {
     def big(v: Long) = java.math.BigInteger.valueOf(v)
+    val k = centers.length
+    val dims = IvfDims
+    // per-cluster buffer slots: Σx_d at (c·dims + d)·2, Σx_d² right after
+    def zero = (new Array[Long](k), new graft.Exact.LongSums(2 * k * dims))
+    val (ms, sums) = assigned
+      .select(col("cluster").cast("int") +:
+        (0 until dims).map(d => col(s"x$d").cast("long")): _*)
+      .rdd.treeAggregate(zero)(
+        seqOp = { (acc, r) =>
+          val c = r.getInt(0)
+          acc._1(c) += 1
+          val base = 2 * c * dims
+          var d = 0
+          while (d < dims) {
+            val x = r.getLong(d + 1)
+            acc._2.add(base + 2 * d, x)
+            acc._2.add(base + 2 * d + 1, Math.multiplyExact(x, x))
+            d += 1
+          }
+          acc
+        },
+        combOp = { (a, b) =>
+          var c = 0
+          while (c < k) { a._1(c) += b._1(c); c += 1 }
+          a._2.merge(b._2)
+          a
+        })
+    val n = big(ms.sum)
     val fc = floorCenters(centers)
-    // one pass: per-cluster exact moments (≤ k rows out)
-    val momentAggs = Seq(count(lit(1)).cast("decimal(38,0)").as("m")) ++
-      (0 until IvfDims).flatMap { d =>
-        Seq(sum(col(s"x$d").cast("decimal(38,0)")).as(s"s$d"),
-          sum((col(s"x$d") * col(s"x$d")).cast("decimal(38,0)")).as(s"q$d"))
-      }
-    val perCluster = assigned.groupBy(col("cluster"))
-      .agg(momentAggs.head, momentAggs.tail: _*)
-    // wss_c = Σ_d (q_d − 2·fc_d·s_d + m·fc_d²) on the k moment rows; the
-    // floored-center literal rides element_at over k rows, not the corpus
-    val fcLit = typedLit(fc.map(_.toSeq).toSeq)
-    val fc2Lit = typedLit(fc.map(_.map(g => g * g).toSeq).toSeq)
-    val cIdx = (col("cluster") + 1).cast("int")
-    val wssC = (0 until IvfDims).map { d =>
-      col(s"q$d") -
-        (lit(2L).cast("decimal(38,0)") *
-          element_at(element_at(fcLit, cIdx), d + 1).cast("decimal(38,0)") * col(s"s$d")) +
-        (col("m") * element_at(element_at(fc2Lit, cIdx), d + 1).cast("decimal(38,0)"))
-    }.reduce(_ + _).cast("decimal(38,0)")
-    val totAggs = Seq(sum(col("m")).as("n"), sum(wssC).as("wss")) ++
-      (0 until IvfDims).flatMap { d =>
-        Seq(sum(col(s"s$d")).as(s"ts$d"), sum(col(s"q$d")).as(s"tq$d"))
-      }
-    val r = perCluster.agg(totAggs.head, totAggs.tail: _*).head
-    if (r.isNullAt(0)) return false
-    val n = r.getDecimal(0).toBigInteger
-    if (n.signum() == 0) return false
-    val wss = r.getDecimal(1).toBigInteger
-    // tss = Σ_d (Q_d − 2·gm_d·S_d + n·gm_d²), gm_d = trunc(S_d / n) — the
-    // identical truncated mean and integer sums as the two-pass form
+    // wss = Σ_c Σ_d (q − 2·fc·s + m·fc²); tss = Σ_d (Q − 2·gm·S + n·gm²)
+    // with gm_d = trunc(S_d / n) — BigInteger.divide truncates toward zero,
+    // like the oracle's //
+    var wss = java.math.BigInteger.ZERO
     var tss = java.math.BigInteger.ZERO
     var d = 0
-    while (d < IvfDims) {
-      val sD = r.getDecimal(2 + 2 * d).toBigInteger
-      val qD = r.getDecimal(3 + 2 * d).toBigInteger
-      val gm = sD.divide(n) // truncates toward zero, like //
+    while (d < dims) {
+      var sD = java.math.BigInteger.ZERO
+      var qD = java.math.BigInteger.ZERO
+      var c = 0
+      while (c < k) {
+        val s = sums.total(2 * (c * dims + d))
+        val q = sums.total(2 * (c * dims + d) + 1)
+        val g = big(fc(c)(d))
+        wss = wss.add(q.subtract(big(2L).multiply(g).multiply(s))
+          .add(big(ms(c)).multiply(g).multiply(g)))
+        sD = sD.add(s)
+        qD = qD.add(q)
+        c += 1
+      }
+      val gm = if (n.signum() == 0) n else sD.divide(n)
       tss = tss.add(qD.subtract(big(2L).multiply(gm).multiply(sD))
         .add(n.multiply(gm).multiply(gm)))
       d += 1
     }
-    wss.multiply(big(4L)).compareTo(tss) < 0
+    (wss, tss)
   }
 
   /** SQL twin of [[isClustered]] + [[adaptiveProbe]] over a completed

@@ -244,20 +244,14 @@ object DetKMeans {
     }
 
     val kEff = centers.length
-    // Cluster sums accumulate in PLAIN LONGS with an overflow-flush carry:
-    // per-row |x| is < 2^53 (the exactness contract), so adding into a long
-    // and flushing to BigInteger once |partial| passes 2^61 is exact, and
-    // the sum's decomposition into flushed chunks is associative — the
-    // first cut allocated a BigInteger per row per feature (~600M objects
-    // for 15M rows × 4 features × 10 iterations at the 100× probe; GC made
-    // rep times GROW run-over-run). Flushes are ~never in practice.
-    val Flush = 1L << 61
-    type Acc = (Array[Long], Array[Array[Long]], Array[Array[java.math.BigInteger]])
-    def zeroAcc: Acc = (new Array[Long](kEff), Array.fill(kEff, nFi)(0L),
-      Array.fill(kEff, nFi)(java.math.BigInteger.ZERO))
+    // Cluster sums accumulate in an Exact.LongSums buffer (cluster-major,
+    // j·nF + i): plain long adds with a BigInteger carry on overflow, so the
+    // loop allocates nothing per row and the totals stay exact.
+    def zeroAcc: (Array[Long], Exact.LongSums) =
+      (new Array[Long](kEff), new Exact.LongSums(kEff * nFi))
     for (_ <- 1 to iters) {
       val ctrs = centers                       // capture this iteration's value
-      val (ms, sl, sc) = ptsRdd.treeAggregate(zeroAcc)(
+      val (ms, sums) = ptsRdd.treeAggregate(zeroAcc)(
         seqOp = { case (acc, (_, xs, zs)) =>
           var best = 0
           var bestD = Double.PositiveInfinity
@@ -271,31 +265,15 @@ object DetKMeans {
             j += 1
           }
           acc._1(best) += 1
-          val s = acc._2(best)
-          val carry = acc._3(best)
+          val base = best * nFi
           var i = 0
-          while (i < nFi) {
-            s(i) += xs(i)
-            if (s(i) >= Flush || s(i) <= -Flush) {
-              carry(i) = carry(i).add(java.math.BigInteger.valueOf(s(i)))
-              s(i) = 0L
-            }
-            i += 1
-          }
+          while (i < nFi) { acc._2.add(base + i, xs(i)); i += 1 }
           acc
         },
         combOp = { (a, b) =>
           var j = 0
-          while (j < kEff) {
-            a._1(j) += b._1(j)
-            var i = 0
-            while (i < nFi) {
-              a._3(j)(i) = a._3(j)(i).add(b._3(j)(i))
-                .add(java.math.BigInteger.valueOf(b._2(j)(i)))
-              i += 1
-            }
-            j += 1
-          }
+          while (j < kEff) { a._1(j) += b._1(j); j += 1 }
+          a._2.merge(b._2)
           a
         })
       centers = centers.zipWithIndex.map { case (old, j) =>
@@ -303,7 +281,7 @@ object DetKMeans {
         else {
           val m = ms(j).toDouble
           featCols.indices.map { i =>
-            val total = sc(j)(i).add(java.math.BigInteger.valueOf(sl(j)(i)))
+            val total = sums.total(j * nFi + i)
             (Exact.bigDecToDoubleJvm(new java.math.BigDecimal(total)) / m
               - mu(i)) / sigma(i)
           }.toArray

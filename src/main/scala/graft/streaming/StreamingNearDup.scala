@@ -186,13 +186,6 @@ object StreamingNearDup {
     (decisions, signed)
   }
 
-  /** Public probe without the sink: decisions for an ad-hoc slice against a
-    * prebuilt index (the nightly-batch entry point over the same index). */
-  def probeBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
-                 threshold: Double = 0.8, numHashes: Int = 16,
-                 bands: Int = 4): DataFrame =
-    probe(spark, batch, indexDir, threshold, numHashes, bands)._1
-
   /** foreachBatch body: exactly-once decisions under `outDir/batch=N` plus
     * the index append under `indexDir/batch=N`, in marker order
     * index-then-output (see crash-safety note above). Wire as

@@ -3,6 +3,7 @@ package graft
 import graft.ann.Ann
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class AnnSpec extends AnyFunSuite {
@@ -39,6 +40,162 @@ class AnnSpec extends AnyFunSuite {
     assert(Ann.adaptiveProbe(8, clustered = true) == Ann.ivfDefaultProbe(8),
       "min-clamp regime keeps the 7/8 rule regardless of the bit")
     spark.catalog.clearCache()
+  }
+
+  // ---- the clusteredness statistic against a plain per-row reference ----
+
+  private val assignedSchema = StructType(StructField("cluster", LongType) +:
+    (0 until Ann.IvfDims).map(d => StructField(s"x$d", LongType)))
+
+  /** (cluster, x0..x63) rows as an assigned frame over `parts` partitions. */
+  private def assignedFrame(rows: Seq[(Int, Array[Long])], parts: Int) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (c, xs) => Row.fromSeq(c.toLong +: xs.toSeq) }, parts),
+      assignedSchema)
+
+  /** (Σ(x−⌊c⌋)², Σ(x−trunc(S/n))²), one BigInteger term per row and
+    * dimension — the definition, with none of the moment algebra. */
+  private def clusteredSumsRef(rows: Seq[(Int, Array[Long])],
+                               centers: Array[Array[Double]])
+      : (java.math.BigInteger, java.math.BigInteger) = {
+    import java.math.BigInteger
+    val n = BigInteger.valueOf(math.max(1, rows.size).toLong)
+    val gm = (0 until Ann.IvfDims).map { d =>
+      rows.foldLeft(BigInteger.ZERO)((a, r) => a.add(BigInteger.valueOf(r._2(d))))
+        .divide(n)
+    }
+    var wss = BigInteger.ZERO
+    var tss = BigInteger.ZERO
+    for ((c, xs) <- rows; d <- 0 until Ann.IvfDims) {
+      val x = BigInteger.valueOf(xs(d))
+      val w = x.subtract(BigInteger.valueOf(math.floor(centers(c)(d)).toLong))
+      val t = x.subtract(gm(d))
+      wss = wss.add(w.multiply(w))
+      tss = tss.add(t.multiply(t))
+    }
+    (wss, tss)
+  }
+
+  /** The decision, `4·wss < tss`, on the reference sums. */
+  private def clusteredRef(rows: Seq[(Int, Array[Long])],
+                           centers: Array[Array[Double]]): Boolean = {
+    val (wss, tss) = clusteredSumsRef(rows, centers)
+    wss.shiftLeft(2).compareTo(tss) < 0
+  }
+
+  test("clusteredness statistic equals the per-row BigInteger reference (property)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // k centers in [-1000, 1000)^64 with fractional parts (so flooring
+    // matters); rows = a center's rounded value ± spread on a subset of
+    // the clusters (the rest stay empty). The ratio wss/tss sits near
+    // spread²/(spread² + 1000²), so spreads up to 2000 straddle the 1/4
+    // threshold from both sides.
+    val caseGen = for {
+      k <- Gen.choose(1, 8)
+      parts <- Gen.choose(1, 6)
+      used <- Gen.choose(1, k)
+      nRows <- Gen.choose(1, 60)
+      spread <- Gen.oneOf(Gen.choose(0L, 20L), Gen.choose(300L, 900L),
+        Gen.choose(900L, 2000L))
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val centers = Array.fill(k, Ann.IvfDims)(rnd.nextInt(200000) / 100.0 - 1000.0)
+      val rows = (0 until nRows).map { _ =>
+        val c = rnd.nextInt(used)
+        (c, Array.tabulate(Ann.IvfDims)(d =>
+          math.round(centers(c)(d)) + rnd.between(-spread, spread + 1)))
+      }
+      (centers, rows, parts)
+    }
+    var decided = Map(true -> 0, false -> 0)
+    val prop = Prop.forAllNoShrink(caseGen) { case (centers, rows, parts) =>
+      val want = clusteredRef(rows, centers)
+      decided = decided.updated(want, decided(want) + 1)
+      val df = assignedFrame(rows, parts)
+      Ann.clusteredSums(df, centers) == clusteredSumsRef(rows, centers) &&
+        Ann.computeClustered(df, centers) == want
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(40)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
+    assert(decided(true) > 0 && decided(false) > 0,
+      s"generator must land on both sides of the threshold: $decided")
+  }
+
+  test("clusteredness statistic stays exact past long overflow (carry path)") {
+    // centers ±2^29, spreads up to 1.5·2^30 ⇒ |x| ≤ 2^31 and x² up to
+    // 2^62: each cluster's Σx² passes 2^63 within one partition, and with
+    // three partitions the partials overflow again when merged. The
+    // decision must still equal the reference on both sides of it.
+    val a29 = 1L << 29
+    val centers = Array.tabulate(2, Ann.IvfDims)((c, d) =>
+      if ((c + d) % 2 == 0) a29 - 0.5 else 0.5 - a29)
+    def rows(spread: Long) = (0 until 192).map { i =>
+      val c = i % 2
+      (c, Array.tabulate(Ann.IvfDims)(d =>
+        math.floor(centers(c)(d)).toLong +
+          ((i * 7919L + d * 104729L) % (2 * spread + 1)) - spread))
+    }
+    val (tight, wide) = (1L << 10, 3L << 29)
+    for (spread <- Seq(tight, 1L << 28, wide); parts <- Seq(1, 3)) {
+      val rs = rows(spread)
+      val df = assignedFrame(rs, parts)
+      assert(Ann.clusteredSums(df, centers) == clusteredSumsRef(rs, centers),
+        s"spread $spread over $parts partitions")
+      assert(Ann.computeClustered(df, centers) == clusteredRef(rs, centers))
+    }
+    assert(Ann.computeClustered(assignedFrame(rows(tight), 3), centers))
+    assert(!Ann.computeClustered(assignedFrame(rows(wide), 3), centers))
+    assert(Ann.clusteredSums(assignedFrame(Seq.empty, 2), centers) ==
+      (java.math.BigInteger.ZERO, java.math.BigInteger.ZERO))
+    // and the buffer itself, at the edge: sums far past Long.MaxValue in
+    // both signs, folded across a merge
+    val a = new graft.Exact.LongSums(2)
+    val b = new graft.Exact.LongSums(2)
+    var want = Array(java.math.BigInteger.ZERO, java.math.BigInteger.ZERO)
+    for (i <- 0 until 50) {
+      val v = if (i % 5 == 4) Long.MinValue else Long.MaxValue - i
+      val buf = if (i % 2 == 0) a else b
+      buf.add(0, v)
+      buf.add(1, -v - 1)
+      want = Array(want(0).add(java.math.BigInteger.valueOf(v)),
+        want(1).add(java.math.BigInteger.valueOf(-v - 1)))
+    }
+    a.merge(b)
+    assert(a.total(0) == want(0) && a.total(1) == want(1))
+  }
+
+  test("clusteredness is one Spark job cold and none on a memo hit") {
+    val group = "clusteredness-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    val centers = Array.tabulate(3, Ann.IvfDims)((c, d) => (c * 100 + d).toDouble)
+    val rows = (0 until 300).map(i => (i % 3,
+      Array.tabulate(Ann.IvfDims)(d => (i % 3) * 100L + d + (i % 7) - 3)))
+    val df = assignedFrame(rows, 4) // a fresh plan: its digest is not memoized
+    sc.addSparkListener(listener)
+    try {
+      def jobsOf(call: => Boolean): (Boolean, Int) = {
+        org.apache.spark.TestBus.drain(sc)
+        jobs.set(0)
+        sc.setJobGroup(group, "isClustered")
+        val v = try call finally sc.clearJobGroup()
+        org.apache.spark.TestBus.drain(sc)
+        (v, jobs.get)
+      }
+      val (first, coldJobs) = jobsOf(Ann.isClustered(df, centers))
+      assert(coldJobs == 1, s"cold isClustered launched $coldJobs jobs")
+      val (again, warmJobs) = jobsOf(Ann.isClustered(df, centers))
+      assert(warmJobs == 0, s"memo hit launched $warmJobs jobs")
+      assert(first && again == first)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("LSH top-k recall >= 0.9 vs brute force") {
