@@ -80,30 +80,13 @@ object Ann {
   private[graft] def adaptiveBits(n: Long): Int =
     (3 to 20).find(b => (1L << b) * 64 >= n).getOrElse(20)
 
-  /** LRU count cache for adaptive-bits sizing, keyed by the non-truncating
-    * plan digest ([[graft.PlanKey]]) — without it every auto-sized
-    * ANN/decontamination call pays one extra full count job over the
-    * corpus. Safe because the cached value only sizes bucket GEOMETRY
-    * (same count → same bits → same buckets); the PlanKey aliasing caveat
-    * (data rewritten in place under the same path) applies. */
-  private val CountCacheMax = 64
-  private val countCache =
-    new java.util.LinkedHashMap[String, java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-        size() > CountCacheMax
-    }
-
-  private[graft] def cachedCount(df: DataFrame): Long = {
-    val k = graft.PlanKey.digest(df)
-    val hit = countCache.synchronized(countCache.get(k))
-    if (hit != null) hit.longValue()
-    else {
-      val n = df.count()
-      countCache.synchronized(countCache.put(k, n))
-      n
-    }
-  }
+  /** Row count for adaptive-bits sizing, memoized per plan digest
+    * ([[graft.PlanKey]]) — without it every auto-sized ANN/decontamination
+    * call pays one extra full count job over the corpus. Safe because the
+    * count only sizes bucket GEOMETRY (same count → same bits → same
+    * buckets). */
+  private[graft] def cachedCount(df: DataFrame): Long =
+    graft.Memo.get("ann.count", graft.PlanKey.digest(df))(df.count())
 
   /** Shipped LSH table count, scaled with the bucket bits: 6·bits − 6.
     *
@@ -503,19 +486,10 @@ object Ann {
     * digest embeds the centers literal): a fit is deterministic, so its
     * statistic is fit-once data, exactly like the [[DetKMeans]] model
     * cache and [[cachedCount]] this mirrors. */
-  private val clusteredMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private[graft] def isClustered(assigned: DataFrame,
-                                 centers: Array[Array[Double]]): Boolean = {
-    val key = graft.PlanKey.digest(assigned)
-    val hit = clusteredMemo.get(key)
-    if (hit != null) return hit.booleanValue()
-    val v = computeClustered(assigned, centers)
-    if (clusteredMemo.size > MemoBound) clusteredMemo.clear()
-    clusteredMemo.put(key, v)
-    v
-  }
+                                 centers: Array[Array[Double]]): Boolean =
+    graft.Memo.get("ann.clustered", graft.PlanKey.digest(assigned))(
+      computeClustered(assigned, centers))
 
   /** The un-memoized decision behind [[isClustered]]. */
   private[graft] def computeClustered(assigned: DataFrame,
@@ -678,10 +652,6 @@ object Ann {
   /** q20-quantized embedding as exact longs. */
   private def qeLong(c: Column): Column = transform(quantize(c), x => x.cast("long"))
 
-  /** Test hook: DetKMeans model-cache occupancy (the IVF quantizer caches
-    * through [[graft.ml.DetKMeans.fitCached]] — fit once, probe many). */
-  private[graft] def ivfCacheSize: Int = graft.ml.DetKMeans.cacheSize
-
   /** Spherical features: each q20 component re-projected onto the 2^20
     * sphere (round(qe·2^20/||qe||) — exact-integer in, one portable
     * division + round out), so Euclidean Lloyd's clusters ANGULAR
@@ -789,7 +759,7 @@ object Ann {
     * 3+iters-scan Lloyd's fit happens ONCE here: warm sessions and
     * restarted executors read constant-size centroids/model plus the
     * (vec_id, list_id) table instead of refitting — the in-memory
-    * DetKMeans LRU only helps within one JVM. Doubles round-trip parquet
+    * DetKMeans model memo only helps within one JVM. Doubles round-trip parquet
     * bit-exactly, so the indexed probe is bit-identical to the fit path. */
   /** Cheap corpus content digest for index-staleness fingerprints: XOR of
     * per-row xxhash64(vec_id, embedding). Order-independent, overflow-free,
@@ -817,7 +787,7 @@ object Ann {
   private[graft] def buildIvfIndexFrom(spark: SparkSession, emb: DataFrame,
                                        indexDir: String, nLists: Int = 0,
                                        withVectors: Boolean = true): Unit = {
-    ivfModelMemo.remove(indexDir) // a rebuild replaces mu/sigma in place
+    graft.Memo.invalidate("ivf.model", indexDir) // a rebuild replaces mu/sigma in place
     val xs = (0 until IvfDims).map(i => s"x$i")
     val feats = ivfProj(emb.select(col("vec_id"), col("embedding")), "embedding")
       .persist()
@@ -881,8 +851,8 @@ object Ann {
   /** The index's frozen standardization vector + list counts — a 1-row
     * driver-side artifact; reading it is a (tiny) Spark job per call, so
     * memoize per index dir. Stale entries are impossible while the dir is
-    * memo-validated: buildIvfIndex overwrites model before meta, and
-    * ensureMemo is keyed on the same dir. Returns (mu, sigma, effective
+    * memo-validated: [[buildIvfIndexFrom]] invalidates the entry, and
+    * [[ensureIvfIndex]] is keyed on the same dir. Returns (mu, sigma, effective
     * n_lists, requested n_lists): probe defaults derive from REQUESTED so
     * tiny corpora (effective < requested when n < 8) probe the same list
     * count as the fresh-fit path and the oracle geo CTE; validation of the
@@ -890,10 +860,9 @@ object Ann {
     * fall back to effective (the two only diverge below the 8-clamp). */
   private def readIvfModel(spark: SparkSession, indexDir: String)
       : (Array[Double], Array[Double], Int, Int, Boolean) = {
-    if (ivfModelMemo.size > MemoBound) ivfModelMemo.clear()
-    ivfModelMemo.computeIfAbsent(indexDir, { d =>
-      val m = spark.read.parquet(s"$d/model").head
-      val meta = spark.read.parquet(s"$d/meta").head
+    graft.Memo.get("ivf.model", indexDir) {
+      val m = spark.read.parquet(s"$indexDir/model").head
+      val meta = spark.read.parquet(s"$indexDir/meta").head
       val nl = meta.getAs[Int]("n_lists")
       val nlReq =
         if (meta.schema.fieldNames.contains("n_lists_req"))
@@ -904,7 +873,7 @@ object Ann {
           meta.getAs[Boolean]("clustered")
       (m.getSeq[Double](m.fieldIndex("mu")).toArray,
         m.getSeq[Double](m.fieldIndex("sigma")).toArray, nl, nlReq, clustered)
-    })
+    }
   }
 
   // ------------------------------------------------- IVF append arc
@@ -1076,67 +1045,59 @@ object Ann {
          |SELECT query_id, vec_id, cos_sim, "rank" FROM rr WHERE "rank" <= $k""".stripMargin
   }
 
-  private val ivfModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Double], Int, Int, Boolean)]()
+  /** Build-once glue for the persisted vector indexes (IVF, PQ, IVFADC):
+    * the index lives under java.io.tmpdir at a path named by the MD5 of
+    * `key` (dir + geometry + layout version), and its meta carries the
+    * build-time corpus fingerprint — count, max vec_id and
+    * [[corpusDigest]]. A mismatch with the live embeddings table, a
+    * pre-fingerprint meta, or a meta that cannot be read (a run killed
+    * mid-write leaves meta/ with only _temporary) runs `build` instead of
+    * serving or wedging. */
+  private[graft] def ensureVectorIndex(spark: SparkSession, tag: String, dir: String,
+                                       key: String)(build: String => Unit): String =
+    persistedIndex(tag, key) { idx =>
+      val p = new org.apache.hadoop.fs.Path(s"$idx/meta")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fresh = fs.exists(p) && scala.util.Try {
+        val meta = spark.read.parquet(s"$idx/meta")
+        meta.columns.contains("content_digest") && {
+          val m = meta.head
+          val live = Tables.embeddings(spark, dir)
+          val fp = live.agg(count(lit(1)), max(col("vec_id"))).head
+          m.getAs[Long]("nvecs") == fp.getLong(0) &&
+            m.getAs[Long]("max_vec_id") ==
+              (if (fp.isNullAt(1)) -1L else fp.getLong(1)) &&
+            m.getAs[Long]("content_digest") == corpusDigest(live)
+        }
+      }.getOrElse(false)
+      if (!fresh) build(idx)
+    }
 
-  /** Index dirs whose on-disk fingerprint this JVM already validated.
-    * The staleness check exists to protect ACROSS JVM restarts (a durable
-    * index must not silently serve data regenerated at the same path while
-    * the process that built it is long gone); re-proving it on every call
-    * would charge each query a corpus-count scan. First use per JVM
-    * validates, later uses trust — an in-place rewrite AFTER that first
-    * call aliases until [[resetEnsureMemo]] (the PlanKey caveat, stated
-    * here at the durable layer too). */
-  /** Flush-at-bound (not LRU): entries are a few hundred bytes, the bound
-    * exists only so thousands of distinct corpora can't accumulate; a
-    * flush re-validates on next touch, which is always safe. */
-  private val MemoBound = 256
-  private val ensureMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def resetEnsureMemo(): Unit = {
-    ensureMemo.clear(); ivfModelMemo.clear()
+  /** `java.io.tmpdir/graft_<tag>_idx_<md5(key)>`, passed through `validate`
+    * once per JVM. The on-disk fingerprint exists to protect ACROSS process
+    * restarts (a durable index must not serve data regenerated at the same
+    * path after the process that built it is gone); re-proving it on every
+    * call would charge each query a corpus scan, so the first use validates
+    * and later uses trust the dir until the memo forgets it. */
+  private[graft] def persistedIndex(tag: String, key: String)(validate: String => Unit): String = {
+    val hash = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val idx = new java.io.File(
+      sys.props("java.io.tmpdir"), s"graft_${tag}_idx_$hash").getAbsolutePath
+    graft.Memo.get(s"$tag.ensure", idx)(validate(idx))
+    idx
   }
 
-  /** Build-once glue keyed by (dir, geometry) under java.io.tmpdir — the
-    * hybrid-index recipe including its staleness rule: meta carries the
-    * build-time corpus fingerprint (count + max vec_id), and a mismatch
-    * with the live embeddings table (or a pre-fingerprint meta) rebuilds.
-    * A rewrite preserving both values still aliases (the PlanKey caveat).
-    * The check runs once per JVM per index dir ([[ensureMemo]]). */
+  /** The persisted IVF index for `dir` ([[ensureVectorIndex]]). */
   private[graft] def ensureIvfIndex(spark: SparkSession, dir: String,
                                     nLists: Int = 0): String = {
     // nLists = 0 derives the size-derived geometry BEFORE keying, so the
     // key (and the index layout behind it) is pinned to the derived value
     val lists = if (nLists > 0) nLists else derivedLists(spark, dir)
-    val md = java.security.MessageDigest.getInstance("MD5")
     // "v3": r16 switched the coarse fit to rank init + size-derived lists —
     // version retires v2 maxmin-fit dirs by never touching them
-    val key = md.digest(s"$dir|$IvfDims|$IvfIters|$lists|v3".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_ivf_idx_$key").getAbsolutePath
-    if (ensureMemo.contains(idx)) return idx
-    val p = new org.apache.hadoop.fs.Path(s"$idx/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Try-wrapped: a run killed mid-meta-write leaves meta/ with only
-    // _temporary, and the read throws forever — treat any read failure
-    // as stale so the index rebuilds instead of wedging.
-    val fresh = fs.exists(p) && scala.util.Try {
-      val meta = spark.read.parquet(s"$idx/meta")
-      meta.columns.contains("content_digest") && {
-        val m = meta.head
-        val live = Tables.embeddings(spark, dir)
-        val fp = live.agg(count(lit(1)), max(col("vec_id"))).head
-        m.getAs[Long]("nvecs") == fp.getLong(0) &&
-          m.getAs[Long]("max_vec_id") ==
-            (if (fp.isNullAt(1)) -1L else fp.getLong(1)) &&
-          m.getAs[Long]("content_digest") == corpusDigest(live)
-      }
-    }.getOrElse(false)
-    if (!fresh) buildIvfIndex(spark, dir, idx, lists)
-    if (ensureMemo.size > MemoBound) ensureMemo.clear()
-    ensureMemo.add(idx)
-    idx
+    ensureVectorIndex(spark, "ivf", dir, s"$dir|$IvfDims|$IvfIters|$lists|v3")(
+      buildIvfIndex(spark, dir, _, lists))
   }
 
   /** Driver query: the persisted-index IVF path — oracle-identical to

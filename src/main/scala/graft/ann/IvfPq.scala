@@ -229,7 +229,7 @@ object IvfPq {
                                          indexDir: String, nLists: Int = 0,
                                          nCodes: Int = Pq.CodeBook,
                                          subSpaces: Int = Pq.SubSpaces): Unit = {
-    appendArtifactMemo.remove(indexDir) // a rebuild replaces the artifacts
+    graft.Memo.invalidate("ivfpq.artifacts", indexDir) // a rebuild replaces the artifacts
     import spark.implicits._
     val emb = emb0.select(col("vec_id"), col("embedding"))
     val xs = (0 until Ann.IvfDims).map(i => s"x$i")
@@ -364,44 +364,14 @@ object IvfPq {
       subSpaces, rerank, k)
   }
 
-  private val ensureMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Test hook: simulate a process restart for the once-per-JVM
-    * staleness check. */
-  private[graft] def resetEnsureMemo(): Unit = ensureMemo.clear()
-
-  /** Build-once glue keyed by (dir, geometry) under java.io.tmpdir — the
-    * ensurePqIndex recipe verbatim: meta carries the build-time corpus
-    * fingerprint; a mismatch or unreadable meta rebuilds instead of
-    * wedging. */
+  /** The persisted IVFADC index for `dir` ([[Ann.ensureVectorIndex]]). */
   private[graft] def ensureIvfPqIndex(spark: SparkSession, dir: String): String = {
     // size-derived coarse geometry resolved BEFORE keying (the
     // ensureIvfIndex recipe); "v2" retires v1 fixed-8 maxmin-fit dirs
     val lists = Ann.derivedLists(spark, dir)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = md.digest(
-      s"$dir|$lists|${Pq.SubSpaces}|${Pq.CodeBook}|${Pq.PqIters}|v2".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_ivfpq_idx_$key").getAbsolutePath
-    if (ensureMemo.contains(idx)) return idx
-    val p = new org.apache.hadoop.fs.Path(s"$idx/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = fs.exists(p) && scala.util.Try {
-      val m = spark.read.parquet(s"$idx/meta").head
-      val live = graft.Tables.embeddings(spark, dir)
-      val fp = live.agg(count(lit(1)), max(col("vec_id"))).head
-      m.getAs[Long]("nvecs") == fp.getLong(0) &&
-        m.getAs[Long]("max_vec_id") ==
-          (if (fp.isNullAt(1)) -1L else fp.getLong(1)) &&
-        m.getAs[Long]("content_digest") == Ann.corpusDigest(live)
-    }.getOrElse(false)
-    if (!fresh) buildIvfPqIndex(spark, dir, idx, lists)
-    if (ensureMemo.size > 64) ensureMemo.clear()
-    ensureMemo.add(idx)
-    idx
+    Ann.ensureVectorIndex(spark, "ivfpq", dir,
+      s"$dir|$lists|${Pq.SubSpaces}|${Pq.CodeBook}|${Pq.PqIters}|v2")(
+      buildIvfPqIndex(spark, dir, _, lists))
   }
 
   /** Driver query: the persisted-index IVFADC path — oracle-identical to
@@ -428,10 +398,7 @@ object IvfPq {
     * the old coarse centers/codebook and committing corrupt codes into
     * the new index's durable appends/. Cost per batch: one 1-row meta
     * read — the part worth memoizing is the k-row collects, not the
-    * staleness probe. Bounded: flush-at-64. */
-  private val appendArtifactMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, (Int, Int, Array[Array[Double]], Array[Array[Long]], Array[Array[Double]]))]()
-
+    * staleness probe. */
   private def appendArtifacts(spark: SparkSession, indexDir: String)
       : (Int, Int, Array[Array[Double]], Array[Array[Long]], Array[Array[Double]]) = {
     // the build nonce: meta is written LAST by the builder (the commit
@@ -440,15 +407,18 @@ object IvfPq {
     // stamped with
     val nonce = spark.read.parquet(s"$indexDir/meta")
       .head.getAs[Long]("content_digest")
-    val hit = appendArtifactMemo.get(indexDir)
-    if (hit != null && hit._1 == nonce) return hit._2
-    val (nLists, _, subSpaces, subDim, nCodes, _) = readValidatedMeta(spark, indexDir)
-    val coarse = loadCoarse(spark, indexDir, nLists)
-    val pcenters = loadCodebook(spark, indexDir, nCodes, subDim)
-    val art = (subSpaces, subDim, coarse, floorCentroids(coarse), pcenters)
-    if (appendArtifactMemo.size > 64) appendArtifactMemo.clear()
-    appendArtifactMemo.put(indexDir, (nonce, art))
-    art
+    def load() = {
+      val (nLists, _, subSpaces, subDim, nCodes, _) = readValidatedMeta(spark, indexDir)
+      val coarse = loadCoarse(spark, indexDir, nLists)
+      val pcenters = loadCodebook(spark, indexDir, nCodes, subDim)
+      (nonce, (subSpaces, subDim, coarse, floorCentroids(coarse), pcenters))
+    }
+    val (stamp, art) = graft.Memo.get("ivfpq.artifacts", indexDir)(load())
+    if (stamp == nonce) art
+    else {
+      graft.Memo.invalidate("ivfpq.artifacts", indexDir)
+      graft.Memo.get("ivfpq.artifacts", indexDir)(load())._2
+    }
   }
 
   def appendToIvfPqIndex(spark: SparkSession, indexDir: String,

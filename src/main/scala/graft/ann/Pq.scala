@@ -276,41 +276,10 @@ object Pq {
     pqScore(emb, codes, qarr, subSpaces, rerank, k)
   }
 
-  private val ensureMemo =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Test hook: simulate a process restart for the once-per-JVM
-    * staleness check (the Ann.resetEnsureMemo recipe). */
-  private[graft] def resetEnsureMemo(): Unit = ensureMemo.clear()
-
-  /** Build-once glue keyed by (dir, geometry) under java.io.tmpdir — the
-    * ensureIvfIndex recipe verbatim: meta carries the build-time corpus
-    * fingerprint (count + max vec_id); a mismatch or unreadable meta
-    * rebuilds instead of wedging. */
-  private[graft] def ensurePqIndex(spark: SparkSession, dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = md.digest(s"$dir|$SubSpaces|$CodeBook|$PqIters|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_pq_idx_$key").getAbsolutePath
-    if (ensureMemo.contains(idx)) return idx
-    val p = new org.apache.hadoop.fs.Path(s"$idx/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = fs.exists(p) && scala.util.Try {
-      val m = spark.read.parquet(s"$idx/meta").head
-      val live = graft.Tables.embeddings(spark, dir)
-      val fp = live.agg(count(lit(1)), max(col("vec_id"))).head
-      m.getAs[Long]("nvecs") == fp.getLong(0) &&
-        m.getAs[Long]("max_vec_id") ==
-          (if (fp.isNullAt(1)) -1L else fp.getLong(1)) &&
-        m.getAs[Long]("content_digest") == Ann.corpusDigest(live)
-    }.getOrElse(false)
-    if (!fresh) buildPqIndex(spark, dir, idx)
-    if (ensureMemo.size > 64) ensureMemo.clear()
-    ensureMemo.add(idx)
-    idx
-  }
+  /** The persisted PQ index for `dir` ([[Ann.ensureVectorIndex]]). */
+  private[graft] def ensurePqIndex(spark: SparkSession, dir: String): String =
+    Ann.ensureVectorIndex(spark, "pq", dir, s"$dir|$SubSpaces|$CodeBook|$PqIters|v1")(
+      buildPqIndex(spark, dir, _))
 
   /** Driver query: the persisted-index PQ path — oracle-identical to
     * ann_pq (same codes, same codebook, precomputed). */

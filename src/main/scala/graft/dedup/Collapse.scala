@@ -18,26 +18,16 @@ object Collapse {
 
   /** Ratio rows/distinct-identities (approximate — the decision it feeds only
     * picks between two pipelines with IDENTICAL outputs, so HLL error is
-    * harmless). One cheap aggregate scan, LRU-cached per (plan, identity)
+    * harmless). One cheap aggregate scan, memoized per (plan, identity)
     * digest (the Ann.cachedCount pattern): every near-dup query re-probes
-    * the same corpus, and a cached factor can only flip the adaptive choice
+    * the same corpus, and a reused factor can only flip the adaptive choice
     * between two output-identical pipelines. */
-  private val factorCache =
-    new java.util.LinkedHashMap[String, java.lang.Double](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Double]): Boolean = size() > 64
+  def duplicationFactor(df: DataFrame, identity: Column): Double =
+    graft.Memo.get("collapse.factor", graft.PlanKey.digest(df.select(identity.as("__id")))) {
+      val r = df.agg(count(lit(1)).as("n"), approx_count_distinct(identity).as("d")).head()
+      val (n, d) = (r.getLong(0), r.getLong(1))
+      if (d == 0) 1.0 else n.toDouble / d.toDouble
     }
-
-  def duplicationFactor(df: DataFrame, identity: Column): Double = {
-    val key = graft.PlanKey.digest(df.select(identity.as("__id")))
-    val hit = factorCache.synchronized(factorCache.get(key))
-    if (hit != null) return hit.doubleValue()
-    val r = df.agg(count(lit(1)).as("n"), approx_count_distinct(identity).as("d")).head()
-    val (n, d) = (r.getLong(0), r.getLong(1))
-    val f = if (d == 0) 1.0 else n.toDouble / d.toDouble
-    factorCache.synchronized(factorCache.put(key, f))
-    f
-  }
 
   /** Collapse only pays when copies are plural enough to beat its extra
     * hash-groupBy + expansion joins; below this the direct pipeline wins. */

@@ -52,31 +52,15 @@ object DetKMeans {
     graft.functions.KMeansAssign.of(
       array(zCols: _*), typedLit(centers.map(_.toSeq).toSeq))
 
-  /** Model cache: (input-plan digest, feature config) → fitted [[Model]].
-    * A clustering model is fit ONCE and scored by many queries — refitting
-    * per call would charge index/model-build cost to every lookup (the Ann
-    * IVF-cache rationale, generalized to every DetKMeans consumer: the
-    * anomaly detector's ensemble view re-scores the same fit, segmentation
-    * dashboards re-read the same clusters). Safe because the fit is fully
-    * deterministic — a cached and a fresh model are identical, so cached
-    * scoring is oracle-indistinguishable from refitting. Bounded: LRU over
-    * [[MaxModels]] entries of k×d doubles each. */
-  private[graft] val MaxModels = 16 // r15: 4 thrashed across a 171-query sweep
-  // (coarse IVF + PQ codebook + IVFADC pair + clustering suite = ~8 live
-  // fits); entries are k×d doubles (≤ 8 KB), so 16 is still trivial
-  private val models =
-    new java.util.LinkedHashMap[(String, String, Int, Int, Boolean, Boolean), Model](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Int, Boolean, Boolean), Model]): Boolean =
-        size() > MaxModels
-    }
-
-  private[graft] def cacheSize: Int = models.synchronized(models.size())
-
-  /** [[fit]] through the model cache: a hit skips straight to [[assign]]
-    * (one projection); a miss fits and stores. Lock covers only the map
-    * get/put — concurrent cold fits of the same key produce identical
-    * models (determinism), last put wins. */
+  /** [[fit]] through [[graft.Memo]], keyed by (input-plan digest, feature
+    * config): a clustering model is fit ONCE and scored by many queries —
+    * refitting per call would charge model-build cost to every lookup (the
+    * Ann IVF quantizer, the anomaly detector's ensemble view, segmentation
+    * dashboards re-reading the same clusters). Safe because the fit is
+    * fully deterministic — a cached and a fresh model are identical, so
+    * cached scoring is oracle-indistinguishable from refitting, and two
+    * concurrent cold fits of one key store the same model. Either way the
+    * frame is [[assign]]ed — the plan [[fit]] itself returns. */
   def fitCached(df: DataFrame, idCol: String, featCols: Seq[String],
                 k: Int, iters: Int, standardize: Boolean = true,
                 rankInit: Boolean = false): (DataFrame, Model) = {
@@ -86,13 +70,9 @@ object DetKMeans {
     // the clipped string and serve the wrong cached model.
     val key = (graft.PlanKey.digest(df),
       idCol + "|" + featCols.mkString(","), k, iters, standardize, rankInit)
-    val hit = models.synchronized(models.get(key))
-    if (hit != null) (assign(df, featCols, hit), hit)
-    else {
-      val (out, m) = fit(df, idCol, featCols, k, iters, standardize, rankInit)
-      models.synchronized(models.put(key, m))
-      (out, m)
-    }
+    val m = graft.Memo.get("kmeans.model", key)(
+      fit(df, idCol, featCols, k, iters, standardize, rankInit)._2)
+    (assign(df, featCols, m), m)
   }
 
   /** Re-derive z-columns + `cluster` for any frame with the model's feature

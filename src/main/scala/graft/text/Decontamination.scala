@@ -42,7 +42,7 @@ object Decontamination {
           .when(col("__bucket") < 90, "val")
           .otherwise("test"))
     // adaptive bits from the CACHED corpus count (Ann.cachedCount): sizing
-    // geometry is the only consumer, so the digest-LRU lookup replaces a
+    // geometry is the only consumer, so the memo lookup replaces a
     // full count job per call
     val b = if (bits > 0) bits else Ann.adaptiveBits(Ann.cachedCount(emb))
     val pl = Ann.planes(tables, b, 64, 42L)

@@ -136,9 +136,6 @@ object HybridSearch {
     * whole index with a single atomic rename (the StreamingNearDup
     * protocol); new documents append under `appends/batch=<id>/` via
     * [[appendToIndex]] without touching the settled corpus. */
-  private val geometryMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int, Long)]()
-
   /** Pinned on-disk schemas of the two data parts — shared by the builder,
     * the appender and the readers (the readers NEED them: a crashed
     * incremental fold can leave an empty committed batch dir). */
@@ -167,7 +164,7 @@ object HybridSearch {
   def buildIndexFrom(spark: SparkSession, docs: DataFrame, indexDir: String,
                      dim: Int = Embeddings.Dim, tables: Int = IndexTables,
                      seed: Long = IndexSeed): Unit = {
-    geometryMemo.remove(indexDir) // a rebuild may change adaptive bits
+    graft.Memo.invalidate("hybrid.geometry", indexDir) // a rebuild may change adaptive bits
     val fp = docs.agg(count(lit(1)).as("n"), max(col("doc_id")).as("m")).head
     val (nd, mx) = (fp.getLong(0), if (fp.isNullAt(1)) -1L else fp.getLong(1))
     val bits = graft.ann.Ann.adaptiveBits(nd)
@@ -199,9 +196,9 @@ object HybridSearch {
 
   /** Cheap corpus fingerprint for index-staleness checks: (row count,
     * max doc_id) off one doc_id-pruned scan. Not a content digest — a
-    * rewrite that preserves both values still aliases (same caveat as
-    * [[graft.PlanKey]]) — but it catches the realistic in-place-rewrite
-    * cases: rescaled or regrown data at the same path. */
+    * rewrite that preserves both values still aliases — but it catches the
+    * realistic in-place-rewrite cases: rescaled or regrown data at the same
+    * path. */
   private def corpusFingerprint(spark: SparkSession, dir: String): (Long, Long) = {
     val r = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("n"), max(col("doc_id")).as("m")).head
@@ -254,11 +251,10 @@ object HybridSearch {
     recoverCorpus(spark, indexDir)
     // geometry is fixed at build time (appends/compaction reuse it), so the
     // 1-row meta read is memoized per index dir; buildIndex invalidates.
-    if (geometryMemo.size > MemoBound) geometryMemo.clear()
-    val (tables, bits, dim, seed) = geometryMemo.computeIfAbsent(indexDir, { d =>
-      val meta = spark.read.parquet(s"$d/corpus/meta").head
+    val (tables, bits, dim, seed) = graft.Memo.get("hybrid.geometry", indexDir) {
+      val meta = spark.read.parquet(s"$indexDir/corpus/meta").head
       (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getLong(3))
-    })
+    }
     val committed = ExactlyOnce.committedBatches(spark, s"$indexDir/appends")
     def withAppends(part: String, base: DataFrame): DataFrame = {
       // append dirs are read with the PINNED append schema: a crashed
@@ -456,57 +452,31 @@ object HybridSearch {
 
   /** Build-once glue for the driver queries: index under java.io.tmpdir
     * keyed by (dir, geometry), built on first use (`meta` is the commit
-    * marker — a half-built index from a killed run rebuilds). The disk
-    * cache survives JVM restarts, so unlike the in-memory PlanKey caches a
-    * stale index could silently serve a corpus REGENERATED IN PLACE at the
-    * same path — meta therefore carries the build-time corpus fingerprint
-    * (count + max doc_id) and bits, and a mismatch with the live documents
-    * table (or a pre-fingerprint meta schema) forces a rebuild. A rewrite
-    * preserving count AND max doc_id still aliases — the PlanKey caveat,
-    * now documented at the durable layer too. */
-  /** Index dirs whose on-disk fingerprint this JVM already validated —
-    * the staleness check protects ACROSS JVM restarts; charging every
-    * query a corpus-count scan to re-prove it is the wrong trade. First
-    * use per JVM validates, later uses trust; an in-place corpus rewrite
-    * AFTER that first call aliases until [[resetEnsureMemo]] (the PlanKey
-    * caveat, stated at the durable layer too). */
-  /** Flush-at-bound (not LRU): entries are tiny, the bound exists only so
-    * thousands of distinct corpora can't accumulate; a flush re-validates
-    * on next touch, which is always safe. */
-  private val MemoBound = 256
-  private val ensureMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def resetEnsureMemo(): Unit = {
-    ensureMemo.clear(); geometryMemo.clear()
-  }
-
-  private[graft] def ensureIndex(spark: SparkSession, dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = md.digest(s"$dir|${Embeddings.Dim}|$IndexTables|$IndexSeed".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_hybrid_idx_$key").getAbsolutePath
-    if (ensureMemo.contains(idx)) return idx
-    recoverCorpus(spark, idx)
-    val p = new org.apache.hadoop.fs.Path(s"$idx/corpus/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Try-wrapped: a run killed mid-meta-write leaves meta/ with only
-    // _temporary, and the read throws forever — treat any read failure
-    // as stale so the index rebuilds instead of wedging.
-    val fresh = fs.exists(p) && scala.util.Try {
-      val meta = spark.read.parquet(s"$idx/corpus/meta")
-      meta.columns.contains("ndocs") && {
-        val m = meta.head
-        val (nd, mx) = corpusFingerprint(spark, dir)
-        m.getAs[Long]("ndocs") == nd && m.getAs[Long]("max_doc_id") == mx &&
-          m.getAs[Int]("bits") == graft.ann.Ann.adaptiveBits(nd)
-      }
-    }.getOrElse(false)
-    if (!fresh) buildIndex(spark, dir, idx)
-    if (ensureMemo.size > MemoBound) ensureMemo.clear()
-    ensureMemo.add(idx)
-    idx
-  }
+    * marker — a half-built index from a killed run rebuilds) and validated
+    * once per JVM ([[graft.ann.Ann.persistedIndex]]). The disk cache
+    * survives JVM restarts, so a stale index could silently serve a corpus
+    * REGENERATED IN PLACE at the same path — meta therefore carries the
+    * build-time corpus fingerprint (count + max doc_id) and bits, and a
+    * mismatch with the live documents table (or a pre-fingerprint or
+    * unreadable meta) forces a rebuild. A rewrite preserving count AND max
+    * doc_id still aliases: this fingerprint is not a content digest. */
+  private[graft] def ensureIndex(spark: SparkSession, dir: String): String =
+    graft.ann.Ann.persistedIndex("hybrid",
+        s"$dir|${Embeddings.Dim}|$IndexTables|$IndexSeed") { idx =>
+      recoverCorpus(spark, idx)
+      val p = new org.apache.hadoop.fs.Path(s"$idx/corpus/meta")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fresh = fs.exists(p) && scala.util.Try {
+        val meta = spark.read.parquet(s"$idx/corpus/meta")
+        meta.columns.contains("ndocs") && {
+          val m = meta.head
+          val (nd, mx) = corpusFingerprint(spark, dir)
+          m.getAs[Long]("ndocs") == nd && m.getAs[Long]("max_doc_id") == mx &&
+            m.getAs[Int]("bits") == graft.ann.Ann.adaptiveBits(nd)
+        }
+      }.getOrElse(false)
+      if (!fresh) buildIndex(spark, dir, idx)
+    }
 
   /** Driver query: the persisted-vector path — oracle-identical to
     * hybrid_search (same scores, precomputed). */
@@ -528,15 +498,10 @@ object HybridSearch {
     * per (dir, threshold) because the flat/indexed answers are
     * bit-identical anyway — a stale route is a cost decision, never a
     * correctness one. */
-  private val routeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Boolean]()
-  private[graft] def resetRouteMemo(): Unit = routeMemo.clear()
   private[graft] def autoRoute(spark: SparkSession, dir: String,
-                               threshold: Long = AutoIndexThreshold): Boolean = {
-    if (routeMemo.size > MemoBound) routeMemo.clear()
-    routeMemo.computeIfAbsent((dir, threshold),
-      _ => corpusFingerprint(spark, dir)._1 >= threshold)
-  }
+                               threshold: Long = AutoIndexThreshold): Boolean =
+    graft.Memo.get("hybrid.route", (dir, threshold))(
+      corpusFingerprint(spark, dir)._1 >= threshold)
 
   /** Size-adaptive hybrid search: the flat one-pass form on small corpora,
     * the persisted index (built on first use, fingerprint-validated) at or

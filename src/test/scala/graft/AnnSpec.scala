@@ -294,16 +294,22 @@ class AnnSpec extends AnyFunSuite {
   test("IVF model cache is bounded — many distinct corpora don't accumulate") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
-    // MaxModels + 2 distinct tiny corpora (distinct plans via distinct
-    // literal data) so the LRU eviction branch genuinely fires
-    (0 until graft.ml.DetKMeans.MaxModels + 2).foreach { c =>
+    // fill the shared memo to its bound first, so every IVF fit below
+    // genuinely evicts; 18 distinct tiny corpora (distinct plans via
+    // distinct literal data) then each add a model entry
+    Memo.resetAll()
+    (0 until Memo.Bound).foreach(i => Memo.get("spec.filler", i)(i))
+    (0 until 18).foreach { c =>
       val corpus = (0 until 24).map(i =>
         (i.toLong, Array.fill(8)(rnd.nextFloat() + c))).toDF("vec_id", "embedding")
       val q = corpus.filter(col("vec_id") === 0L)
       Ann.ivfTopK(corpus, q, k = 3, nLists = 2, nProbe = 1).count()
     }
-    assert(Ann.ivfCacheSize <= graft.ml.DetKMeans.MaxModels,
-      s"IVF cache grew to ${Ann.ivfCacheSize} entries (bound ${graft.ml.DetKMeans.MaxModels}) — eviction not working")
+    val live = Memo.census
+    assert(live.values.sum == Memo.Bound,
+      s"memo grew to ${live.values.sum} entries (bound ${Memo.Bound}) — eviction not working: $live")
+    assert(live.getOrElse("kmeans.model", 0) == 18, s"IVF fits not memoized: $live")
+    assert(live("spec.filler") < Memo.Bound, s"no filler entry was evicted: $live")
   }
 
   test("persisted IVF index: warm path is bit-identical to the fit path") {
@@ -325,9 +331,9 @@ class AnnSpec extends AnyFunSuite {
     Seq((8, Ann.IvfDims, Ann.IvfIters, -999L, -999L))
       .toDF("n_lists", "dims", "iters", "nvecs", "max_vec_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    // the staleness check runs once per JVM (ensureMemo); a rewrite is
+    // the staleness check runs once per JVM (Memo); a rewrite is
     // only detectable from a fresh process — simulate that restart
-    Ann.resetEnsureMemo()
+    Memo.resetAll()
     val idx2 = Ann.ensureIvfIndex(spark, dir)
     assert(idx2 == idx)
     val m = spark.read.parquet(s"$idx2/meta").head

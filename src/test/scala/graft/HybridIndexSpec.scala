@@ -28,7 +28,7 @@ class HybridIndexSpec extends AnyFunSuite {
   }
 
   test("size-adaptive dispatch: route pinned on both sides of the threshold, answers bit-identical") {
-    HybridSearch.resetRouteMemo()
+    Memo.resetAll()
     val n = Tables.documents(spark, dir).count()
     // the gate corpus sits below the default threshold → flat route
     assert(!HybridSearch.autoRoute(spark, dir),

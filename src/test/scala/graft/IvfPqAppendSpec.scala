@@ -75,11 +75,11 @@ class IvfPqAppendSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val d1 = java.nio.file.Files.createTempDirectory("ivfpq_reuse1").toString
     IvfPq.buildIvfPqIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), d1)
-    val before = graft.ml.DetKMeans.cacheSize
+    def models = Memo.census.getOrElse("kmeans.model", 0)
+    val before = models
     val d2 = java.nio.file.Files.createTempDirectory("ivfpq_reuse2").toString
     IvfPq.buildIvfPqIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), d2)
-    assert(graft.ml.DetKMeans.cacheSize == before,
-      s"second settled build refit: cache grew $before -> ${graft.ml.DetKMeans.cacheSize}")
+    assert(models == before, s"second settled build refit: cache grew $before -> $models")
     // and the artifacts are bit-identical (cached model == fresh model)
     val c1 = spark.read.parquet(s"$d1/codes").orderBy("vec_id").collect().map(_.toString)
     val c2 = spark.read.parquet(s"$d2/codes").orderBy("vec_id").collect().map(_.toString)

@@ -73,7 +73,7 @@ class IvfPqSpec extends AnyFunSuite {
       .toDF("n_lists", "sub_spaces", "sub_dim", "n_codes", "iters",
         "nvecs", "max_vec_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    IvfPq.resetEnsureMemo()
+    Memo.resetAll()
     val idx2 = IvfPq.ensureIvfPqIndex(spark, dir)
     assert(idx2 == idx)
     assert(spark.read.parquet(s"$idx2/meta").head.getAs[Long]("nvecs") > 0L,

@@ -55,9 +55,9 @@ class PqSpec extends AnyFunSuite {
     Seq((Pq.SubSpaces, Pq.SubDim, Pq.CodeBook, Pq.PqIters, -999L, -999L))
       .toDF("sub_spaces", "sub_dim", "n_codes", "iters", "nvecs", "max_vec_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    // the staleness check runs once per JVM (ensureMemo); a rewrite is
+    // the staleness check runs once per JVM (Memo); a rewrite is
     // only detectable from a fresh process — simulate that restart
-    Pq.resetEnsureMemo()
+    Memo.resetAll()
     val idx2 = Pq.ensurePqIndex(spark, dir)
     assert(idx2 == idx)
     val m = spark.read.parquet(s"$idx2/meta").head
