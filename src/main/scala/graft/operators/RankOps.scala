@@ -1,29 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.PartitionPrefix
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
-/** Scalable global ranking / NTILE.
+/** Distributed global rank, grouped rank, NTILE and running sum — one
+  * mechanism. The reference scores RFM with `Window.orderBy(...)` and **no
+  * partition** (reference: src/etl/gold/spark_gold.py:114-116), which Spark
+  * collapses to a single-partition sort, the classic scale-killer.
   *
-  * The reference scores RFM with `Window.orderBy(...)` and **no partition**
-  * (reference: src/etl/gold/spark_gold.py:114-116) — Spark collapses that to a
-  * single-partition sort, the classic scale-killer. Here a global rank is
-  * computed with a range repartition on the sort key (a distributed sort),
-  * per-partition row numbers, and driver-side partition offsets — the only
-  * driver data is one row per partition (~#shuffle-partitions rows), so the
-  * same code runs at 100 TB.
+  * Every form is one prefix sum of a summand `v` (1 for ranks, the value
+  * for running sums) under `groupCols ++ sortCols` order: range-partition
+  * on that order (each group occupies consecutive partitions) and
+  * `localCheckpoint`; collect one row per (partition, group) — `count` and
+  * `sum(v)`, order-free, so that job sorts nothing — and fold them on the
+  * driver into each one's offset (the group's sum in earlier partitions)
+  * and total (its row count); then `sortWithinPartitions`, project the
+  * partition-local prefix ([[graft.functions.PartitionPrefix]]) and add the
+  * broadcast offset. The frame is never exchanged after the range shuffle.
   *
-  * `withGlobalNtile` then applies the exact SQL NTILE bucket formula, so the
-  * result matches `NTILE(k) OVER (ORDER BY …)` bit-for-bit — the sort keys
-  * must be a total order (callers append a unique tie-breaker).
+  * Why the checkpoint: the offsets are only valid for the exact boundaries
+  * the range sampler drew, and a cache-evicted recompute could draw others
+  * — silent rank corruption; a cut lineage fails loudly instead.
+  * Why the collect is eager: the result stands on its own, so a caller may
+  * unpersist the input right after construction (`Gold.rfmSegments`).
+  * Why it is bounded: the fold has ≤ #partitions + #groups rows (groups
+  * are contiguous) — tiny for the few-huge-groups shape these forms serve;
+  * past [[MaxBoundedFrame]] rows it fails loudly rather than broadcast a
+  * data-proportional table.
+  *
+  * Sort keys must be a total order (callers append a unique tie-breaker),
+  * so `withGlobalNtile`'s SQL bucket formula matches `NTILE(k) OVER (ORDER
+  * BY …)` bit-for-bit.
   */
 object RankOps {
 
   /** Ceiling for frames that ride an UNPARTITIONED window because they are
     * calendar/bucket-bounded (daily series, monthly rollups, KPI buckets):
     * ~550 years of days — far above any real calendar frame, far below any
-    * data-proportional one. */
+    * data-proportional one. Also bounds the prefix core's offset table. */
   val MaxBoundedFrame = 200000L
 
   /** Guard rail for unpartitioned-window expressions whose legality rests
@@ -42,187 +60,82 @@ object RankOps {
         "not calendar/bucket-bounded")))
       .otherwise(inner)
 
-  /** In-partition 1-based row number of a frame whose per-partition order
-    * was just pinned by `sortWithinPartitions`: the documented layout of
-    * `monotonically_increasing_id()` (partition id in the upper 31 bits, the
-    * CONSECUTIVE in-partition record number in the lower 33) makes the row
-    * number a pure projection — where the previous formulation's
-    * `row_number() OVER (PARTITION BY spark_partition_id())` re-EXCHANGED
-    * the whole frame on __pid (the checkpoint reports UnknownPartitioning,
-    * so the window could not see the rows were already exactly where it
-    * needed them) and re-sorted it (optimization r18, guide §2.4). The id
-    * is deterministic here because the per-partition sort is a total order
-    * over checkpointed (boundary-frozen) partitions: a retried task
-    * re-sorts identical rows into identical positions. */
-  private val MidIdxMask = (1L << 33) - 1
-  private def midRank(mid: Column): Column = (mid.bitwiseAND(MidIdxMask)) + 1
-  private def midPid(mid: Column): Column = shiftright(mid, 33).cast("int")
-
-  /** Adds `rankCol` = 1-based global row_number under `sortCols` ordering.
-    * Returns (df, totalCount).
-    *
-    * The range-shuffled frame is `localCheckpoint`ed, not merely cached:
-    * the offsets collected here are only valid for the exact partition
-    * boundaries the range sampler drew, and a cache-evicted recompute could
-    * draw different ones — silent rank corruption. Checkpointing cuts the
-    * lineage, so losing the blocks fails the job loudly instead. Blocks are
-    * freed by the ContextCleaner once the frame is unreferenced;
-    * Verify/Bench also clearCache between queries. */
-  def withGlobalRankCounted(df: DataFrame, rankCol: String, sortCols: Seq[Column],
-                            numPartitions: Int = 0): (DataFrame, Long) = {
+  /** The one core (see above): adds `outCol` = the prefix sum of `summand`
+    * and, if set, `totalCol` = the group's row count. Returns the frame and
+    * its row count. */
+  private def prefixed(df: DataFrame, outCol: String, groupCols: Seq[String],
+                       sortCols: Seq[Column], summand: Column, numPartitions: Int,
+                       totalCol: Option[String] = None): (DataFrame, Long) = {
     val spark = df.sparkSession
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, sortCols: _*).localCheckpoint(false)
-    val counts = ranged
-      .groupBy(spark_partition_id().as("__pid")).agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    var acc = 0L
-    val offsets = counts.map { case (pid, c) => val row = (pid, acc); acc += c; row }
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__offset"))
-    val ranked = ranged
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", midPid(col("__mid")))
-      .join(offDf, "__pid")
-      .withColumn(rankCol, (midRank(col("__mid")) + col("__offset")).cast("long"))
-      .drop("__pid", "__mid", "__offset")
-    (ranked, total)
+    val keys = groupCols.map(col)
+    val order = keys ++ sortCols
+    val ranged = df.repartitionByRange(parts, order: _*).localCheckpoint(false)
+    def withPrefix(f: DataFrame) = f
+      .withColumn("__pp", PartitionPrefix.of(summand, keys))
+      .withColumn("__pid", col("__pp.pid"))
+    val auxDf = withPrefix(ranged).groupBy(col("__pid") +: keys: _*)
+      .agg(count(lit(1)).as("__cnt"), coalesce(sum(summand.cast("long")), lit(0L)).as("__sum"))
+    val aux = auxDf.limit((MaxBoundedFrame + 1).toInt).collect()
+    if (aux.length > MaxBoundedFrame)
+      throw new IllegalStateException(s"bounded-frame guard 'rank_offsets': more " +
+        s"than $MaxBoundedFrame (partition, group) offset rows — too many groups " +
+        "to broadcast; numerous small groups want Window.partitionBy(group)")
+    val nk = keys.size
+    val offsets = aux.groupBy(_.toSeq.slice(1, nk + 1)).values.flatMap { rows =>
+      val total = rows.map(_.getLong(nk + 1)).sum
+      var acc = 0L
+      rows.sortBy(_.getInt(0)).map { r =>
+        val row = Row.fromSeq(r.toSeq.take(nk + 1) ++ Seq(acc, total))
+        acc = Math.addExact(acc, r.getLong(nk + 2))
+        row
+      }
+    }
+    val auxKeys = (0 to nk).map(i => s"__k$i")
+    val offSchema = StructType(auxDf.schema.take(nk + 1).zip(auxKeys)
+      .map { case (f, n) => f.copy(name = n) } ++
+      Seq(StructField("__off", LongType, false), StructField("__tot", LongType, false)))
+    val offDf = broadcast(spark.createDataFrame(offsets.toSeq.asJava, offSchema))
+    val on = ((col("__pid") === col("__k0")) +:
+      keys.zip(auxKeys.tail).map { case (k, a) => k <=> col(a) }).reduce(_ && _)
+    val joined = withPrefix(ranged.sortWithinPartitions(order: _*))
+      .join(offDf, on)
+      .withColumn(outCol, col("__pp.p") + col("__off"))
+    val out = totalCol.fold(joined)(c => joined.withColumn(c, col("__tot")))
+    (out.drop("__pp" +: "__pid" +: "__off" +: "__tot" +: auxKeys: _*),
+      aux.map(_.getLong(nk + 1)).sum)
   }
+
+  /** Adds `rankCol` = 1-based global row_number under `sortCols` ordering.
+    * Returns (df, totalCount). */
+  def withGlobalRankCounted(df: DataFrame, rankCol: String, sortCols: Seq[Column],
+                            numPartitions: Int = 0): (DataFrame, Long) =
+    prefixed(df, rankCol, Nil, sortCols, lit(1L), numPartitions)
 
   def withGlobalRank(df: DataFrame, rankCol: String, sortCols: Seq[Column]): DataFrame =
     withGlobalRankCounted(df, rankCol, sortCols)._1
 
   /** Adds `cumCol` = exact `SUM(valueCol) OVER (ORDER BY sortCols ROWS
-    * UNBOUNDED PRECEDING)` (long) — the distributed twin of the global-rank
-    * trick: range repartition on the sort key, per-partition running sums,
-    * and ≤ #partitions driver-side sum offsets. `valueCol` must be integral
-    * (long addition is associative — partial sums cannot drift). */
+    * UNBOUNDED PRECEDING)` (long). `valueCol` must be integral and
+    * non-null. */
   def withGlobalCumSum(df: DataFrame, cumCol: String, valueCol: Column,
-                       sortCols: Seq[Column], numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // localCheckpoint for the same reason as withGlobalRankCounted: the
-    // offsets are only valid for the exact range boundaries drawn here
-    val ranged = df.withColumn("__v", valueCol.cast("long"))
-      .repartitionByRange(parts, sortCols: _*).localCheckpoint(false)
-    val sums = ranged
-      .groupBy(spark_partition_id().as("__pid")).agg(sum(col("__v")).as("__s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = sums.map { case (pid, s) => val row = (pid, acc); acc += s; row }
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__coff"))
-    val w = Window.partitionBy(col("__pid")).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__crn", sum(col("__v")).over(w))
-      .join(offDf, "__pid")
-      .withColumn(cumCol, (col("__crn") + col("__coff")).cast("long"))
-      .drop("__pid", "__crn", "__coff", "__v")
-  }
+                       sortCols: Seq[Column], numPartitions: Int = 0): DataFrame =
+    prefixed(df, cumCol, Nil, sortCols, valueCol, numPartitions)._1
 
   /** Adds `rankCol` = 1-based `row_number() OVER (PARTITION BY groupCols
     * ORDER BY sortCols)` (long) without ever sorting a whole group in one
-    * task.
-    *
-    * Why: a bare `Window.partitionBy(group)` yields exactly #groups tasks —
+    * task: a bare `Window.partitionBy(group)` yields exactly #groups tasks,
     * a parallelism ceiling when groups are few and huge (25 countries over
-    * 20M+ ranked parts at 100 TB means 25 tasks sorting ~1M rows each).
-    * Here the frame is range-partitioned on (groupCols ++ sortCols) — a
-    * distributed sort in which each group's rows occupy CONSECUTIVE
-    * partitions — so a per-(partition, group) row number plus the count of
-    * rows the same group placed in earlier partitions is exactly the
-    * per-group rank. The per-(partition, group) start offsets come from a
-    * running-sum window over the tiny per-(pid, group) count frame
-    * (≤ #partitions + #groups rows — contiguous groups), broadcast back.
-    * No driver collect anywhere, and the ranked frame itself is never
-    * exchanged after the range shuffle.
-    *
-    * `countCol`, if set, also adds the per-group total row count.
-    *
-    * The auxiliary broadcast carries one row per (partition, group) PRESENT
-    * — for range-contiguous groups that is ≤ #groups + #partitions rows.
-    * Group cardinality therefore enters the broadcast, which is fine in
-    * this primitive's whole domain: it exists for FEW huge groups (the
-    * parallelism-ceiling case — 25 countries over 20M+ ranked parts); when
-    * groups are numerous-and-small a plain `Window.partitionBy(group)`
-    * already parallelizes and is the right tool instead.
-    *
-    * The range-shuffled frame is localCheckpoint'ed for the same reason as
-    * [[withGlobalRankCounted]]: the per-partition counts are only valid for
-    * the exact boundaries the range sampler drew. `sortCols` must
-    * total-order rows within a group (callers append a unique tie-breaker).
-    * Group columns are compared null-safely (`<=>`), so null groups rank
-    * like any other group. */
+    * 20M+ ranked parts at 100 TB). `countCol`, if set, also adds the
+    * per-group row count. Group columns compare null-safely, so null groups
+    * rank like any other group. */
   def withGroupedRank(df: DataFrame, rankCol: String, groupCols: Seq[String],
                       sortCols: Seq[Column], numPartitions: Int = 0,
                       countCol: Option[String] = None): DataFrame = {
     require(groupCols.nonEmpty, "withGroupedRank needs at least one group column")
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val gCols = groupCols.map(col)
-    val ranged = df.repartitionByRange(parts, gCols ++ sortCols: _*).localCheckpoint(false)
-    // per-partition total order: groups are contiguous under the gCols
-    // prefix, sortCols total-order rows within a group — so the
-    // monotonically_increasing_id projection IS the in-partition row
-    // number under (group, sort) order, with no exchange and no window
-    // over the full frame (see midRank; this removed the plan's
-    // Exchange hashpartitioning(__pid, group) + Sort of the whole frame)
-    val sorted = ranged.sortWithinPartitions(gCols ++ sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", midPid(col("__mid")))
-    // one row per (partition, group) present — ≤ #partitions + #groups rows
-    // (contiguous groups). min(__mid) is the group's first in-partition id:
-    // order-free aggregate of a value pinned by the deterministic sort, so
-    // this pass and the output projection see identical ids.
-    val counts = sorted.groupBy(col("__pid") +: gCols: _*)
-      .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__gmin"))
-    // rows this group placed in EARLIER partitions; > 0 only at boundary
-    // spans
-    val wOff = Window.partitionBy(gCols: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offCond = ((col("__pid") === col("__opid")) +:
-      groupCols.map(c => col(c) <=> col(s"__og_$c"))).reduce(_ && _)
-    val internal = "__pid" :: "__mid" :: "__opid" :: "__gmin" :: "__goff" ::
-      groupCols.map(c => s"__og_$c").toList
-    val aux0 = counts
-      .withColumn("__goff", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-    val auxCols = (col("__pid").as("__opid") +:
-      groupCols.map(c => col(c).as(s"__og_$c"))) ++
-      Seq(col("__gmin"), col("__goff"))
-    countCol match {
-      case None =>
-        val aux = aux0.select(auxCols: _*)
-        sorted
-          .join(broadcast(aux), offCond, "inner") // every (pid, group) is in counts
-          .withColumn(rankCol,
-            (col("__mid") - col("__gmin") + 1 + col("__goff")).cast("long"))
-          .drop(internal: _*)
-      case Some(cc) =>
-        // ship the per-group total in the SAME broadcast — one join;
-        // same partition+order as wOff (only the frame differs) so both
-        // sums share one Window sort of the tiny counts frame
-        val wTot = Window.partitionBy(gCols: _*).orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val aux = aux0
-          .withColumn("__gtot", sum(col("__cnt")).over(wTot).cast("long"))
-          .select(auxCols :+ col("__gtot"): _*)
-        sorted
-          .join(broadcast(aux), offCond, "inner")
-          .withColumn(rankCol,
-            (col("__mid") - col("__gmin") + 1 + col("__goff")).cast("long"))
-          .withColumn(cc, col("__gtot"))
-          .drop("__gtot" :: internal: _*)
-    }
+    prefixed(df, rankCol, groupCols, sortCols, lit(1L), numPartitions, countCol)._1
   }
 
   /** Adds `ntileCol` = exact `NTILE(k) OVER (ORDER BY sortCols)` (long). */

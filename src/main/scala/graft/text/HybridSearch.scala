@@ -394,11 +394,14 @@ object HybridSearch {
     * complete row set on read (each file lives on exactly one side of the
     * move — renames, never copies) and the next fold finishes it; a
     * fully-moved-but-undeleted dir reads as empty (readers pin the
-    * append schema) and the next fold deletes it; the pre-r18 whole-swap
-    * window and the stale-copied-dir window are covered by the reader's
-    * dedupe plus the idempotent move. Returns the number of batch dirs
-    * folded (completing a crashed fold's delete counts — the dir was
-    * still bounding the union width). */
+    * append schema) and the next fold deletes it; a stale copy of a
+    * folded dir finds its destinations and is dropped by the idempotent
+    * move. A committed dir at or below the previous watermark with nothing
+    * under corpus' `b<id>_` names gets one doc_id anti-join against corpus:
+    * none of its rows there (a crash between stamp and move) moves it; all
+    * there (a pre-r18 whole-corpus fold's remnant) deletes it; a mix fails.
+    * Returns the number of batch dirs folded (completing a crashed fold's
+    * delete counts — the dir was still bounding the union width). */
   def compactIndex(spark: SparkSession, indexDir: String): Int = {
     import org.apache.hadoop.fs.Path
     recoverCorpus(spark, indexDir)
@@ -425,21 +428,35 @@ object HybridSearch {
           s"$indexDir; recoverCorpus completes it on the next index entry")
     }
     // 2.+3. move data files (idempotent), then delete the batch dir
+    def dataFiles(dir: Path) =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.filter { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
     committed.foreach { d =>
       val id = batchId(d)
-      Seq("vecs", "buckets").foreach { part =>
-        val src = new Path(s"$d/$part")
-        if (fs.exists(src)) fs.listStatus(src).foreach { st =>
+      // nothing moved at or below the old watermark: a legacy remnant?
+      val remnant = id <= prevWm && dataFiles(new Path(s"$d/vecs")).nonEmpty &&
+        Option(fs.globStatus(new Path(s"$indexDir/corpus/*/b${id}_*"))).forall(_.isEmpty) && {
+          val vecs = spark.read.parquet(s"$d/vecs").select("doc_id")
+          val absent = vecs.join(spark.read.parquet(s"$indexDir/corpus/vecs").select("doc_id"),
+            Seq("doc_id"), "left_anti").count()
+          require(absent == 0 || absent == vecs.count(),
+            s"compactIndex: $absent of batch dir $d's doc_ids are absent from corpus " +
+              "and the rest present; refusing to fold a partial legacy remnant")
+          absent == 0
+        }
+      if (!remnant) Seq("vecs", "buckets").foreach { part =>
+        dataFiles(new Path(s"$d/$part")).foreach { st =>
           val name = st.getPath.getName
-          if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-            val dst = new Path(s"$indexDir/corpus/$part/b${id}_$name")
-            if (fs.exists(dst) || !fs.rename(st.getPath, dst)) {
-              require(fs.exists(dst),
-                s"compactIndex: rename $name -> $dst failed under $indexDir " +
-                  "and the destination is absent; aborting before the " +
-                  "batch-dir delete so no committed data is lost")
-              fs.delete(st.getPath, false)
-            }
+          val dst = new Path(s"$indexDir/corpus/$part/b${id}_$name")
+          if (fs.exists(dst) || !fs.rename(st.getPath, dst)) {
+            require(fs.exists(dst),
+              s"compactIndex: rename $name -> $dst failed under $indexDir " +
+                "and the destination is absent; aborting before the " +
+                "batch-dir delete so no committed data is lost")
+            fs.delete(st.getPath, false)
           }
         }
       }

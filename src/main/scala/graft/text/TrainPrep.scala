@@ -282,8 +282,9 @@ object TrainPrep {
     * many are cut at block boundaries, how full the final block is.
     *
     * Scale shape: the token-offset prefix sum is RankOps.withGlobalCumSum
-    * (range repartition + ≤ #partitions driver offsets — a distributed
-    * prefix sum, not a single-partition window); each doc then explodes
+    * (range repartition, a partition-local running sum plus ≤ #partitions
+    * broadcast offsets — no window and no re-exchange of the frame after
+    * the range shuffle); each doc then explodes
     * into only the blocks it overlaps (≤ tokens/budget + 1 rows), and one
     * grouped aggregate on block id builds the report. */
   def sequencePacking(spark: SparkSession, dir: String, budget: Int = 256): DataFrame = {

@@ -154,4 +154,46 @@ class HybridIndexSpec extends AnyFunSuite {
     val afterHeal = rows(HybridSearch.hybridSearchIndexed(spark, dir, idx, probe = true))
     assert(afterHeal === rows(HybridSearch.hybridSearchIndexed(spark, dir, rebuilt, probe = true)))
   }
+
+  test("crash window 3: a legacy remnant batch dir folds without duplicating doc_ids") {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
+    val docs = Tables.documents(spark, dir)
+    val baseDir = tmp("hybrid_legacy_base")
+    docs.filter(col("doc_id") % 5 =!= 0)
+      .write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
+    val idx = tmp("hybrid_legacy")
+    HybridSearch.buildIndex(spark, baseDir, idx)
+    val batch = docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
+    assert(HybridSearch.appendToIndex(spark, batch, idx, 0L))
+    val stash = tmp("hybrid_legacy_stash")
+    copyDir(s"$idx/appends/batch=0", s"$stash/batch=0")
+    assert(HybridSearch.compactIndex(spark, idx) === 1)
+    // the pre-r18 fold rewrote the whole corpus, so the batch's rows sit in
+    // corpus under other file names; a crash left its committed dir behind
+    for (part <- Seq("vecs", "buckets");
+         st <- fs.listStatus(new Path(s"$idx/corpus/$part"))
+         if st.getPath.getName.startsWith("b0_"))
+      assert(fs.rename(st.getPath,
+        new Path(st.getPath.getParent, "legacy" + st.getPath.getName.drop(2))))
+    copyDir(s"$stash/batch=0", s"$idx/appends/batch=0")
+    assert(HybridSearch.compactIndex(spark, idx) === 1)
+    val dups = spark.read.parquet(s"$idx/corpus/vecs")
+      .groupBy("doc_id").count().filter(col("count") > 1).count()
+    assert(dups === 0, "the legacy remnant was moved in as duplicate doc_ids")
+    val rebuilt = tmp("hybrid_legacy_rebuilt")
+    HybridSearch.buildIndex(spark, dir, rebuilt)
+    for (probe <- Seq(false, true))
+      assert(rows(HybridSearch.hybridSearchIndexed(spark, dir, idx, probe = probe)) ===
+        rows(HybridSearch.hybridSearchIndexed(spark, dir, rebuilt, probe = probe)),
+        s"probe=$probe: the healed index diverged from the rebuild")
+    // a remnant only partly in corpus is neither safe to move nor to drop
+    copyDir(s"$stash/batch=0", s"$idx/appends/batch=0")
+    spark.read.parquet(s"$stash/batch=0/vecs").limit(1)
+      .withColumn("doc_id", col("doc_id") + 1000000000L)
+      .write.mode("append").parquet(s"$idx/appends/batch=0/vecs")
+    val e = intercept[IllegalArgumentException](HybridSearch.compactIndex(spark, idx))
+    assert(e.getMessage.contains("partial legacy remnant"), e.getMessage)
+  }
 }

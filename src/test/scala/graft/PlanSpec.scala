@@ -126,20 +126,22 @@ class PlanSpec extends AnyFunSuite {
 
   test("no low-cardinality window sorts survive on the grouped-rank paths") {
     // product_analysis and rfm_segment_rollup rank WITHIN country/segment via
-    // RankOps.withGroupedRank. The guard: every window spec that partitions
-    // on the low-cardinality group column must also involve __pid — either
-    // partitioned by (__pid, group) (the per-partition rank window) or
-    // ordered by __pid over the bounded per-(pid, group) counts frame (the
-    // offsets window). A bare partitionBy(group) sort over the data frame
-    // (the 25-tasks-forever ceiling) mentions no __pid and fails here.
+    // RankOps.withGroupedRank: a partition-local prefix over the
+    // range-partitioned checkpoint plus a broadcast offset join — no window
+    // at all. The guard: the distributed rank ran, and any window spec that
+    // partitions on the low-cardinality group column also involves __pid. A
+    // bare partitionBy(group) sort over the data frame (the 25-tasks-forever
+    // ceiling) mentions no __pid and fails here.
     Seq(
       "country" -> Gold.productAnalysis(spark, dir),
       "customer_segment" -> graft.operators.Segments.rfmSegmentRollup(spark, dir)
     ).foreach { case (group, df) =>
       val plan = formatted(df)
+      assert(s"partition_prefix\\(1, [^)]*$group".r.findFirstIn(plan).isDefined,
+        s"expected the distributed grouped rank over $group")
+      assert(plan.contains("BroadcastHashJoin"), "the rank offsets must broadcast")
       val specs = s"windowspecdefinition\\([^)]*".r.findAllIn(plan).toList
         .filter(_.contains(group))
-      assert(specs.nonEmpty, s"expected grouped-rank windows mentioning $group")
       specs.foreach { spec =>
         assert(spec.contains("__pid"),
           s"low-cardinality window partitioned by bare $group: $spec")
@@ -239,6 +241,13 @@ class PlanSpec extends AnyFunSuite {
       val plan = formatted(df)
       assert(!plan.contains("Exchange"), "row-local corpus op shuffled")
     }
+  }
+
+  test("sequence packing's running sum never re-exchanges the frame on __pid") {
+    val plan = formatted(graft.text.TrainPrep.sequencePacking(spark, dir))
+    assert(!plan.contains("hashpartitioning(__pid"),
+      "the token-offset prefix sum re-exchanged the ranked frame on __pid")
+    spark.catalog.clearCache()
   }
 
   test("sequence packing never collapses to one partition") {
@@ -514,7 +523,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = formatted(graft.text.Perplexity.perplexityBuckets(spark, dir))
     assert(!plan.contains("CartesianProduct"),
       "tercile bucketing must join on keys, never a cartesian")
-    // r18: the rank is a partition-local sort + monotonic-id projection —
+    // the rank is a partition-local sort + prefix projection —
     // the ranked frame must NOT be re-exchanged on __pid (the pre-r18
     // mechanism) nor collapse to a global single-partition window
     assert(!plan.contains("hashpartitioning(__pid"),

@@ -96,6 +96,138 @@ class RankOpsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
+  test("every RankOps form equals its plain-Window reference (property)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // duplicate sort values (broken by the unique id), a null group, one
+    // group holding at least half the rows, summands with 0 and negatives
+    val caseGen = for {
+      n <- Gen.choose(0, 400)
+      parts <- Gen.choose(1, 8)
+      twoKeys <- Gen.oneOf(false, true)
+      k <- Gen.choose(1, 7)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val rows = (0 until n).map { i =>
+        val big = rnd.nextBoolean() || rnd.nextBoolean()
+        val g1 = if (big) Some("big") else Seq(None, Some("a"), Some("b"))(rnd.nextInt(3))
+        val g2 = if (big) Some(0) else Seq(None, Some(0), Some(1))(rnd.nextInt(3))
+        (i.toLong, rnd.nextInt(20), g1, g2, rnd.between(-5L, 6L))
+      }
+      (rows, parts, if (twoKeys) Seq("g1", "g2") else Seq("g1"), k)
+    }
+    val prop = Prop.forAllNoShrink(caseGen) { case (rows, parts, groups, k) =>
+      val df = rows.toDF("id", "s", "g1", "g2", "v")
+      val order = Seq(col("s").desc, col("id").asc)
+      val all = Window.orderBy(order: _*)
+      val inGroup = Window.partitionBy(groups.map(col): _*)
+      val ref = df.select(col("id"),
+          row_number().over(all).cast("long").as("rank"),
+          row_number().over(inGroup.orderBy(order: _*)).cast("long").as("grank"),
+          count(lit(1)).over(inGroup).as("gcount"),
+          ntile(k).over(all).cast("long").as("ntile"),
+          sum(col("v")).over(all.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .as("cum"))
+        .collect().map(r => r.getLong(0) -> (1 to 5).map(r.getLong)).toMap
+      def byId(out: org.apache.spark.sql.DataFrame, cols: String*) =
+        out.select(col("id") +: cols.map(col): _*).collect()
+          .map(r => r.getLong(0) -> cols.indices.map(i => r.getLong(i + 1))).toMap
+      val (ranked, total) = RankOps.withGlobalRankCounted(df, "rank", order, parts)
+      val got = Seq(
+        byId(ranked, "rank"),
+        byId(RankOps.withGroupedRank(df, "grank", groups, order, parts, Some("gcount")),
+          "grank", "gcount"),
+        byId(RankOps.withGlobalNtile(df, "ntile", k, order), "ntile"),
+        byId(RankOps.withGlobalCumSum(df, "cum", col("v"), order, parts), "cum"))
+      spark.catalog.clearCache()
+      val want = Seq(Seq(0), Seq(1, 2), Seq(3), Seq(4))
+        .map(ix => ref.view.mapValues(v => ix.map(v)).toMap)
+      total == rows.size && got == want
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("withGroupedRank fails loudly past the offset-table bound") {
+    val groups = spark.range(RankOps.MaxBoundedFrame + 1)
+      .select(col("id"), col("id").cast("string").as("g"))
+    val e = intercept[Exception] {
+      RankOps.withGroupedRank(groups, "r", Seq("g"), Seq(col("id"))).collect()
+    }
+    spark.catalog.clearCache()
+    assert(e.getMessage.contains("bounded-frame guard 'rank_offsets'"),
+      s"wrong failure: ${e.getMessage}")
+  }
+
+  test("each RankOps form launches no more Spark jobs than the per-form code did") {
+    import spark.implicits._
+    val group = "rankops-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def jobsOf(construct: => org.apache.spark.sql.DataFrame): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "rankops form")
+      try construct.write.format("noop").mode("overwrite").save()
+      finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      spark.catalog.clearCache()
+      jobs.get
+    }
+    val order = Seq(col("v").desc, col("id").asc)
+    val rnd = new scala.util.Random(11)
+    val grouped = (1 to 4013).map(i => (i.toLong, s"g${rnd.nextInt(5)}", rnd.nextInt(40)))
+      .toDF("id", "g", "v")
+    sc.addSparkListener(listener)
+    try {
+      val counts = Map(
+        "rank" -> jobsOf(RankOps.withGlobalRank(sampleDf(1237), "r", order)),
+        "ntile" -> jobsOf(RankOps.withGlobalNtile(sampleDf(1237), "nt", 5, order)),
+        "grouped" -> jobsOf(RankOps.withGroupedRank(grouped, "r", Seq("g"), order)),
+        "grouped_count" -> jobsOf(RankOps.withGroupedRank(grouped, "r", Seq("g"), order,
+          countCol = Some("n"))),
+        "cumsum" -> jobsOf(RankOps.withGlobalCumSum(sampleDf(1237), "c", col("v"), order)))
+      // the previous per-form implementations, on these frames: 6 jobs
+      // each, 7 for cumsum (its __pid window re-exchanged the frame)
+      val parent = Map("rank" -> 6, "ntile" -> 6, "grouped" -> 6, "grouped_count" -> 6,
+        "cumsum" -> 7)
+      assert(counts("rank") == parent("rank") && counts("ntile") == parent("ntile"),
+        s"global forms must keep their job counts: $counts vs $parent")
+      Seq("grouped", "grouped_count", "cumsum").foreach { f =>
+        assert(counts(f) <= parent(f), s"$f launched ${counts(f)} jobs, was ${parent(f)}")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("RankOps is one range-partitioned prefix core; no partition-id tricks remain") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"library sources not found under ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    def text(f: java.io.File) = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }
+    val banned = Seq("monotonically_increasing_id", "spark_partition_id",
+      "Window.partitionBy(col(\"__pid\")")
+    val offenders = for {
+      f <- files(root) if f.getName.endsWith(".scala")
+      b <- banned if text(f).contains(b)
+    } yield s"${f.getPath}: $b"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val rankOps = text(new java.io.File(root, "graft/operators/RankOps.scala"))
+    assert("repartitionByRange".r.findAllIn(rankOps).size == 1)
+  }
+
   test("boundedFrame passes values through within the bound") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
