@@ -87,45 +87,27 @@ object AdvancedFeatures {
   }
 
   /** Exact discrete median / p90 of order totals per country — order
-    * statistics selected by row_number over integer cents (same portability
-    * rationale as iqrOutliers; interpolated percentile bits differ across
-    * engines). */
-  def medianPrices(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.ordersWithCountry(spark, dir)
-      .select(col("o_orderkey"), col("country"), col("o_totalprice"))
-      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
-    val w = Window.partitionBy(col("country")).orderBy(col("cents"), col("o_orderkey"))
-    o.withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("country"))).cast("long"))
-      .groupBy(col("country"), col("n").as("orders"))
-      .agg(
-        min(when(col("rn") === expr("(n + 1) div 2"), col("cents"))).as("__med"),
-        min(when(col("rn") === ceil(col("n") * 0.9), col("cents"))).as("__p90"))
-      .withColumn("median_price", col("__med").cast("double") / 100.0)
-      .withColumn("p90_price", col("__p90").cast("double") / 100.0)
-      .drop("__med", "__p90")
-  }
+    * statistics of integer cents from the shared ranked pass
+    * ([[Quality.countryCentsStats]]; same portability rationale as
+    * iqrOutliers; interpolated percentile bits differ across engines). */
+  def medianPrices(spark: SparkSession, dir: String): DataFrame =
+    Quality.countryCentsStats(Quality.countryCents(spark, dir)).select(
+      col("s_country").as("country"), col("n").as("orders"),
+      (col("med_cents").cast("double") / 100.0).as("median_price"),
+      (col("p90_cents").cast("double") / 100.0).as("p90_price"))
 
   /** IQR outlier flags on order totals per country (reference:
     * advanced_features.py:273 uses np.percentile + 1.5·IQR). Quartiles are
-    * *discrete* order statistics selected by row_number over integer cents —
-    * exact and engine-portable, unlike interpolated percentiles whose
-    * last-ULP arithmetic differs across engines. */
+    * *discrete* order statistics of integer cents
+    * ([[Quality.countryCentsStats]]) — exact and engine-portable, unlike
+    * interpolated percentiles whose last-ULP arithmetic differs across
+    * engines. */
   def iqrOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.ordersWithCountry(spark, dir)
-      .select(col("o_orderkey"), col("country"), col("o_totalprice"))
-      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
-    val w = Window.partitionBy(col("country")).orderBy(col("cents"), col("o_orderkey"))
-    val ranked = o
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("country"))).cast("long"))
-    val quart = ranked.groupBy(col("country").as("q_country"))
-      .agg(
-        min(when(col("rn") === greatest(lit(1L), ceil(col("n") * 0.25)), col("cents"))).as("q1_cents"),
-        min(when(col("rn") === ceil(col("n") * 0.75), col("cents"))).as("q3_cents"))
+    val o = Quality.countryCents(spark, dir)
+    val quart = Quality.countryCentsStats(o)
       .withColumn("lower_cents", col("q1_cents").cast("double") - lit(1.5) * (col("q3_cents") - col("q1_cents")))
       .withColumn("upper_cents", col("q3_cents").cast("double") + lit(1.5) * (col("q3_cents") - col("q1_cents")))
-    o.join(broadcast(quart), o("country") === quart("q_country"))
+    o.join(broadcast(quart), col("country") === col("s_country"))
       .withColumn("q1_price", col("q1_cents").cast("double") / 100.0)
       .withColumn("q3_price", col("q3_cents").cast("double") / 100.0)
       .withColumn("lower_bound", col("lower_cents") / 100.0)

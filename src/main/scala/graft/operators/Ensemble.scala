@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.{Exact, Tables}
+import graft.Exact
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Ensemble anomaly detection (reference: src/ml/analytics/predictive_engine
@@ -15,18 +14,16 @@ import org.apache.spark.sql.functions._
   * exact detectors (z-score, IQR fence, MAD modified-z; recipes proven
   * portable in Quality.scala / AdvancedFeatures.scala).
   *
-  * Cost: the per-country stats are two ranked window passes + one moment
-  * aggregate, each 25-rows-out and broadcast back onto the fact — the same
-  * shapes as the standalone detectors, shared where possible (the cents
-  * ranking pass feeds median AND quartiles at once).
+  * Cost: the per-country stats are the standalone detectors' own passes —
+  * [[Quality.countryCentsStats]] (median and quartiles from one grouped
+  * rank), [[Quality.withCountryMad]] (the MAD's grouped rank) — plus one
+  * moment aggregate, each 25 rows out and broadcast back onto the fact.
   */
 object Ensemble {
   import Exact._
 
   def anomalyEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.ordersWithCountry(spark, dir)
-      .select(col("o_orderkey"), col("country"), col("o_totalprice"))
-      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
+    val o = Quality.countryCents(spark, dir)
 
     // moment stats (z-score): shifted-data variance in exact integer cents
     val agg1 = o.groupBy(col("country").as("a_country"))
@@ -45,32 +42,11 @@ object Ensemble {
         .otherwise(sqrt((ssdD - (tD * tD) / col("n")) / (col("n") - 1)) / lit(100.0))
         .as("std_price"))
 
-    // one ranked pass over cents feeds median AND both quartiles
-    val w1 = Window.partitionBy(col("country")).orderBy(col("cents"), col("o_orderkey"))
-    val wn = Window.partitionBy(col("country"))
-    val ranked = o
-      .withColumn("rn", row_number().over(w1).cast("long"))
-      .withColumn("n", count(lit(1)).over(wn).cast("long"))
-    val ordStats = ranked.groupBy(col("country").as("o_country"))
-      .agg(
-        min(when(col("rn") === expr("(n + 1) div 2"), col("cents"))).as("med_cents"),
-        min(when(col("rn") === greatest(lit(1L), ceil(col("n") * 0.25)), col("cents"))).as("q1_cents"),
-        min(when(col("rn") === ceil(col("n") * 0.75), col("cents"))).as("q3_cents"))
-
-    // second ranked pass for the MAD (needs the median first)
-    val dev = o.join(broadcast(ordStats), o("country") === ordStats("o_country"))
-      .withColumn("absdev", abs(col("cents") - col("med_cents")))
-    val w2 = Window.partitionBy(col("country")).orderBy(col("absdev"), col("o_orderkey"))
-    val madStats = dev
-      .withColumn("rn2", row_number().over(w2).cast("long"))
-      .withColumn("n", count(lit(1)).over(wn).cast("long"))
-      .groupBy(col("country").as("m_country"))
-      .agg(min(when(col("rn2") === expr("(n + 1) div 2"), col("absdev"))).as("mad_cents"))
+    val ordStats = Quality.withCountryMad(o, Quality.countryCentsStats(o))
 
     val scored = o
       .join(broadcast(zStats), o("country") === col("z_country")).drop("z_country")
-      .join(broadcast(ordStats), o("country") === col("o_country")).drop("o_country")
-      .join(broadcast(madStats), o("country") === col("m_country")).drop("m_country")
+      .join(broadcast(ordStats), o("country") === col("s_country"))
       .withColumn("z", (col("o_totalprice") - col("mean_price")) / col("std_price"))
       .withColumn("modified_z",
         when(col("mad_cents") === 0, lit(null).cast("double"))

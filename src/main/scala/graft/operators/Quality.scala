@@ -85,33 +85,51 @@ object Quality {
           .otherwise("no_change"))
   }
 
+  /** Order totals in integer cents with their country: the input of the
+    * four per-country cents detectors (median_prices, iqr_outliers,
+    * mad_outliers, anomaly_ensemble). */
+  private[operators] def countryCents(spark: SparkSession, dir: String): DataFrame =
+    Tables.ordersWithCountry(spark, dir)
+      .select(col("o_orderkey"), col("country"), col("o_totalprice"))
+      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
+
+  /** One ranked pass over [[countryCents]] per country (RankOps' grouped
+    * core, tie-broken by order key): `s_country`, `n` and the discrete
+    * median, q1, q3 and p90 in cents — 25 rows, for a broadcast. */
+  private[operators] def countryCentsStats(o: DataFrame): DataFrame =
+    RankOps.withGroupedRank(o, "rn", Seq("country"), Seq(col("cents"), col("o_orderkey")),
+        countCol = Some("n"))
+      .groupBy(col("country").as("s_country"), col("n"))
+      .agg(
+        RankOps.valueAt(col("cents"), expr("(n + 1) div 2")).as("med_cents"),
+        RankOps.valueAt(col("cents"), greatest(lit(1L), ceil(col("n") * 0.25))).as("q1_cents"),
+        RankOps.valueAt(col("cents"), ceil(col("n") * 0.75)).as("q3_cents"),
+        RankOps.valueAt(col("cents"), ceil(col("n") * 0.9)).as("p90_cents"))
+
+  /** `stats` ([[countryCentsStats]]) plus `mad_cents`, the discrete median
+    * of |cents − median| per country: a second grouped-rank pass, whose
+    * positions come from the `n` the first pass counted. */
+  private[operators] def withCountryMad(o: DataFrame, stats: DataFrame): DataFrame = {
+    val keep = stats.columns.map(col)
+    val dev = o.join(broadcast(stats), col("country") === col("s_country"))
+      .select(keep ++ Seq(col("o_orderkey"),
+        abs(col("cents") - col("med_cents")).as("absdev")): _*)
+    RankOps.withGroupedRank(dev, "rn", Seq("s_country"), Seq(col("absdev"), col("o_orderkey")))
+      .groupBy(keep: _*)
+      .agg(RankOps.valueAt(col("absdev"), expr("(n + 1) div 2")).as("mad_cents"))
+  }
+
   /** Modified z-score (MAD-based) outliers per country (reference:
     * src/data_quality/core/anomaly_detection.py:329) — robust to the very
     * outliers plain z-score smears. Median and MAD are exact discrete order
-    * statistics in integer cents (two ranked passes), so the whole thing is
-    * bit-deterministic; the final z = 0.6745·(x-med)/MAD is a fixed IEEE
-    * sequence. MAD=0 groups emit NULL z on both engines (explicit guard —
-    * engines disagree on x/0). */
+    * statistics in integer cents ([[countryCentsStats]], [[withCountryMad]]),
+    * so the whole thing is bit-deterministic; the final z =
+    * 0.6745·(x-med)/MAD is a fixed IEEE sequence. MAD=0 groups emit NULL z
+    * on both engines (explicit guard — engines disagree on x/0). */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.ordersWithCountry(spark, dir)
-      .select(col("o_orderkey"), col("country"), col("o_totalprice"))
-      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
-    val w1 = Window.partitionBy(col("country")).orderBy(col("cents"), col("o_orderkey"))
-    val wn = Window.partitionBy(col("country"))
-    val med = o
-      .withColumn("rn", row_number().over(w1).cast("long"))
-      .withColumn("n", count(lit(1)).over(wn).cast("long"))
-      .groupBy(col("country").as("m_country"))
-      .agg(min(when(col("rn") === expr("(n + 1) div 2"), col("cents"))).as("med_cents"))
-    val dev = o.join(broadcast(med), o("country") === med("m_country"))
-      .withColumn("absdev", abs(col("cents") - col("med_cents")))
-    val w2 = Window.partitionBy(col("country")).orderBy(col("absdev"), col("o_orderkey"))
-    val mad = dev
-      .withColumn("rn2", row_number().over(w2).cast("long"))
-      .withColumn("n", count(lit(1)).over(wn).cast("long"))
-      .groupBy(col("country").as("d_country"), col("med_cents"))
-      .agg(min(when(col("rn2") === expr("(n + 1) div 2"), col("absdev"))).as("mad_cents"))
-    o.join(broadcast(mad), o("country") === mad("d_country"))
+    val o = countryCents(spark, dir)
+    val mad = withCountryMad(o, countryCentsStats(o))
+    o.join(broadcast(mad), col("country") === col("s_country"))
       .withColumn("median_price", col("med_cents").cast("double") / 100.0)
       .withColumn("mad_price", col("mad_cents").cast("double") / 100.0)
       // explicit MAD=0 guard: engines disagree on x/0 (Spark Divide → NULL

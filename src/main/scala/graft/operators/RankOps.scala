@@ -35,6 +35,14 @@ import scala.jdk.CollectionConverters._
   * Sort keys must be a total order (callers append a unique tie-breaker),
   * so `withGlobalNtile`'s SQL bucket formula matches `NTILE(k) OVER (ORDER
   * BY …)` bit-for-bit.
+  *
+  * Per-group order statistics (medians, quartiles, p90–p99, MAD, a series'
+  * last value) are the grouped core too: `withGroupedRank` with `countCol`,
+  * then one `groupBy` that selects each statistic with [[valueAt]] — the
+  * ordered-set aggregate as partition, sort and prefix, never a
+  * `row_number` + `count` window pair that sorts a whole group in one task.
+  * Plain `Window.partitionBy` stays right for numerous small groups (per
+  * conversion, per key dedup), where #groups already feeds every task.
   */
 object RankOps {
 
@@ -137,6 +145,12 @@ object RankOps {
     require(groupCols.nonEmpty, "withGroupedRank needs at least one group column")
     prefixed(df, rankCol, groupCols, sortCols, lit(1L), numPartitions, countCol)._1
   }
+
+  /** The value at 1-based position `pos` of its group, for a frame ranked
+    * into `rn` by [[withGroupedRank]] and grouped by its group columns:
+    * `pos` is an expression of the group's count — the lower median
+    * `(n + 1) div 2`, the discrete quantile `ceil(n * p)`, the last row `n`. */
+  def valueAt(value: Column, pos: Column): Column = min(when(col("rn") === pos, value))
 
   /** Adds `ntileCol` = exact `NTILE(k) OVER (ORDER BY sortCols)` (long). */
   def withGlobalNtile(df: DataFrame, ntileCol: String, k: Int, sortCols: Seq[Column]): DataFrame = {

@@ -42,18 +42,14 @@ object Segments {
         when(datediff(col("ref_date"), col("last_day")) <= 365, "Active")
           .when(datediff(col("ref_date"), col("last_day")) <= 1095, "At Risk")
           .otherwise("Churned"))
-    val w = Window.partitionBy(col("customer_segment"), col("customer_status"))
-      .orderBy(col("spent_c"), col("o_custkey"))
-    val ranked = perCust
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(
-        Window.partitionBy(col("customer_segment"), col("customer_status"))).cast("long"))
+    val ranked = RankOps.withGroupedRank(perCust, "rn", Seq("customer_segment", "customer_status"),
+      Seq(col("spent_c"), col("o_custkey")), countCol = Some("n"))
     val agg = ranked.groupBy(col("customer_segment"), col("customer_status"), col("n").as("customer_count"))
       .agg(
         sum(col("spent_c").cast("decimal(19,0)")).as("__rev"),
         sum(col("n_orders")).as("__orders"),
         sum(col("lifetime_days")).as("__life"),
-        min(when(col("rn") === expr("(n + 1) div 2"), col("spent_c"))).as("__med"))
+        RankOps.valueAt(col("spent_c"), expr("(n + 1) div 2")).as("__med"))
     val rev = col("__rev").cast("double") / lit(100.0)
     val withTotals = agg.select(
       col("customer_segment"), col("customer_status"), col("customer_count"),
@@ -151,7 +147,7 @@ object Segments {
         sum(col("__score3")).cast("long").as("__s3"),
         sum(when(col("__days_since") <= 180, 1L).otherwise(0L)).cast("long").as("active_180d"),
         sum(when(col("__days_since") <= 365, 1L).otherwise(0L)).cast("long").as("active_365d"),
-        min(when(col("rn") === expr("(n + 1) div 2"), col("total_spent"))).as("median_customer_value"))
+        RankOps.valueAt(col("total_spent"), expr("(n + 1) div 2")).as("median_customer_value"))
     agg.select(
       col("customer_segment"), col("customer_count"),
       dec6ToDouble(col("__rev")).as("segment_revenue"),

@@ -690,25 +690,26 @@ object Stats {
     * the lognormal probe is dropped: it needs ln() over the data, and
     * transcendental libm vs Java rounding diverges between engines.
     *
-    * One shuffle on the group key serves both the rank window and the moment
-    * aggregate; the center join is a broadcast (group cardinality is small). */
+    * The percentile ranks come from RankOps' grouped core (five priorities
+    * never mean five busy tasks); the center join is a broadcast (group
+    * cardinality is small) and one aggregate selects the ladder and sums the
+    * moments. */
   def distributionProfile(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val o = Tables.orders(spark, dir).select(
       col("o_orderpriority"), col("o_orderkey"),
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
     val centers = o.groupBy(col("o_orderpriority").as("g"))
       .agg(countAll.as("n"), sum("cents").as("s"))
       .withColumn("center", expr("s div n"))
-    val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("cents"), col("o_orderkey"))
     val d = (col("cents") - col("center"))
     val d2 = (d * d).as("__d2")
     def dec(c: Column): Column = c.cast("decimal(19,0)")
-    val ranked = o.withColumn("rn", row_number().over(w).cast("long"))
+    val ranked = RankOps.withGroupedRank(o, "rn", Seq("o_orderpriority"),
+        Seq(col("cents"), col("o_orderkey")))
       .join(broadcast(centers), col("o_orderpriority") === col("g"))
       .select(col("g"), col("n"), col("s"), col("cents"), col("rn"), d.as("__d"), d2)
     val pctAggs = distPcts.map { p =>
-      min(when(col("rn") === ceil(col("n") * (p / 100.0)), col("cents"))).as(s"__p$p")
+      RankOps.valueAt(col("cents"), ceil(col("n") * (p / 100.0))).as(s"__p$p")
     }
     val m = ranked.groupBy("g", "n", "s")
       .agg(pctAggs.head, pctAggs.tail ++ Seq(

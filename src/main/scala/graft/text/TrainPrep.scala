@@ -74,25 +74,16 @@ object TrainPrep {
     * the standard majority-downsampling step before training a classifier.
     *
     * Scale shape: the per-class rank is NOT a `Window.partitionBy(lang)`
-    * (5 classes ⇒ 5 single-threaded partitions at 100 TB). Instead one
-    * global range-repartitioned rank over (lang, hash, id) — a distributed
-    * sort — minus per-class offsets derived from the ≤ #classes-row count
-    * frame (driver-side, like StarSchema's 1-row collect). */
+    * (5 classes ⇒ 5 single-threaded partitions at 100 TB) but RankOps'
+    * grouped rank over (lang; hash, id) — a distributed sort; `m` comes from
+    * the ≤ #classes-row count frame (driver-side, like StarSchema's 1-row
+    * collect). */
   def classBalance(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir).select(
       col("doc_id"), col("lang"),
       md5(col("doc_id").cast("string")).as("__hk"))
-    val ranked = RankOps.withGlobalRank(keyed, "__grank",
-      Seq(col("lang").asc, col("__hk").asc, col("doc_id").asc))
-    val counts = keyed.groupBy("lang").agg(countAll.as("__c"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val m = counts.map(_._2).min
-    var acc = 0L
-    val offsets = counts.map { case (l, c) => val row = (l, acc); acc += c; row }
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("lang", "__off"))
-    ranked.join(offDf, "lang")
-      .withColumn("class_rank", (col("__grank") - col("__off")).cast("long"))
+    val m = keyed.groupBy("lang").agg(countAll.as("__c")).collect().map(_.getLong(1)).min
+    RankOps.withGroupedRank(keyed, "class_rank", Seq("lang"), Seq(col("__hk"), col("doc_id")))
       .withColumn("is_kept", col("class_rank") <= m)
       .select("doc_id", "lang", "class_rank", "is_kept")
   }
@@ -426,29 +417,19 @@ object TrainPrep {
     * eval slice gets drawn so every domain is represented but big domains
     * don't drown the budget.
     *
-    * Scale shape: the per-stratum rank is the classBalance recipe — ONE
-    * range-partitioned global rank over (source, hash) minus broadcast
-    * per-stratum offsets; a `Window.partitionBy(source)` would collapse
-    * each stratum onto one thread at corpus scale. Quotas come from the
-    * ≤ #sources-row count frame (driver-side, like the offsets). */
+    * Scale shape: the per-stratum rank is the classBalance recipe —
+    * RankOps' grouped rank over (source; hash, id); a
+    * `Window.partitionBy(source)` would collapse each stratum onto one
+    * thread at corpus scale. Quotas are a projection of the rank's group
+    * count and N, the corpus count (driver-side). */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir).select(
       col("doc_id"), col("source"),
       md5(concat(lit("ss:"), col("doc_id").cast("string"))).as("__hk"))
-    val ranked = RankOps.withGlobalRank(keyed, "__grank",
-      Seq(col("source").asc, col("__hk").asc, col("doc_id").asc))
-    val counts = keyed.groupBy("source").agg(countAll.as("__c"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    var acc = 0L
-    val rows = counts.map { case (s, c) =>
-      val row = (s, acc, math.max(SampleFloor, SampleBudget * c / n))
-      acc += c; row
-    }
-    import spark.implicits._
-    val quotaDf = broadcast(rows.toSeq.toDF("source", "__off", "quota"))
-    ranked.join(quotaDf, "source")
-      .withColumn("strat_rank", (col("__grank") - col("__off")).cast("long"))
+    val n = keyed.count()
+    RankOps.withGroupedRank(keyed, "strat_rank", Seq("source"), Seq(col("__hk"), col("doc_id")),
+        countCol = Some("__c"))
+      .withColumn("quota", greatest(lit(SampleFloor), expr(s"${SampleBudget}L * __c div ${n}L")))
       .withColumn("is_sampled", col("strat_rank") <= col("quota"))
       .select("doc_id", "source", "strat_rank", "quota", "is_sampled")
   }

@@ -81,12 +81,18 @@ class PlanSpec extends AnyFunSuite {
       "expected partial+final aggregates at both rollup levels")
   }
 
-  test("operational KPIs shuffle once on the bucket key") {
+  /** Positive evidence that `plan` ranks within `group` on RankOps'
+    * grouped prefix core: the partition-local prefix over the group and the
+    * broadcast offset join. */
+  private def assertGroupedPrefix(plan: String, group: String): Unit = {
+    assert(s"partition_prefix\\(1, [^)]*$group".r.findFirstIn(plan).isDefined,
+      s"expected the distributed grouped rank over $group")
+    assert(plan.contains("BroadcastHashJoin"), "the rank offsets must broadcast")
+  }
+
+  test("operational KPIs rank each hour bucket on the prefix core, never one partition") {
     val plan = formatted(graft.operators.Views.operationalKpis(spark, dir))
-    // one hash-partitioned exchange (the bucket key); the windows and the
-    // rollup all reuse that partitioning
-    assert("""(?m)^\(\d+\) Exchange""".r.findAllIn(plan).size == 1,
-      "operational KPIs should partition once by bucket")
+    assertGroupedPrefix(plan, "bucket")
     assert(!plan.contains("SinglePartition"), "collapsed to one partition")
   }
 
@@ -118,14 +124,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("props"), "events scan reads the wide props column")
   }
 
-  test("distribution profile: rank window and moment aggregate share the group key") {
-    val plan = formatted(graft.operators.Stats.distributionProfile(spark, dir))
-    assert(plan.contains("Window"), "percentile rank window missing")
+  test("distribution profile ranks each priority on the prefix core, never one partition") {
+    val plan = formatted(Stats.distributionProfile(spark, dir))
+    assertGroupedPrefix(plan, "o_orderpriority")
     assert(!plan.contains("SinglePartition"), "profile collapsed to one partition")
   }
 
   test("no low-cardinality window sorts survive on the grouped-rank paths") {
-    // product_analysis and rfm_segment_rollup rank WITHIN country/segment via
+    // these rank WITHIN country/segment/priority via
     // RankOps.withGroupedRank: a partition-local prefix over the
     // range-partitioned checkpoint plus a broadcast offset join — no window
     // at all. The guard: the distributed rank ran, and any window spec that
@@ -134,12 +140,14 @@ class PlanSpec extends AnyFunSuite {
     // ceiling) mentions no __pid and fails here.
     Seq(
       "country" -> Gold.productAnalysis(spark, dir),
-      "customer_segment" -> graft.operators.Segments.rfmSegmentRollup(spark, dir)
+      "customer_segment" -> graft.operators.Segments.rfmSegmentRollup(spark, dir),
+      "country" -> graft.operators.AdvancedFeatures.medianPrices(spark, dir),
+      "country" -> graft.operators.Quality.madOutliers(spark, dir),
+      "o_orderpriority" -> Stats.distributionProfile(spark, dir),
+      "customer_segment" -> graft.operators.Segments.customerSegments(spark, dir)
     ).foreach { case (group, df) =>
       val plan = formatted(df)
-      assert(s"partition_prefix\\(1, [^)]*$group".r.findFirstIn(plan).isDefined,
-        s"expected the distributed grouped rank over $group")
-      assert(plan.contains("BroadcastHashJoin"), "the rank offsets must broadcast")
+      assertGroupedPrefix(plan, group)
       val specs = s"windowspecdefinition\\([^)]*".r.findAllIn(plan).toList
         .filter(_.contains(group))
       specs.foreach { spec =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.RankOps
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -101,7 +102,8 @@ class RankOpsSpec extends AnyFunSuite {
     import org.scalacheck.{Gen, Prop, Test}
     import spark.implicits._
     // duplicate sort values (broken by the unique id), a null group, one
-    // group holding at least half the rows, summands with 0 and negatives
+    // group holding at least half the rows, summands with 0 and negatives;
+    // plus a one-row group and a constant (MAD = 0) group in every case
     val caseGen = for {
       n <- Gen.choose(0, 400)
       parts <- Gen.choose(1, 8)
@@ -116,7 +118,9 @@ class RankOpsSpec extends AnyFunSuite {
         val g2 = if (big) Some(0) else Seq(None, Some(0), Some(1))(rnd.nextInt(3))
         (i.toLong, rnd.nextInt(20), g1, g2, rnd.between(-5L, 6L))
       }
-      (rows, parts, if (twoKeys) Seq("g1", "g2") else Seq("g1"), k)
+      val fixed = Seq((n, 3, "one"), (n + 1, 7, "flat"), (n + 2, 7, "flat"), (n + 3, 7, "flat"))
+        .map { case (i, s, g) => (i.toLong, s, Option(g), Option(1), 1L) }
+      (rows ++ fixed, parts, if (twoKeys) Seq("g1", "g2") else Seq("g1"), k)
     }
     val prop = Prop.forAllNoShrink(caseGen) { case (rows, parts, groups, k) =>
       val df = rows.toDF("id", "s", "g1", "g2", "v")
@@ -144,7 +148,45 @@ class RankOpsSpec extends AnyFunSuite {
       spark.catalog.clearCache()
       val want = Seq(Seq(0), Seq(1, 2), Seq(3), Seq(4))
         .map(ix => ref.view.mapValues(v => ix.map(v)).toMap)
-      total == rows.size && got == want
+      // order statistics of s per group (lower median, ceil(n·p), the last
+      // row) and the MAD, from valueAt over the grouped core against
+      // min(when(row_number() === pos, v)) over plain Windows
+      val byValue = Seq(col("s"), col("id"))
+      val positions = expr("(n + 1) div 2") +: Seq(0.25, 0.75, 0.9, 0.95, 0.99)
+        .map(p => ceil(col("n") * p)) :+ col("n")
+      def stats(ranked: org.apache.spark.sql.DataFrame, pick: (Column, Column) => Column) =
+        ranked.groupBy(groups.map(col): _*).agg(
+          pick(col("s"), positions.head).as("med"), positions.tail.zipWithIndex.map {
+            case (p, i) => pick(col("s"), p).as(s"q$i") }: _*)
+      def mad(ranked: org.apache.spark.sql.DataFrame, med: org.apache.spark.sql.DataFrame,
+              rank: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+              pick: (Column, Column) => Column) = {
+        val keyed = med.select(col("med") +: groups.map(g => col(g).as(s"k_$g")): _*)
+        val dev = ranked.join(keyed, groups.map(g => col(g) <=> col(s"k_$g")).reduce(_ && _))
+          .select(col("id") +: col("n") +: groups.map(col) :+
+            abs(col("s") - col("med")).as("absdev"): _*)
+        rank(dev).groupBy(groups.map(col): _*)
+          .agg(pick(col("absdev"), expr("(n + 1) div 2")).as("mad"))
+      }
+      def helperRank(f: org.apache.spark.sql.DataFrame, sortCols: Seq[Column]) =
+        RankOps.withGroupedRank(f.drop("n"), "rn", groups, sortCols, parts, Some("n"))
+      def windowRank(f: org.apache.spark.sql.DataFrame, sortCols: Seq[Column]) =
+        f.withColumn("rn", row_number().over(inGroup.orderBy(sortCols: _*)))
+          .withColumn("n", count(lit(1)).over(inGroup))
+      val viaHelper = helperRank(df, byValue)
+      val viaWindow = windowRank(df, byValue)
+      val helperStats = stats(viaHelper, RankOps.valueAt(_, _))
+      val windowStats = stats(viaWindow, (v, p) => min(when(col("rn") === p, v)))
+      val orderStats = Seq(helperStats, windowStats).map(_.collect().toSet)
+      val mads = Seq(
+        mad(viaHelper, helperStats, helperRank(_, Seq(col("absdev"), col("id"))),
+          RankOps.valueAt(_, _)),
+        mad(viaWindow, windowStats, windowRank(_, Seq(col("absdev"), col("id"))),
+          (v, p) => min(when(col("rn") === p, v))))
+        .map(_.collect().toSet)
+      spark.catalog.clearCache()
+      total == rows.size && got == want && orderStats(0) == orderStats(1) &&
+        mads(0) == mads(1) && mads(0).exists(_.getAs[Int]("mad") == 0)
     }
     val res = Test.check(Test.Parameters.default
       .withMinSuccessfulTests(25)
@@ -208,24 +250,48 @@ class RankOpsSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("RankOps is one range-partitioned prefix core; no partition-id tricks remain") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"library sources not found under ${root.getAbsolutePath}")
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  private def mainSources: Seq[java.io.File] = {
+    assert(mainRoot.isDirectory, s"library sources not found under ${mainRoot.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    def text(f: java.io.File) = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString finally src.close()
-    }
+    files(mainRoot).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def text(f: java.io.File) = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  test("RankOps is one range-partitioned prefix core; no partition-id tricks remain") {
     val banned = Seq("monotonically_increasing_id", "spark_partition_id",
       "Window.partitionBy(col(\"__pid\")")
     val offenders = for {
-      f <- files(root) if f.getName.endsWith(".scala")
+      f <- mainSources
       b <- banned if text(f).contains(b)
     } yield s"${f.getPath}: $b"
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    val rankOps = text(new java.io.File(root, "graft/operators/RankOps.scala"))
+    val rankOps = text(new java.io.File(mainRoot, "graft/operators/RankOps.scala"))
     assert("repartitionByRange".r.findAllIn(rankOps).size == 1)
+  }
+
+  test("order statistics ride the grouped core: no row_number + count window pair remains") {
+    // the Scala side only: triple-quoted SQL oracles keep the window form,
+    // blanked here line for line so reported line numbers stay true
+    val sql = "(?s)\"{3}.*?\"{3}".r
+    val rankCol = """withColumn\("(\w+)",\s*row_number\(\)""".r
+    val countPair = """count\(lit\(1\)\)\.over\(\s*Window\.partitionBy\(\s*[^)\s]""".r
+    val offenders = mainSources.flatMap { f =>
+      val src = sql.replaceAllIn(text(f), m => "\n" * m.matched.count(_ == '\n'))
+      def line(at: Int) = s"${f.getPath}:${src.take(at).count(_ == '\n') + 1}"
+      val selections = rankCol.findAllMatchIn(src).map(_.group(1)).toSeq.distinct.flatMap { rn =>
+        raw"""min\(when\(col\("$rn"\)\s*===""".r.findAllMatchIn(src)
+          .map(m => s"${line(m.start)}: selection on row_number column $rn")
+      }
+      selections ++ countPair.findAllMatchIn(src).map(m => s"${line(m.start)}: rank-count pair")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("boundedFrame passes values through within the bound") {
