@@ -23,7 +23,9 @@ object Ensemble {
   import Exact._
 
   def anomalyEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    val o = Quality.countryCents(spark, dir)
+    // persisted while the two grouped ranks read it twice each (the
+    // Quality.madOutliers reasoning)
+    val o = Quality.countryCents(spark, dir).persist()
 
     // moment stats (z-score): shifted-data variance in exact integer cents
     val agg1 = o.groupBy(col("country").as("a_country"))
@@ -43,6 +45,7 @@ object Ensemble {
         .as("std_price"))
 
     val ordStats = Quality.withCountryMad(o, Quality.countryCentsStats(o))
+    o.unpersist()
 
     val scored = o
       .join(broadcast(zStats), o("country") === col("z_country")).drop("z_country")

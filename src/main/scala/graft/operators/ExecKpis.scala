@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   * customers, average/median/p95 transaction value, revenue per customer,
   * growth rate vs the previous bucket, high-value counts).
   *
-  * Scale shapes: median/p95 are exact discrete order statistics in integer
-  * cents (the reference's PERCENTILE_CONT interpolates — not
-  * engine-portable, SURVEY §3), ranked by RankOps' grouped core so no month
-  * is sorted in one task, and selected in the one per-bucket rollup that
-  * also sums revenue; the growth-rate lag window runs over the AGGREGATED frame, whose row
+  * Scale shapes: the per-bucket rollup shuffles once on the month key;
+  * median/p95 are exact discrete order statistics in integer cents (the
+  * reference's PERCENTILE_CONT interpolates — not engine-portable, SURVEY
+  * §3); the growth-rate lag window runs over the AGGREGATED frame, whose row
   * count is bounded by the calendar (≤ ~80 months at any SF), so the
   * unpartitioned window is constant-size, never data-size. */
 object ExecKpis {
@@ -26,15 +25,17 @@ object ExecKpis {
         col("o_orderkey"), col("o_custkey"),
         date_format(col("o_orderdate"), "yyyy-MM").as("bucket"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-    val ranked = RankOps.withGroupedRank(o, "rn", Seq("bucket"),
-      Seq(col("cents"), col("o_orderkey")), countCol = Some("n"))
+    val w = Window.partitionBy(col("bucket")).orderBy(col("cents"), col("o_orderkey"))
+    val ranked = o
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("bucket"))).cast("long"))
     val agg = ranked.groupBy(col("bucket"), col("n").as("total_orders"))
       .agg(
         sum(col("cents").cast("decimal(19,0)")).as("__rev"),
         countDistinct(col("o_custkey")).as("unique_customers"),
         sum(when(col("cents") > highValueCents, 1L).otherwise(0L)).cast("long").as("high_value_orders"),
-        RankOps.valueAt(col("cents"), expr("(n + 1) div 2")).as("__med"),
-        RankOps.valueAt(col("cents"), ceil(col("n") * 0.95)).as("__p95"))
+        min(when(col("rn") === expr("(n + 1) div 2"), col("cents"))).as("__med"),
+        min(when(col("rn") === ceil(col("n") * 0.95), col("cents"))).as("__p95"))
     val rev = col("__rev").cast("double") / lit(100.0)
     val kpis = agg.select(
       col("bucket"), col("total_orders"), col("unique_customers"), col("high_value_orders"),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.Exact.countAll
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Quality-metric trend monitoring and GDPR subject erasure.
@@ -15,8 +16,7 @@ import org.apache.spark.sql.functions._
   * metric is a per-day BIGINT series off one rollup shuffle (exact integer
   * half-sums ⇒ the averages are deterministic ratios; a double series would
   * accumulate in engine-specific order). The stacked per-metric frame is
-  * calendar-bounded; its halves and last point come from RankOps' grouped
-  * rank.
+  * calendar-bounded, so its windows are constant-size at any SF.
   *
   * subject_erasure (reference: src/core/security/compliance_framework.py:495
   * `_check_data_deletion_capability` — the GDPR right-to-erasure the
@@ -44,13 +44,15 @@ object Monitoring {
         |  'daily_revenue', daily_revenue_cents,
         |  'daily_high_value_orders', daily_high_value_orders
         |) AS (metric_name, v)""".stripMargin))
-    val ranked = RankOps.withGroupedRank(stacked, "rn", Seq("metric_name"), Seq(col("day")),
-      countCol = Some("n"))
+    val w = Window.partitionBy("metric_name").orderBy("day")
+    val ranked = stacked
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("metric_name")).cast("long"))
     val agg = ranked.groupBy(col("metric_name"), col("n").as("data_points"))
       .agg(
         sum(when(col("rn") <= expr("n div 2"), col("v"))).as("s1"),
         sum(when(col("rn") > expr("n div 2"), col("v"))).as("s2"),
-        RankOps.valueAt(col("v"), col("n")).as("cur"),
+        min(when(col("rn") === col("n"), col("v"))).as("cur"),
         min(col("v")).as("mn"), max(col("v")).as("mx"),
         sum(col("v")).as("s"))
     // the reference scales dollar metrics back out of cents at report time

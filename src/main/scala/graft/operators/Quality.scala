@@ -101,10 +101,10 @@ object Quality {
         countCol = Some("n"))
       .groupBy(col("country").as("s_country"), col("n"))
       .agg(
-        RankOps.valueAt(col("cents"), expr("(n + 1) div 2")).as("med_cents"),
-        RankOps.valueAt(col("cents"), greatest(lit(1L), ceil(col("n") * 0.25))).as("q1_cents"),
-        RankOps.valueAt(col("cents"), ceil(col("n") * 0.75)).as("q3_cents"),
-        RankOps.valueAt(col("cents"), ceil(col("n") * 0.9)).as("p90_cents"))
+        RankOps.valueAt(col("cents"), "rn", expr("(n + 1) div 2")).as("med_cents"),
+        RankOps.valueAt(col("cents"), "rn", greatest(lit(1L), ceil(col("n") * 0.25))).as("q1_cents"),
+        RankOps.valueAt(col("cents"), "rn", ceil(col("n") * 0.75)).as("q3_cents"),
+        RankOps.valueAt(col("cents"), "rn", ceil(col("n") * 0.9)).as("p90_cents"))
 
   /** `stats` ([[countryCentsStats]]) plus `mad_cents`, the discrete median
     * of |cents − median| per country: a second grouped-rank pass, whose
@@ -116,7 +116,7 @@ object Quality {
         abs(col("cents") - col("med_cents")).as("absdev")): _*)
     RankOps.withGroupedRank(dev, "rn", Seq("s_country"), Seq(col("absdev"), col("o_orderkey")))
       .groupBy(keep: _*)
-      .agg(RankOps.valueAt(col("absdev"), expr("(n + 1) div 2")).as("mad_cents"))
+      .agg(RankOps.valueAt(col("absdev"), "rn", expr("(n + 1) div 2")).as("mad_cents"))
   }
 
   /** Modified z-score (MAD-based) outliers per country (reference:
@@ -127,8 +127,13 @@ object Quality {
     * 0.6745·(x-med)/MAD is a fixed IEEE sequence. MAD=0 groups emit NULL z
     * on both engines (explicit guard — engines disagree on x/0). */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val o = countryCents(spark, dir)
+    // persisted because each of the two grouped ranks evaluates its input
+    // twice (range sample + checkpoint): uncached, the orders-with-country
+    // join would run four times before the final join reads it once more
+    val o = countryCents(spark, dir).persist()
     val mad = withCountryMad(o, countryCentsStats(o))
+    // both ranks are checkpointed, so `mad` no longer reaches `o`
+    o.unpersist()
     o.join(broadcast(mad), col("country") === col("s_country"))
       .withColumn("median_price", col("med_cents").cast("double") / 100.0)
       .withColumn("mad_price", col("mad_cents").cast("double") / 100.0)

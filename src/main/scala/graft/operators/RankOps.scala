@@ -41,8 +41,13 @@ import scala.jdk.CollectionConverters._
   * then one `groupBy` that selects each statistic with [[valueAt]] — the
   * ordered-set aggregate as partition, sort and prefix, never a
   * `row_number` + `count` window pair that sorts a whole group in one task.
-  * Plain `Window.partitionBy` stays right for numerous small groups (per
-  * conversion, per key dedup), where #groups already feeds every task.
+  * That serves the few-large-group keys (country, priority, segment,
+  * language, source). Plain `Window.partitionBy` stays right for numerous
+  * groups — per conversion, per key dedup, per calendar bucket (the KPI
+  * views' days and hours, exec_kpis' months) — where #groups already feeds
+  * every task, and for calendar-bounded frames (quality_trends' stacked
+  * series); there the core's range sample, checkpoint and collect are pure
+  * overhead (`plans/order_stats_cost.json`).
   */
 object RankOps {
 
@@ -147,10 +152,11 @@ object RankOps {
   }
 
   /** The value at 1-based position `pos` of its group, for a frame ranked
-    * into `rn` by [[withGroupedRank]] and grouped by its group columns:
+    * into `rankCol` by [[withGroupedRank]] and grouped by its group columns:
     * `pos` is an expression of the group's count — the lower median
     * `(n + 1) div 2`, the discrete quantile `ceil(n * p)`, the last row `n`. */
-  def valueAt(value: Column, pos: Column): Column = min(when(col("rn") === pos, value))
+  def valueAt(value: Column, rankCol: String, pos: Column): Column =
+    min(when(col(rankCol) === pos, value))
 
   /** Adds `ntileCol` = exact `NTILE(k) OVER (ORDER BY sortCols)` (long). */
   def withGlobalNtile(df: DataFrame, ntileCol: String, k: Int, sortCols: Seq[Column]): DataFrame = {

@@ -49,7 +49,7 @@ object Segments {
         sum(col("spent_c").cast("decimal(19,0)")).as("__rev"),
         sum(col("n_orders")).as("__orders"),
         sum(col("lifetime_days")).as("__life"),
-        RankOps.valueAt(col("spent_c"), expr("(n + 1) div 2")).as("__med"))
+        RankOps.valueAt(col("spent_c"), "rn", expr("(n + 1) div 2")).as("__med"))
     val rev = col("__rev").cast("double") / lit(100.0)
     val withTotals = agg.select(
       col("customer_segment"), col("customer_status"), col("customer_count"),
@@ -147,7 +147,7 @@ object Segments {
         sum(col("__score3")).cast("long").as("__s3"),
         sum(when(col("__days_since") <= 180, 1L).otherwise(0L)).cast("long").as("active_180d"),
         sum(when(col("__days_since") <= 365, 1L).otherwise(0L)).cast("long").as("active_365d"),
-        RankOps.valueAt(col("total_spent"), expr("(n + 1) div 2")).as("median_customer_value"))
+        RankOps.valueAt(col("total_spent"), "rn", expr("(n + 1) div 2")).as("median_customer_value"))
     agg.select(
       col("customer_segment"), col("customer_count"),
       dec6ToDouble(col("__rev")).as("segment_revenue"),

@@ -709,7 +709,7 @@ object Stats {
       .join(broadcast(centers), col("o_orderpriority") === col("g"))
       .select(col("g"), col("n"), col("s"), col("cents"), col("rn"), d.as("__d"), d2)
     val pctAggs = distPcts.map { p =>
-      RankOps.valueAt(col("cents"), ceil(col("n") * (p / 100.0))).as(s"__p$p")
+      RankOps.valueAt(col("cents"), "rn", ceil(col("n") * (p / 100.0))).as(s"__p$p")
     }
     val m = ranked.groupBy("g", "n", "s")
       .agg(pctAggs.head, pctAggs.tail ++ Seq(

@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * financial KPIs `:490`, daily sales KPI `:801`, anomaly-detection KPIs
   * `:921`), re-expressed over the graft tables.
   *
-  * Shared scale shapes: every view is one keyed rollup on the bucket key
-  * followed by windows over the AGGREGATED frame, whose row count is
-  * calendar-bounded (hours/days/months — constant in data size), so the
-  * unpartitioned trend windows never become the bottleneck. Percentiles are
-  * exact discrete order statistics in integer centi-units (the reference's
-  * PERCENTILE_CONT interpolates — not engine-portable, SURVEY §3), ranked by
-  * RankOps' grouped core and selected in that same rollup; rolling stddev comes from exact rolling decimal sums of v
+  * Shared scale shapes: every view is one keyed rollup (single shuffle on
+  * the bucket key) followed by windows over the AGGREGATED frame, whose row
+  * count is calendar-bounded (hours/days/months — constant in data size),
+  * so the unpartitioned trend windows never become the bottleneck.
+  * Percentiles are exact discrete order statistics in integer centi-units
+  * (the reference's PERCENTILE_CONT interpolates — not engine-portable,
+  * SURVEY §3); rolling stddev comes from exact rolling decimal sums of v
   * and v², so moments are bit-identical across engines.
   */
 object Views {
@@ -52,15 +52,17 @@ object Views {
       date_format(col("ts"), "yyyy-MM-dd HH").as("bucket"),
       col("event_type"),
       centsL(col("value")).as("centi"))
-    val ranked = RankOps.withGroupedRank(e, "rn", Seq("bucket"),
-      Seq(col("centi"), col("event_id")), countCol = Some("n"))
+    val w = Window.partitionBy(col("bucket")).orderBy(col("centi"), col("event_id"))
+    val ranked = e
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("bucket"))).cast("long"))
     val agg = ranked.groupBy(col("bucket"), col("n").as("total_events"))
       .agg(
         sum(when(col("event_type") === "error", 1L).otherwise(0L)).cast("long").as("error_events"),
         sum(col("centi").cast("decimal(19,0)")).as("__s"),
         min("centi").as("__mn"), max("centi").as("__mx"),
-        RankOps.valueAt(col("centi"), ceil(col("n") * 0.95)).as("__p95"),
-        RankOps.valueAt(col("centi"), ceil(col("n") * 0.99)).as("__p99"))
+        min(when(col("rn") === ceil(col("n") * 0.95), col("centi"))).as("__p95"),
+        min(when(col("rn") === ceil(col("n") * 0.99), col("centi"))).as("__p99"))
     val total = col("total_events").cast("double")
     agg.select(
       col("bucket"), col("total_events"), col("error_events"),
@@ -280,16 +282,19 @@ object Views {
       col("l_quantity").cast("long").as("qty"),
       centsL(col("l_extendedprice")).as("gross_c"),
       centsL(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("net_c"))
-    val ranked = RankOps.withGroupedRank(f, "rn", Seq("day"),
-      Seq(col("net_c"), col("l_orderkey"), col("l_linenumber")), countCol = Some("n"))
+    val w = Window.partitionBy(col("day"))
+      .orderBy(col("net_c"), col("l_orderkey"), col("l_linenumber"))
+    val ranked = f
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("day"))).cast("long"))
     val daily = ranked.groupBy(col("day"), col("n").as("n_lines"))
       .agg(
         sum("qty").cast("long").as("total_qty"),
         countDistinct(col("o_custkey")).as("unique_customers"),
         sum(col("gross_c").cast("decimal(19,0)")).as("__g"),
         sum(col("net_c").cast("decimal(19,0)")).as("__nt"),
-        RankOps.valueAt(col("net_c"), expr("(n + 1) div 2")).as("__med"),
-        RankOps.valueAt(col("net_c"), ceil(col("n") * 0.9)).as("__p90"))
+        min(when(col("rn") === expr("(n + 1) div 2"), col("net_c"))).as("__med"),
+        min(when(col("rn") === ceil(col("n") * 0.9), col("net_c"))).as("__p90"))
       .withColumn("net_cents", col("__nt").cast("decimal(19,0)"))
       .withColumn("fiscal_year", year(col("day")).cast("long"))
       .withColumn("fiscal_quarter", quarter(col("day")).cast("long"))

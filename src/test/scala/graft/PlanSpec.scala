@@ -90,9 +90,12 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), "the rank offsets must broadcast")
   }
 
-  test("operational KPIs rank each hour bucket on the prefix core, never one partition") {
+  test("operational KPIs shuffle once on the bucket key") {
     val plan = formatted(graft.operators.Views.operationalKpis(spark, dir))
-    assertGroupedPrefix(plan, "bucket")
+    // one hash-partitioned exchange (the bucket key); the windows and the
+    // rollup all reuse that partitioning
+    assert("""(?m)^\(\d+\) Exchange""".r.findAllIn(plan).size == 1,
+      "operational KPIs should partition once by bucket")
     assert(!plan.contains("SinglePartition"), "collapsed to one partition")
   }
 

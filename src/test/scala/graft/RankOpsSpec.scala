@@ -175,12 +175,12 @@ class RankOpsSpec extends AnyFunSuite {
           .withColumn("n", count(lit(1)).over(inGroup))
       val viaHelper = helperRank(df, byValue)
       val viaWindow = windowRank(df, byValue)
-      val helperStats = stats(viaHelper, RankOps.valueAt(_, _))
+      val helperStats = stats(viaHelper, RankOps.valueAt(_, "rn", _))
       val windowStats = stats(viaWindow, (v, p) => min(when(col("rn") === p, v)))
       val orderStats = Seq(helperStats, windowStats).map(_.collect().toSet)
       val mads = Seq(
         mad(viaHelper, helperStats, helperRank(_, Seq(col("absdev"), col("id"))),
-          RankOps.valueAt(_, _)),
+          RankOps.valueAt(_, "rn", _)),
         mad(viaWindow, windowStats, windowRank(_, Seq(col("absdev"), col("id"))),
           (v, p) => min(when(col("rn") === p, v))))
         .map(_.collect().toSet)
@@ -276,20 +276,31 @@ class RankOpsSpec extends AnyFunSuite {
     assert("repartitionByRange".r.findAllIn(rankOps).size == 1)
   }
 
-  test("order statistics ride the grouped core: no row_number + count window pair remains") {
-    // the Scala side only: triple-quoted SQL oracles keep the window form,
-    // blanked here line for line so reported line numbers stay true
+  test("order statistics over few large groups ride the grouped core, not a window pair") {
+    // a row_number, or a whole-partition count, over a window keyed by one
+    // of these sorts or scans each whole group in one task; calendar
+    // buckets and per-key windows are numerous groups and stay plain
+    // Windows. The Scala side only: triple-quoted SQL oracles keep the
+    // window form, blanked here line for line so reported line numbers
+    // stay true
+    val fewGroups = Seq("country", "o_orderpriority", "customer_segment", "lang", "source")
     val sql = "(?s)\"{3}.*?\"{3}".r
-    val rankCol = """withColumn\("(\w+)",\s*row_number\(\)""".r
-    val countPair = """count\(lit\(1\)\)\.over\(\s*Window\.partitionBy\(\s*[^)\s]""".r
+    val windowVal = """val (\w+)\s*=\s*(Window\.partitionBy\([^\n]*)""".r
+    val rankOrCount =
+      """(row_number\(\)|count\(lit\(1\)\))\.over\(\s*(Window\.partitionBy\([^\n]*|\w+)""".r
     val offenders = mainSources.flatMap { f =>
       val src = sql.replaceAllIn(text(f), m => "\n" * m.matched.count(_ == '\n'))
+      val defs = windowVal.findAllMatchIn(src).toSeq
       def line(at: Int) = s"${f.getPath}:${src.take(at).count(_ == '\n') + 1}"
-      val selections = rankCol.findAllMatchIn(src).map(_.group(1)).toSeq.distinct.flatMap { rn =>
-        raw"""min\(when\(col\("$rn"\)\s*===""".r.findAllMatchIn(src)
-          .map(m => s"${line(m.start)}: selection on row_number column $rn")
+      rankOrCount.findAllMatchIn(src).flatMap { m =>
+        // a window val resolves to its nearest preceding definition
+        val spec = if (m.group(2).startsWith("Window")) m.group(2)
+          else defs.filter(d => d.group(1) == m.group(2) && d.start < m.start)
+            .lastOption.fold("")(_.group(2))
+        val wholeGroup = m.group(1) == "row_number()" || !spec.contains(".orderBy")
+        fewGroups.find(g => wholeGroup && spec.contains(s"\"$g\""))
+          .map(g => s"${line(m.start)}: ${m.group(1)} over a $g window")
       }
-      selections ++ countPair.findAllMatchIn(src).map(m => s"${line(m.start)}: rank-count pair")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
