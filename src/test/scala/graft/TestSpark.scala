@@ -6,11 +6,7 @@ import org.apache.spark.sql.SparkSession
   * test wall-clock otherwise). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("graft-test", "local[4]", 8)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
