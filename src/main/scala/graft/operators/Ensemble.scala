@@ -23,8 +23,7 @@ object Ensemble {
   import Exact._
 
   def anomalyEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    // persisted while the two grouped ranks read it twice each (the
-    // Quality.madOutliers reasoning)
+    // persisted while its two grouped ranks read it (see Quality.madOutliers)
     val o = Quality.countryCents(spark, dir).persist()
 
     // moment stats (z-score): shifted-data variance in exact integer cents

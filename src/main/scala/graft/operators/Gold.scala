@@ -95,7 +95,6 @@ object Gold {
       .withColumn("customer_lifetime_days",
         datediff(col("last_purchase"), col("first_purchase")).cast("long"))
       .drop("__spent")
-      .persist() // three ntile passes each range-sample this frame
 
     // Three global NTILE(5)s, each with customer_id as the unique tie-breaker
     // (matches NTILE(5) OVER (ORDER BY x DESC, customer_id) in the oracle).
@@ -105,9 +104,6 @@ object Gold {
       Seq(col("transaction_count").desc, col("customer_id").asc))
     val scored2 = RankOps.withGlobalNtile(scored1, "monetary_score", 5,
       Seq(col("total_spent").desc, col("customer_id").asc))
-    // each ntile pass localCheckpoints (and materializes via its offsets
-    // collect), so the lineage no longer reaches `metrics` — release it
-    metrics.unpersist()
 
     // NTILE over DESC ordering makes 1 the best score. The segment regex
     // ladder below is deliberately re-authored: the reference's own ladder

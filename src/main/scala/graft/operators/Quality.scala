@@ -127,9 +127,8 @@ object Quality {
     * 0.6745·(x-med)/MAD is a fixed IEEE sequence. MAD=0 groups emit NULL z
     * on both engines (explicit guard — engines disagree on x/0). */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
-    // persisted because each of the two grouped ranks evaluates its input
-    // twice (range sample + checkpoint): uncached, the orders-with-country
-    // join would run four times before the final join reads it once more
+    // persisted because the two grouped ranks and the final join all read
+    // it: uncached, the orders-with-country join would run three times
     val o = countryCents(spark, dir).persist()
     val mad = withCountryMad(o, countryCentsStats(o))
     // both ranks are checkpointed, so `mad` no longer reaches `o`

@@ -2,9 +2,15 @@ package graft.operators
 
 import graft.functions.PartitionPrefix
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  InterpretedOrdering, UnsafeProjection}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** Distributed global rank, grouped rank, NTILE and running sum — one
@@ -16,17 +22,29 @@ import scala.jdk.CollectionConverters._
   * for running sums) under `groupCols ++ sortCols` order: range-partition
   * on that order (each group occupies consecutive partitions) and
   * `localCheckpoint`; collect one row per (partition, group) — `count` and
-  * `sum(v)`, order-free, so that job sorts nothing — and fold them on the
-  * driver into each one's offset (the group's sum in earlier partitions)
-  * and total (its row count); then `sortWithinPartitions`, project the
-  * partition-local prefix ([[graft.functions.PartitionPrefix]]) and add the
-  * broadcast offset. The frame is never exchanged after the range shuffle.
+  * `sum(v)` — and fold them on the driver into each one's offset (the
+  * group's sum in earlier partitions) and total (its row count); then
+  * `sortWithinPartitions`, project the partition-local prefix
+  * ([[graft.functions.PartitionPrefix]]) and add the broadcast offset. The
+  * frame is never exchanged after the range shuffle.
+  *
+  * The offsets pass: a partition's rows all carry its index, so the
+  * per-(partition, group) totals are one partition-local fold over the
+  * checkpoint (`mapPartitionsWithIndex` + `collect`) — no exchange, no
+  * sort, no `limit` scan. A call costs 3 Spark jobs besides its input's
+  * own stages: the range sample, the range shuffle's map stage, and the
+  * offsets fold, which also materializes the checkpoint (4 when the
+  * sampler re-samples a skewed input partition). An input that would
+  * re-run a shuffle of its own (a join, an aggregate) is persisted while
+  * the range sample and the shuffle map read it, then released, so it is
+  * evaluated once; a scan, a checkpoint or a frame the caller already
+  * persisted is read twice instead.
   *
   * Why the checkpoint: the offsets are only valid for the exact boundaries
   * the range sampler drew, and a cache-evicted recompute could draw others
   * — silent rank corruption; a cut lineage fails loudly instead.
   * Why the collect is eager: the result stands on its own, so a caller may
-  * unpersist the input right after construction (`Gold.rfmSegments`).
+  * unpersist the input right after construction (`Quality.madOutliers`).
   * Why it is bounded: the fold has ≤ #partitions + #groups rows (groups
   * are contiguous) — tiny for the few-huge-groups shape these forms serve;
   * past [[MaxBoundedFrame]] rows it fails loudly rather than broadcast a
@@ -85,40 +103,83 @@ object RankOps {
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val keys = groupCols.map(col)
     val order = keys ++ sortCols
-    val ranged = df.repartitionByRange(parts, order: _*).localCheckpoint(false)
-    def withPrefix(f: DataFrame) = f
-      .withColumn("__pp", PartitionPrefix.of(summand, keys))
-      .withColumn("__pid", col("__pp.pid"))
-    val auxDf = withPrefix(ranged).groupBy(col("__pid") +: keys: _*)
-      .agg(count(lit(1)).as("__cnt"), coalesce(sum(summand.cast("long")), lit(0L)).as("__sum"))
-    val aux = auxDf.limit((MaxBoundedFrame + 1).toInt).collect()
+    // the range sample and the shuffle map both read the input: one that
+    // would re-run a shuffle of its own is persisted so it runs once
+    val input = if (rereadsCheaply(df)) df else df.persist()
+    val ranged =
+      try input.repartitionByRange(parts, order: _*).localCheckpoint(false)
+      finally if (input ne df) input.unpersist()
+    val aux = partitionTotals(ranged, keys, summand)
     if (aux.length > MaxBoundedFrame)
       throw new IllegalStateException(s"bounded-frame guard 'rank_offsets': more " +
         s"than $MaxBoundedFrame (partition, group) offset rows — too many groups " +
         "to broadcast; numerous small groups want Window.partitionBy(group)")
-    val nk = keys.size
-    val offsets = aux.groupBy(_.toSeq.slice(1, nk + 1)).values.flatMap { rows =>
-      val total = rows.map(_.getLong(nk + 1)).sum
+    val offsets = aux.groupBy(_._2).values.flatMap { rows =>
+      val total = rows.map(_._3).sum
       var acc = 0L
-      rows.sortBy(_.getInt(0)).map { r =>
-        val row = Row.fromSeq(r.toSeq.take(nk + 1) ++ Seq(acc, total))
-        acc = Math.addExact(acc, r.getLong(nk + 2))
+      rows.sortBy(_._1).map { case (pid, key, _, sum) =>
+        val row = Row.fromSeq(pid +: key.toSeq :+ acc :+ total)
+        acc = Math.addExact(acc, sum)
         row
       }
     }
-    val auxKeys = (0 to nk).map(i => s"__k$i")
-    val offSchema = StructType(auxDf.schema.take(nk + 1).zip(auxKeys)
-      .map { case (f, n) => f.copy(name = n) } ++
-      Seq(StructField("__off", LongType, false), StructField("__tot", LongType, false)))
+    val auxKeys = (0 to keys.size).map(i => s"__k$i")
+    val offSchema = StructType(StructField("__k0", IntegerType, false) +:
+      ranged.select(keys: _*).schema.zip(auxKeys.tail).map { case (f, n) => f.copy(name = n) } :+
+      StructField("__off", LongType, false) :+ StructField("__tot", LongType, false))
     val offDf = broadcast(spark.createDataFrame(offsets.toSeq.asJava, offSchema))
     val on = ((col("__pid") === col("__k0")) +:
       keys.zip(auxKeys.tail).map { case (k, a) => k <=> col(a) }).reduce(_ && _)
-    val joined = withPrefix(ranged.sortWithinPartitions(order: _*))
+    val joined = ranged.sortWithinPartitions(order: _*)
+      .withColumn("__pp", PartitionPrefix.of(summand, keys))
+      .withColumn("__pid", col("__pp.pid"))
       .join(offDf, on)
       .withColumn(outCol, col("__pp.p") + col("__off"))
     val out = totalCol.fold(joined)(c => joined.withColumn(c, col("__tot")))
-    (out.drop("__pp" +: "__pid" +: "__off" +: "__tot" +: auxKeys: _*),
-      aux.map(_.getLong(nk + 1)).sum)
+    (out.drop("__pp" +: "__pid" +: "__off" +: "__tot" +: auxKeys: _*), aux.map(_._3).sum)
+  }
+
+  /** True when reading `df` twice costs no more than caching it: it is
+    * already persisted, or its physical plan runs no shuffle (a scan, a
+    * checkpoint, a broadcast join onto either). */
+  private def rereadsCheaply(df: DataFrame): Boolean =
+    df.storageLevel != StorageLevel.NONE || {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      !plan.exists(_.isInstanceOf[ShuffleExchangeLike])
+    }
+
+  /** One row per (partition, group) of the range-partitioned checkpoint:
+    * (partition index, group key, row count, sum of the summand), in one
+    * partition-local pass — a partition is never exchanged, so the job
+    * sorts and shuffles nothing. Groups compare as the sort orders them
+    * (as [[PartitionPrefix]] does); each partition stops past
+    * [[MaxBoundedFrame]] groups, which trips the caller's guard. */
+  private def partitionTotals(ranged: DataFrame, keys: Seq[Column],
+                              summand: Column): Array[(Int, Row, Long, Long)] = {
+    val keyed = ranged.select(summand.cast(LongType) +: keys: _*)
+    val keySchema = StructType(keyed.schema.tail)
+    val keyTypes = keySchema.map(_.dataType)
+    val bound = MaxBoundedFrame
+    val totals = keyed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val keyOf = UnsafeProjection.create(keyTypes.zipWithIndex.map { case (t, i) =>
+        BoundReference(i + 1, t, nullable = true): Expression })
+      val groups = new java.util.TreeMap[InternalRow, Array[Long]](
+        InterpretedOrdering.forSchema(keyTypes))
+      while (rows.hasNext && groups.size <= bound) {
+        val r = rows.next()
+        val k = keyOf(r)
+        var t = groups.get(k)
+        if (t == null) { t = Array(0L, 0L); groups.put(k.copy(), t) }
+        t(0) += 1
+        if (!r.isNullAt(0)) t(1) = Math.addExact(t(1), r.getLong(0))
+      }
+      groups.asScala.iterator.map { case (k, t) => (pid, k, t(0), t(1)) }
+    }.collect()
+    val toRow = CatalystTypeConverters.createToScalaConverter(keySchema)
+    totals.map { case (pid, k, n, s) => (pid, toRow(k).asInstanceOf[Row], n, s) }
   }
 
   /** Adds `rankCol` = 1-based global row_number under `sortCols` ordering.

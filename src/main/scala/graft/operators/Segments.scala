@@ -131,13 +131,8 @@ object Segments {
     // segment-partitioned window would be ~9 tasks each sorting a whole
     // segment (100M+ customers at scale). countCol is safe here — the totals
     // frame is one row per RFM segment.
-    // persisted because the grouped rank evaluates its input twice (range
-    // sampling + checkpoint) — without the cache each pass re-assembles the
-    // whole rfmSegments join (the metrics-persist precedent in rfmSegments);
-    // freed by the caller's clearCache
     val rankInput = seg.crossJoin(asof)
       .withColumn("__days_since", datediff(col("__asof"), col("last_purchase")).cast("long"))
-      .persist()
     val ranked = RankOps.withGroupedRank(rankInput, "rn", Seq("customer_segment"),
       Seq(col("total_spent"), col("customer_id")), countCol = Some("n"))
     val agg = ranked.groupBy(col("customer_segment"), col("n").as("customer_count"))

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** Streaming conversion funnel — the stateful-incremental form of
   * [[graft.operators.Funnel.eventFunnel]]: per-user step-time state
@@ -20,71 +21,66 @@ import org.apache.spark.sql.functions._
   * later-ts event can lower it, and a step-k candidate's qualifying
   * condition (`ts > t_{k-1}`) only references state from strictly earlier
   * positions. So folding the cascade per batch — seeding each batch's
-  * running windows with the prior state via null-skipping `least` — lands
-  * on exactly the timestamps the one-shot cascade computes, wherever the
-  * boundaries fall (spec-pinned against the batch path, 1/2/4/7 batches).
+  * running windows with the prior state — lands on exactly the timestamps
+  * the one-shot cascade computes, wherever the boundaries fall
+  * (spec-pinned against the batch path, 1/2/4/7/16 batches).
   *
   * Scale shape: state is one row per ACTIVE user (bounded by users, not
-  * events); each micro-batch costs one user-keyed window pass over the
-  * batch + one outer merge with the state — the
-  * mapGroupsWithState cost model expressed as replayable DataFrame ops. */
+  * events); each micro-batch costs ONE exchange, on `user_id`. A user's
+  * prior state rides the batch as one more row with null `ts` and
+  * `event_id`, which the window's ASC NULLS FIRST order puts before the
+  * user's events, so the running `min(coalesce(p_k, candidate_k))` starts
+  * from the prior step times; the closing `groupBy(user_id)` reuses the
+  * window's partitioning and also emits users with state but no events
+  * this batch (their state row alone). No join, no `distinct`: the
+  * mapGroupsWithState cost model expressed as replayable DataFrame ops.
+  * State is read back with its declared schema, so no read infers one. */
 object StreamingFunnel {
 
   private val StepTypes = Seq("view", "click", "signup", "purchase")
 
-  private def emptyState(spark: SparkSession): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("t1",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("t2",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("t3",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("t4",
-        org.apache.spark.sql.types.TimestampType)))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private val StateSchema = StructType(StructField("user_id", LongType) +:
+    (1 to 4).map(k => StructField(s"t$k", TimestampType)))
+
+  private def emptyState(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StateSchema)
+
+  private def readState(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(StateSchema).parquet(path)
 
   /** Fold one ts-ordered micro-batch into the per-user state. Events must
     * not precede (in (ts, event_id) order) anything already folded — the
     * ts-ordered-ingest contract that makes the state monotone. */
   private[graft] def advance(prior: DataFrame, events: DataFrame): DataFrame = {
+    val noTime = lit(null).cast(TimestampType)
     val ev = events.filter(col("event_type").isin(StepTypes: _*))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-    val pj = ev.join(
-      prior.select(col("user_id"), col("t1").as("p1"), col("t2").as("p2"),
-        col("t3").as("p3"), col("t4").as("p4")),
-      Seq("user_id"), "left")
+      .select(Seq(col("user_id"), col("event_id"), col("event_type"), col("ts")) ++
+        (1 to 4).map(k => noTime.as(s"p$k")): _*)
+    val state = prior.select(Seq(col("user_id"),
+        lit(null).cast(ev.schema("event_id").dataType).as("event_id"),
+        lit(null).cast("string").as("event_type"), noTime.as("ts")) ++
+      (1 to 4).map(k => col(s"t$k").as(s"p$k")): _*)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the batch cascade seeded with prior state: least() skips nulls, and
-    // prior times come from strictly earlier stream positions
-    val x1 = pj.withColumn("__r1",
-      least(col("p1"), min(when(col("event_type") === "view", col("ts"))).over(w)))
+    // the batch cascade seeded with prior state: the state row sorts first
+    // and coalesce() lets it stand in for its own (null) candidate
+    val x1 = ev.unionByName(state)
+      .withColumn("__q1", when(col("event_type") === "view", col("ts")))
+      .withColumn("__r1", min(coalesce(col("p1"), col("__q1"))).over(w))
     val x2 = x1
       .withColumn("__q2",
         when(col("event_type") === "click" && col("ts") > col("__r1"), col("ts")))
-      .withColumn("__r2", least(col("p2"), min(col("__q2")).over(w)))
+      .withColumn("__r2", min(coalesce(col("p2"), col("__q2"))).over(w))
     val x3 = x2
       .withColumn("__q3",
         when(col("event_type") === "signup" && col("ts") > col("__r2"), col("ts")))
-      .withColumn("__r3", least(col("p3"), min(col("__q3")).over(w)))
+      .withColumn("__r3", min(coalesce(col("p3"), col("__q3"))).over(w))
     val x4 = x3
       .withColumn("__q4",
         when(col("event_type") === "purchase" && col("ts") > col("__r3"), col("ts")))
-    val touched = x4.groupBy("user_id").agg(
-      least(min(col("p1")),
-        min(when(col("event_type") === "view", col("ts")))).as("t1"),
-      least(min(col("p2")), min(col("__q2"))).as("t2"),
-      least(min(col("p3")), min(col("__q3"))).as("t3"),
-      least(min(col("p4")), min(col("__q4"))).as("t4"))
-    // users with state but no events this batch carry forward untouched
-    val carried = prior.join(
-      ev.select("user_id").distinct(), Seq("user_id"), "left_anti")
-    touched.unionByName(carried)
+    val steps = (1 to 4).map(k => min(coalesce(col(s"p$k"), col(s"__q$k"))).as(s"t$k"))
+    x4.groupBy("user_id").agg(steps.head, steps.tail: _*)
   }
 
   /** foreachBatch body with the exactly-once write-then-mark protocol:
@@ -97,7 +93,7 @@ object StreamingFunnel {
       if (!ExactlyOnce.isCommitted(spark, stateDir, batchId)) {
         val prior =
           if (batchId == 0L) emptyState(spark)
-          else spark.read.parquet(s"$stateDir/batch=${batchId - 1}")
+          else readState(spark, s"$stateDir/batch=${batchId - 1}")
         advance(prior, batch)
           .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
         ExactlyOnce.commit(spark, stateDir, batchId)
@@ -122,7 +118,7 @@ object StreamingFunnel {
     (1 to nBatches).foreach { k =>
       sink(banded.filter(col("__b") === k).drop("__b"), (k - 1).toLong)
     }
-    val finalState = spark.read.parquet(s"$stateDir/batch=${nBatches - 1}")
+    val finalState = readState(spark, s"$stateDir/batch=${nBatches - 1}")
     graft.operators.Funnel.summarizeSteps(finalState)
   }
 }

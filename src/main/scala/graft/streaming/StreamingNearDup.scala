@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.dedup.{IncrementalDedup, MinHashLsh}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +36,9 @@ import org.apache.spark.sql.functions._
   * bucket join probes batch buckets against the index (candidates = batch ×
   * collision rate, never index × index); shingles re-attach for candidate
   * ids only. The index grows by one parquet dir per batch — compact it
-  * offline by rewriting into `corpus/` whenever dir count matters.
+  * offline by rewriting into `corpus/` whenever dir count matters. Index
+  * dirs are read through [[graft.Tables.parquet]], so each dir's schema is
+  * inferred once per file listing, not once per later batch.
   */
 object StreamingNearDup {
 
@@ -94,11 +97,11 @@ object StreamingNearDup {
     recoverCorpus(spark, indexDir)
     val committed = ExactlyOnce.committedBatches(spark, indexDir)
     if (committed.isEmpty) return 0
-    val corpusB = spark.read.parquet(s"$indexDir/corpus/buckets")
-    val corpusSh = spark.read.parquet(s"$indexDir/corpus/shingles")
-    val allB = (corpusB +: committed.map(d => spark.read.parquet(s"$d/buckets")))
+    val corpusB = Tables.parquet(spark, s"$indexDir/corpus/buckets")
+    val corpusSh = Tables.parquet(spark, s"$indexDir/corpus/shingles")
+    val allB = (corpusB +: committed.map(d => Tables.parquet(spark, s"$d/buckets")))
       .reduce(_.unionByName(_))
-    val allSh = (corpusSh +: committed.map(d => spark.read.parquet(s"$d/shingles")))
+    val allSh = (corpusSh +: committed.map(d => Tables.parquet(spark, s"$d/shingles")))
       .reduce(_.unionByName(_))
       .dropDuplicates("doc_id")          // a replayed append may duplicate
     // write-then-swap: stage the merged index fully, then swap via two
@@ -144,9 +147,9 @@ object StreamingNearDup {
     val bb = IncrementalDedup.bandBuckets(signed, numHashes, bands)
       .select("doc_id", "band", "bucket")
     val committed = ExactlyOnce.committedBatches(spark, indexDir)
-    val corpusB = spark.read.parquet(s"$indexDir/corpus/buckets")
+    val corpusB = Tables.parquet(spark, s"$indexDir/corpus/buckets")
       .withColumn("other_is_corpus", lit(true))
-    val earlierB = unionAll(committed.map(d => spark.read.parquet(s"$d/buckets")))
+    val earlierB = unionAll(committed.map(d => Tables.parquet(spark, s"$d/buckets")))
       .map(_.withColumn("other_is_corpus", lit(false)))
     val selfB = bb.withColumn("other_is_corpus", lit(false))
     val index = (Seq(corpusB) ++ earlierB ++ Seq(selfB))
@@ -163,8 +166,8 @@ object StreamingNearDup {
       // decision doesn't depend on which duplicate row survives
       .groupBy("doc_id", "other_id")
       .agg(max("other_is_corpus").as("other_is_corpus"))
-    val corpusSh = spark.read.parquet(s"$indexDir/corpus/shingles")
-    val earlierSh = unionAll(committed.map(d => spark.read.parquet(s"$d/shingles")))
+    val corpusSh = Tables.parquet(spark, s"$indexDir/corpus/shingles")
+    val earlierSh = unionAll(committed.map(d => Tables.parquet(spark, s"$d/shingles")))
     // Shingles are the probe's heavy payload (guide §2.3/§8.4: decide with
     // small rows, move big rows once). The old shape globally dropDuplicated
     // corpus∪earlier∪self per micro-batch — a corpus-wide shuffle whose only
@@ -228,7 +231,6 @@ object StreamingNearDup {
     * streams own durable dirs. */
   def streamingNearDupReplay(spark: SparkSession, dir: String,
                              nBatches: Int = 4): DataFrame = {
-    import graft.Tables
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("source") =!= IncrementalDedup.BatchSource)
     val indexDir = ReplayScratch.dir("snd_replay_idx")
@@ -243,7 +245,7 @@ object StreamingNearDup {
     (1 to nBatches).foreach { k =>
       sink(banded.filter(col("__b") === k).select("doc_id", "text"), (k - 1).toLong)
     }
-    spark.read.parquet(ExactlyOnce.committedBatches(spark, outDir): _*)
+    Tables.parquet(spark, ExactlyOnce.committedBatches(spark, outDir): _*)
       .select("doc_id", "decision", "keeper_id", "jaccard")
   }
 }

@@ -71,6 +71,39 @@ class MemoSpec extends AnyFunSuite {
       "count served from before the in-place rewrite")
   }
 
+  test("Tables.read resolves a schema once per file listing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo_schema").toString
+    (0L until 5L).toDF("id").write.parquet(s"$dir/t.parquet")
+    val group = "memo-schema-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def readJobs(): (Int, Seq[String]) = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "Tables.read")
+      val cols = try Tables.read(spark, dir, "t").columns.toSeq finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      (jobs.get, cols)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (first, cols) = readJobs()
+      assert(first >= 1 && cols == Seq("id"), "the first read infers the schema")
+      assert(readJobs() == (0, Seq("id")), "a re-read of an unchanged listing launched jobs")
+      // an in-place rewrite that adds a column changes the listing
+      (0L until 3L).map(i => (i, i.toString)).toDF("id", "tag")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(readJobs()._2 == Seq("id", "tag"), "schema served from before the rewrite")
+      assert(Tables.read(spark, dir, "t").count() == 3L)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("Memo is the only module-level cache in the library") {
     // the tools/ mains keep job-timing maps local to main, not as fields
     val root = new java.io.File("src/main/scala/graft")

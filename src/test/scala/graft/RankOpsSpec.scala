@@ -238,15 +238,15 @@ class RankOpsSpec extends AnyFunSuite {
         "grouped_count" -> jobsOf(RankOps.withGroupedRank(grouped, "r", Seq("g"), order,
           countCol = Some("n"))),
         "cumsum" -> jobsOf(RankOps.withGlobalCumSum(sampleDf(1237), "c", col("v"), order)))
-      // the previous per-form implementations, on these frames: 6 jobs
-      // each, 7 for cumsum (its __pid window re-exchanged the frame)
-      val parent = Map("rank" -> 6, "ntile" -> 6, "grouped" -> 6, "grouped_count" -> 6,
-        "cumsum" -> 7)
-      assert(counts("rank") == parent("rank") && counts("ntile") == parent("ntile"),
-        s"global forms must keep their job counts: $counts vs $parent")
-      Seq("grouped", "grouped_count", "cumsum").foreach { f =>
-        assert(counts(f) <= parent(f), s"$f launched ${counts(f)} jobs, was ${parent(f)}")
-      }
+      // the per-form implementations launched 6 jobs each on these frames
+      // (7 for cumsum), and the exchanged offsets collect kept the shared
+      // core at 6; the partition-local offsets pass makes every form 5:
+      // the range sample, the range shuffle's map stage, the offsets fold
+      // (which materializes the checkpoint), then the offsets broadcast
+      // and the write
+      val want = Map("rank" -> 5, "ntile" -> 5, "grouped" -> 5, "grouped_count" -> 5,
+        "cumsum" -> 5)
+      assert(counts == want, s"job counts per form: $counts, want $want")
     } finally sc.removeSparkListener(listener)
   }
 

@@ -9,9 +9,9 @@ class StreamingFunnelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
-  test("batch-boundary invariance: 1/2/4/7 micro-batches all equal the batch cascade") {
+  test("batch-boundary invariance: 1/2/4/7/16 batches equal the batch cascade") {
     val batch = Funnel.eventFunnel(spark, dir).collect().map(_.toString).sorted
-    Seq(1, 2, 4, 7).foreach { n =>
+    Seq(1, 2, 4, 7, 16).foreach { n =>
       val streamed = StreamingFunnel.streamingFunnelReplay(spark, dir, nBatches = n)
         .collect().map(_.toString).sorted
       assert(streamed.sameElements(batch), s"nBatches=$n diverged from the batch path")
@@ -60,5 +60,49 @@ class StreamingFunnelSpec extends AnyFunSuite {
     assert(st.filter(col("t4").isNotNull && (col("t3").isNull ||
       col("t2").isNull || col("t1").isNull)).count() == 0)
     st.unpersist()
+  }
+
+  test("a micro-batch folds in one Exchange and no Join; a 4-batch replay constructs in ≤16 jobs") {
+    val ev = Tables.events(spark, dir)
+      .filter(col("event_type").isin("view", "click", "signup", "purchase"))
+      .select("user_id", "event_id", "event_type", "ts")
+    val stateDir = java.nio.file.Files.createTempDirectory("sfunnel_plan").toString
+    val banded = graft.operators.RankOps
+      .withGlobalNtile(ev, "__b", 2, Seq(col("ts"), col("event_id")))
+      .localCheckpoint(false)
+    StreamingFunnel.funnelSink(stateDir)(banded.filter(col("__b") === 1).drop("__b"), 0L)
+    val prior = spark.read.parquet(s"$stateDir/batch=0")
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      StreamingFunnel.advance(prior, banded.filter(col("__b") === 2).drop("__b"))
+        .explain("formatted")
+    }
+    val plan = out.toString
+    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).toSet.size
+    assert(exchanges == 1, s"one fold planned $exchanges exchanges:\n$plan")
+    assert(!plan.contains("Join"), s"one fold planned a join:\n$plan")
+
+    // the replay's eager work: the banding rank, its checkpoint and each
+    // batch's sink write; the parent's per-batch join, distinct, anti-join
+    // and state-schema inference made it 33
+    val group = "sfunnel-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    Tables.events(spark, dir).schema // the input's schema is set-up, not construction
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "streaming funnel replay")
+      try StreamingFunnel.streamingFunnelReplay(spark, dir, nBatches = 4)
+      finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    spark.catalog.clearCache()
+    assert(jobs.get <= 16, s"a 4-batch replay constructed in ${jobs.get} jobs")
   }
 }
