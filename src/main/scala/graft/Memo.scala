@@ -36,6 +36,10 @@ object Memo {
     }
   }
 
+  /** The value under `(kind, key)` if one is held; never loads. */
+  def peek[V](kind: String, key: Any): Option[V] =
+    Option(store.synchronized(store.get((kind, key)))).map(_.asInstanceOf[V])
+
   /** Forget one entry: a rebuild replaced what it summarizes. */
   def invalidate(kind: String, key: Any): Unit = store.synchronized(store.remove((kind, key)))
 

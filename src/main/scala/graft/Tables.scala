@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver's TPC-H-ish parquet tables (TESTDATA.md) plus the
   * shared sales-fact join every gold query consumes.
@@ -23,7 +24,10 @@ object Tables {
     * modification time) under them, and `spark.sql.legacy.parquet.nanosAsLong`:
     * an in-place rewrite changes the listing and misses (the [[PlanKey]]
     * standard), and the conf decides whether `events`' ns timestamps read
-    * as longs, so a read under the other setting is another schema. A
+    * as longs. A schema inferred with the conf off holds no ns column
+    * (Spark refuses to infer one), so it is valid under both settings and
+    * serves reads after [[events]] turns the conf on; one inferred with it
+    * on may hold ns-as-long columns and is never reused with it off. A
     * missing path falls through to Spark's own error. On a 4-core box, a
     * warm JVM resolves one sf0.1 input in about 11 ms with its schema given
     * against about 95 ms with the footer job. */
@@ -41,13 +45,15 @@ object Tables {
         }
         out.result()
       }
-      val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+      val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean
       var inferred: Option[DataFrame] = None // a miss returns the frame it inferred
-      val schema = Memo.get("tables.schema", (paths, listing, nanosAsLong)) {
+      val reusable =
+        if (nanosAsLong) Memo.peek[StructType]("tables.schema", (paths, listing, false)) else None
+      val schema = reusable.getOrElse(Memo.get("tables.schema", (paths, listing, nanosAsLong)) {
         val df = spark.read.parquet(paths: _*)
         inferred = Some(df)
         df.schema
-      }
+      })
       inferred.getOrElse(spark.read.schema(schema).parquet(paths: _*))
     }
   }

@@ -649,9 +649,6 @@ object Ann {
     s"SELECT COUNT(*) FROM (SELECT DISTINCT " +
       (0 until IvfDims).map(i => s"x$i").mkString(", ") + s" FROM $fCte)"
 
-  /** q20-quantized embedding as exact longs. */
-  private def qeLong(c: Column): Column = transform(quantize(c), x => x.cast("long"))
-
   /** Spherical features: each q20 component re-projected onto the 2^20
     * sphere (round(qe·2^20/||qe||) — exact-integer in, one portable
     * division + round out), so Euclidean Lloyd's clusters ANGULAR
@@ -659,21 +656,20 @@ object Ann {
     * differences stop pulling list boundaries (on the near-unit test
     * embeddings the raw and spherical fits measure alike; on real
     * mixed-norm corpora only the sphere is correct). Vectors shorter than
-    * IvfDims zero-pad; the zero vector maps to the origin (both engines). */
-  private[graft] def ivfProj(df: DataFrame, emb: String): DataFrame = {
-    val qe = qeLong(col(emb)).as("__qe")
-    val base = df.select(col("*"), qe)
-    val nrm = aggregate(transform(col("__qe"), v => v * v), lit(0L), (a, v) => a + v)
-    val withN = base.withColumn("__nrm", nrm)
-    withN.select(col("*") +:
-      (0 until IvfDims).map { d =>
-        val q = coalesce(try_element_at(col("__qe"), lit(d + 1)), lit(0L))
-        when(col("__nrm") === 0L, lit(0L))
-          .otherwise(round(q.cast("double") * lit(1048576.0) /
-            sqrt(col("__nrm").cast("double")), 0).cast("long")).as(s"x$d")
-      }: _*)
-      .drop("__qe", "__nrm")
-  }
+    * IvfDims zero-pad; the zero vector maps to the origin (both engines).
+    *
+    * The whole projection is one [[graft.functions.SphereQ20]] call whose
+    * loop is a static method: HotSpot never JIT-compiles a method over
+    * 8,000 bytecodes, and the 64-column projections built on this frame
+    * (z columns, [[graft.functions.KMeansAssign]]) generate methods past
+    * that limit. The declarative chain it replaced (`transform` +
+    * `aggregate`, both CodegenFallback, plus 64 BigDecimal rounds) also
+    * kept IVF featurization out of whole-stage codegen. */
+  private[graft] def ivfProj(df: DataFrame, emb: String): DataFrame =
+    df.select(col("*"), graft.functions.SphereQ20.of(col(emb), IvfDims).as("__x"))
+      .select(col("*") +:
+        (0 until IvfDims).map(d => element_at(col("__x"), d + 1).as(s"x$d")): _*)
+      .drop("__x")
 
   /** The probe + exact-re-score tail shared by the fit-per-session and
     * persisted-index IVF paths: rank every query's z-vector against the

@@ -22,11 +22,18 @@ object Collapse {
     * digest (the Ann.cachedCount pattern): every near-dup query re-probes
     * the same corpus, and a reused factor can only flip the adaptive choice
     * between two output-identical pipelines. */
-  def duplicationFactor(df: DataFrame, identity: Column): Double =
+  def duplicationFactor(df: DataFrame, identity: Column): Double = {
+    val (n, d) = rowsAndIdentities(df, identity)
+    if (d == 0) 1.0 else n.toDouble / d.toDouble
+  }
+
+  /** (rows, approximate distinct identities) behind [[duplicationFactor]],
+    * from the same memoized scan: a caller that gates on the factor also
+    * gets the row count without another job. */
+  def rowsAndIdentities(df: DataFrame, identity: Column): (Long, Long) =
     graft.Memo.get("collapse.factor", graft.PlanKey.digest(df.select(identity.as("__id")))) {
       val r = df.agg(count(lit(1)).as("n"), approx_count_distinct(identity).as("d")).head()
-      val (n, d) = (r.getLong(0), r.getLong(1))
-      if (d == 0) 1.0 else n.toDouble / d.toDouble
+      (r.getLong(0), r.getLong(1))
     }
 
   /** Collapse only pays when copies are plural enough to beat its extra

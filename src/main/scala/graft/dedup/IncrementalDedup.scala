@@ -83,11 +83,14 @@ object IncrementalDedup {
     // per-(content, side) representatives bounds the bucket join by
     // distinct content; the fan-back is |batch| rows. Gated on measured
     // duplication so low-dup corpora keep the direct single-pass plan.
-    if (threshold <= 1.0 &&
-        Collapse.duplicationFactor(docs, Collapse.normHash) >= Collapse.CollapseThreshold)
-      incrementalNearDupCollapsed(docs, threshold, numHashes, bands)
-    else
-      incrementalNearDupDirect(docs, threshold, numHashes, bands)
+    val collapse = threshold <= 1.0 &&
+      Collapse.duplicationFactor(docs, Collapse.normHash) >= Collapse.CollapseThreshold
+    // the batch's bucket rows number at most bands × |docs|: the same
+    // memoized scan bounds them, with no job of its own
+    val broadcastProbe = Collapse.rowsAndIdentities(docs, Collapse.normHash)._1 * bands <=
+      graft.operators.GraphOps.BroadcastRanksMaxNodes
+    if (collapse) incrementalNearDupCollapsed(docs, threshold, numHashes, bands, broadcastProbe)
+    else incrementalNearDupDirect(docs, threshold, numHashes, bands, broadcastProbe)
   }
 
   /** Rep-level probe + member fan-back. Why the fan-back is EXACT (not an
@@ -111,7 +114,8 @@ object IncrementalDedup {
     * Identical content ⇒ identical signatures ⇒ identical banding, so
     * collapse never changes LSH recall either. */
   private[graft] def incrementalNearDupCollapsed(docs: DataFrame, threshold: Double,
-                                          numHashes: Int, bands: Int): DataFrame = {
+                                          numHashes: Int, bands: Int,
+                                          broadcastProbe: Boolean = false): DataFrame = {
     val hashed = docs
       .withColumn("h", Collapse.normHash)
       .withColumn("is_batch", col("source") === BatchSource)
@@ -125,7 +129,7 @@ object IncrementalDedup {
       .localCheckpoint(false)
     val repDocs = docs.join(
       members.filter(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
-    val repDecisions = incrementalNearDupDirect(repDocs, threshold, numHashes, bands)
+    val repDecisions = incrementalNearDupDirect(repDocs, threshold, numHashes, bands, broadcastProbe)
       .withColumnRenamed("doc_id", "rep")
       .withColumnRenamed("decision", "rep_decision")
       .withColumnRenamed("keeper_id", "rep_keeper")
@@ -153,8 +157,13 @@ object IncrementalDedup {
           .otherwise(lit(null).cast("double")).as("jaccard"))
   }
 
+  /** `broadcastProbe` pins the batch buckets as the broadcast side. Left to
+    * AQE, a corpus small enough to broadcast races the batch: whichever
+    * shuffle stage finishes first is broadcast, so the join's generated
+    * class changed from run to run and a warm pass recompiled it. */
   private[graft] def incrementalNearDupDirect(docs: DataFrame, threshold: Double,
-                                       numHashes: Int, bands: Int): DataFrame = {
+                                       numHashes: Int, bands: Int,
+                                       broadcastProbe: Boolean = false): DataFrame = {
     val signed = MinHashLsh.withSignatures(MinHashLsh.shingleDocs(docs), numHashes)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .localCheckpoint(false)
@@ -165,7 +174,7 @@ object IncrementalDedup {
     val index = buckets
       .select(col("band"), col("bucket"), col("doc_id").as("other_id"),
         (col("source") =!= BatchSource).as("other_is_corpus"))
-    val cand = probe.join(index, Seq("band", "bucket"))
+    val cand = (if (broadcastProbe) broadcast(probe) else probe).join(index, Seq("band", "bucket"))
       .filter(col("other_id") =!= col("doc_id"))
       // a batch doc defers only to EARLIER batch docs (min-id keeper rule);
       // corpus docs match regardless of id

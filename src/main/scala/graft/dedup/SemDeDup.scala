@@ -296,12 +296,15 @@ object SemDeDup {
       .agg(max(struct(col("__cos").as("c"), (-col("s_id")).as("nid"))).as("__m"))
       .select(col("b_id"), col("__m.c").as("corpus_cos"),
         (-col("__m.nid")).as("corpus_match"))
-    // best smaller-id batch-rep match
-    val bb = bAssigned.select(col("b_id").as("o_id"), col("cluster"),
-      col("b_emb").as("o_emb"))
-    val batchBest = bAssigned.join(bb, Seq("cluster"))
-      .filter(col("o_id") < col("b_id"))
-      .withColumn("__cos", Ann.fixedPointCosine(col("b_emb"), col("o_emb")))
+    // best smaller-id batch-rep match: a self-join of the one checkpoint
+    // under two aliases, so both sides plan the same exchange and AQE reuses
+    // it — with two equal-sized stages, whichever finished first was
+    // broadcast, and the join's generated class changed from run to run
+    val (b, o) = (bAssigned.as("b"), bAssigned.as("o"))
+    val batchBest = b.join(o, col("b.cluster") === col("o.cluster") &&
+        col("o.b_id") < col("b.b_id"))
+      .select(col("b.b_id").as("b_id"), col("o.b_id").as("o_id"),
+        Ann.fixedPointCosine(col("b.b_emb"), col("o.b_emb")).as("__cos"))
       .filter(col("__cos") >= tau)
       .groupBy("b_id")
       .agg(max(struct(col("__cos").as("c"), (-col("o_id")).as("nid"))).as("__m"))

@@ -21,7 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * form walks each 64-float array four times and materializes the quantized
   * intermediates; on the near-dup candidate path that measured 23× slower
   * than a fused loop. NULL if either side is null, lengths differ, or a
-  * norm is zero.
+  * norm is zero. The interpreted and generated paths both call the static
+  * [[ArrayCosineQ20.cosine]], so the arithmetic is written once and the
+  * loop is a small method HotSpot compiles on its own.
   */
 case class ArrayCosineQ20(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -36,56 +38,15 @@ case class ArrayCosineQ20(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "array_cosine_q20"
 
-  @inline private def q20(x: Double): Double = {
-    val v = x * 1048576.0
-    if (v >= 0) math.floor(v + 0.5) else math.ceil(v - 0.5)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) null
-    else {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < n) {
-        val xi = q20(x.getFloat(i).toDouble)
-        val yi = q20(y.getFloat(i).toDouble)
-        dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-      }
-      val nn = nx * ny
-      if (nn == 0.0) null else dot / math.sqrt(nn)
-    }
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayCosineQ20.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val nn = ctx.freshName("nn")
+      val c = ctx.freshName("c")
       s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $xv = ((double) $x.getFloat($i)) * 1048576.0;
-         |    final double $yv = ((double) $y.getFloat($i)) * 1048576.0;
-         |    final double $xi = $xv >= 0 ? java.lang.Math.floor($xv + 0.5) : java.lang.Math.ceil($xv - 0.5);
-         |    final double $yi = $yv >= 0 ? java.lang.Math.floor($yv + 0.5) : java.lang.Math.ceil($yv - 0.5);
-         |    $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |  }
-         |  final double $nn = $nx * $ny;
-         |  if ($nn == 0.0) { ${ev.isNull} = true; } else { ${ev.value} = $dot / java.lang.Math.sqrt($nn); }
-         |}
+         |final java.lang.Double $c = graft.functions.ArrayCosineQ20.cosine($x, $y);
+         |if ($c == null) { ${ev.isNull} = true; } else { ${ev.value} = $c.doubleValue(); }
        """.stripMargin
     })
 
@@ -95,6 +56,24 @@ case class ArrayCosineQ20(left: Expression, right: Expression)
 
 object ArrayCosineQ20 {
   val info = new ExpressionInfo(classOf[ArrayCosineQ20].getName, "array_cosine_q20")
+
+  /** The score of one pair, null when the lengths differ or a norm is
+    * zero. Quantization is [[SphereQ20.halfUp]], the IVF featurization's
+    * rule: on float·2^20 it equals `round(x·1048576.0)` with HALF_UP ties. */
+  def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) null
+    else {
+      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+      while (i < n) {
+        val xi = SphereQ20.halfUp(x.getFloat(i).toDouble * 1048576.0)
+        val yi = SphereQ20.halfUp(y.getFloat(i).toDouble * 1048576.0)
+        dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
+      }
+      val nn = nx * ny
+      if (nn == 0.0) null else dot / math.sqrt(nn)
+    }
+  }
 
   def register(spark: SparkSession): Unit = {
     val fid = FunctionIdentifier("array_cosine_q20")

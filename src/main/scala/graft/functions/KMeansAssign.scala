@@ -17,11 +17,17 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * `transform`/`array_min`/`array_position` are CodegenFallback (an
   * interpreted walk per row per Lloyd's iteration), and a literal-centers
   * CASE ladder inlines k×d scalar constants into the generated source, so
-  * every iteration's new centers force a fresh Janino compile. Here the
-  * centers ride in ONE array literal (a reference object in generated
-  * code), so the source is iteration-invariant — one compile per fit, tight
-  * primitive loops per row. The inner accumulation `d += t·t` in ascending
-  * dimension order IS the left-associated sum the oracle writes out.
+  * every iteration's new centers force a fresh Janino compile. Here
+  * foldable centers are converted once to a `double[][]` reference object,
+  * so the generated source is the same for every set of centers — one
+  * compile per fit shape.
+  *
+  * Why the loop is the static [[KMeansAssign.argmin]] and not generated
+  * source: HotSpot never JIT-compiles a method over 8,000 bytecodes, and
+  * the wide projections that call this kernel (the IVF family's 64 z
+  * columns) generate methods past that limit, so an inlined argmin ran in
+  * the bytecode interpreter — about 15× slower than the same loop in a
+  * narrow projection. As its own small method it compiles on its own.
   */
 case class KMeansAssign(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -29,57 +35,25 @@ case class KMeansAssign(left: Expression, right: Expression) extends BinaryExpre
   override def prettyName: String = "kmeans_assign"
   override def nullIntolerant: Boolean = true
 
+  /** Foldable centers (every caller passes `typedLit`), converted once. */
+  @transient private lazy val foldedCenters: Array[Array[Double]] =
+    if (right.foldable) KMeansAssign.matrix(right.eval().asInstanceOf[ArrayData]) else null
+
   override def nullSafeEval(z: Any, cs: Any): Any = {
-    val zv = z.asInstanceOf[ArrayData]
-    val cv = cs.asInstanceOf[ArrayData]
-    val k = cv.numElements()
-    val nd = zv.numElements()
-    var best = 0L
-    var bestD = Double.PositiveInfinity
-    var j = 0
-    while (j < k) {
-      val c = cv.getArray(j)
-      var d = 0.0
-      var i = 0
-      while (i < nd) {
-        val t = zv.getDouble(i) - c.getDouble(i)
-        d += t * t
-        i += 1
-      }
-      if (d < bestD) { bestD = d; best = j.toLong }
-      j += 1
-    }
-    best
+    val centers =
+      if (right.foldable) foldedCenters else KMeansAssign.matrix(cs.asInstanceOf[ArrayData])
+    KMeansAssign.argmin(z.asInstanceOf[ArrayData].toDoubleArray(), centers)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val folded =
+      if (right.foldable) Some(ctx.addReferenceObj("centers", foldedCenters, "double[][]"))
+      else None
     nullSafeCodeGen(ctx, ev, (zv, cv) => {
-      val k = ctx.freshName("k")
-      val nd = ctx.freshName("nd")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      s"""
-         |final int $k = $cv.numElements();
-         |final int $nd = $zv.numElements();
-         |long $best = 0L;
-         |double $bestD = Double.POSITIVE_INFINITY;
-         |for (int $j = 0; $j < $k; $j++) {
-         |  final org.apache.spark.sql.catalyst.util.ArrayData $c = $cv.getArray($j);
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $nd; $i++) {
-         |    final double $t = $zv.getDouble($i) - $c.getDouble($i);
-         |    $d += $t * $t;
-         |  }
-         |  if ($d < $bestD) { $bestD = $d; $best = (long) $j; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
+      val centers = folded.getOrElse(s"graft.functions.KMeansAssign.matrix($cv)")
+      s"${ev.value} = graft.functions.KMeansAssign.argmin($zv.toDoubleArray(), $centers);"
     })
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): KMeansAssign =
@@ -94,6 +68,34 @@ object KMeansAssign {
         fid, new ExpressionInfo(classOf[KMeansAssign].getName, "kmeans_assign"),
         (children: Seq[Expression]) => KMeansAssign(children.head, children(1)))
   }
+
+  /** The index of the center nearest `z`. The accumulation `d += t·t` in
+    * ascending dimension order IS the left-associated sum the oracle
+    * writes out; a strict `<` keeps ties on the smallest index. */
+  def argmin(z: Array[Double], centers: Array[Array[Double]]): Long = {
+    val nd = z.length
+    var best = 0L
+    var bestD = Double.PositiveInfinity
+    var j = 0
+    while (j < centers.length) {
+      val c = centers(j)
+      var d = 0.0
+      var i = 0
+      while (i < nd) {
+        val t = z(i) - c(i)
+        d += t * t
+        i += 1
+      }
+      if (d < bestD) { bestD = d; best = j.toLong }
+      j += 1
+    }
+    best
+  }
+
+  /** `array<array<double>>` as a JVM matrix (null stays null). */
+  def matrix(cs: ArrayData): Array[Array[Double]] =
+    if (cs == null) null
+    else Array.tabulate(cs.numElements())(j => cs.getArray(j).toDoubleArray())
 
   /** Column wrapper — direct catalyst construction, session-independent
     * (see [[Native]]). */

@@ -2,9 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal bridge into two `private[sql]` seams that custom logical plans
-  * need (the standard extension-library idiom — e.g. how OSS geo/timeseries
-  * Spark extensions construct DataFrames over injected plan nodes):
+/** Minimal bridge into the `private[sql]` seams that custom logical plans
+  * and native kernels need (the standard extension-library idiom — e.g. how
+  * OSS geo/timeseries Spark extensions construct DataFrames over injected
+  * plan nodes):
   *
   *  - `Dataset.ofRows`: wrap a hand-built LogicalPlan as a DataFrame;
   *  - `queryExecution.analyzed`: the resolved plan + output attributes of an
@@ -32,4 +33,13 @@ object GraftInternal {
 
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Spark's ANSI overflow errors (`QueryExecutionErrors` is
+    * `private[sql]`), so a native kernel fails with the same error class
+    * as the cast or arithmetic it replaces. */
+  def castOverflowError(v: Any, from: types.DataType, to: types.DataType): ArithmeticException =
+    errors.QueryExecutionErrors.castingCauseOverflowError(v, from, to)
+
+  def arithmeticOverflowError(message: String): ArithmeticException =
+    errors.QueryExecutionErrors.arithmeticOverflowError(message)
 }

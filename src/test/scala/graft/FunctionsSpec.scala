@@ -163,6 +163,173 @@ class FunctionsSpec extends AnyFunSuite {
     assert(mismatch == 0)
   }
 
+  /** `sphere_q20`'s reference: the declarative chain `Ann.ivfProj` ran
+    * before the kernel (q20 `transform`, `aggregate` norm, one `round` per
+    * dimension). */
+  private def declarativeIvfProj(df: org.apache.spark.sql.DataFrame,
+                                 emb: String): org.apache.spark.sql.DataFrame = {
+    val qe = transform(transform(col(emb), x => round(x.cast("double") * lit(1048576.0), 0)),
+      x => x.cast("long")).as("__qe")
+    val nrm = aggregate(transform(col("__qe"), v => v * v), lit(0L), (a, v) => a + v)
+    df.select(col("*"), qe).withColumn("__nrm", nrm)
+      .select(col("*") +: (0 until ann.Ann.IvfDims).map { d =>
+        val q = coalesce(try_element_at(col("__qe"), lit(d + 1)), lit(0L))
+        when(col("__nrm") === 0L, lit(0L))
+          .otherwise(round(q.cast("double") * lit(1048576.0) /
+            sqrt(col("__nrm").cast("double")), 0).cast("long")).as(s"x$d")
+      }: _*)
+      .drop("__qe", "__nrm")
+  }
+
+  /** `f` under whole-stage codegen, then on the interpreted path. */
+  private def bothCodegenModes(f: => Unit): Unit = {
+    f
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try f
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
+  /** `df` read back from parquet: a local relation would be evaluated by
+    * the optimizer, never by generated code. */
+  private def onDisk(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val path = java.nio.file.Files.createTempDirectory("functions_spec").toString + "/t"
+    df.write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** The message chain of what `f` throws. */
+  private def failure(f: => Any): String = {
+    val e = intercept[Throwable](f)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+  }
+
+  test("half-up is BigDecimal HALF_UP on the exact double") {
+    val rnd = new scala.util.Random(5)
+    val special = Seq(0.0, -0.0, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5, 0.49999999999999994,
+      -0.49999999999999994, 0.5000000000000001, 1048575.5, -1048575.5,
+      4503599627370495.5, -4503599627370495.5, 4503599627370497.0, 9007199254740993.0,
+      0.49999999999999994 * 1048576.0, math.ulp(0.5))
+    val random = Seq.fill(20000) {
+      val k = rnd.nextInt(1 << 22) - (1 << 21)
+      rnd.nextInt(4) match {
+        case 0 => k + 0.5                                   // exact ties
+        case 1 => k + 0.5 - math.ulp(k + 0.5)               // just below a tie
+        case 2 => rnd.nextFloat().toDouble * 1048576.0 * k  // float·2^20 products
+        case _ => rnd.nextGaussian() * 1e6
+      }
+    }
+    for (v <- special ++ random) {
+      val want = java.math.BigDecimal.valueOf(v).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue
+      assert(graft.functions.SphereQ20.halfUp(v) == want, s"halfUp($v)")
+    }
+    assert(graft.functions.SphereQ20.halfUp(0.49999999999999994) == 0.0)
+    assert(math.floor(0.49999999999999994 + 0.5) == 1.0, "floor(v + 0.5) is not the rule")
+  }
+
+  test("sphere_q20 / ivfProj equal the declarative chain, both codegen modes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val s = 1048576.0f
+    def tie(k: Int): Float = (2 * k + 1) / (2 * s) // x·2^20 = k + 0.5
+    // Σq² = 2^42: every q = ±1 projects to ±2^20/2^21 = ±0.5, a tie
+    val sphereTie = (Seq(1, -1, 1, -1, 1, 1, 1, 1) ++ Seq(2097150, 2390, 1636)).map(_ / s)
+    assert(sphereTie.map(x => math.round(x * s).toLong).map(q => q * q).sum == (1L << 42))
+    val generated: Seq[Seq[java.lang.Float]] = Seq(
+      sphereTie,
+      Seq.empty[Float],
+      Seq(0f, 0f, -0f),
+      Seq(tie(0), -tie(0), tie(3), -tie(7)),
+      Seq((0.49999999999999994 / 1048576.0).toFloat, (-0.49999999999999994 / 1048576.0).toFloat, 1f),
+      Seq(tie(5)),
+      Seq.fill(63)(tie(rnd.nextInt(100) - 50)),
+      Seq.fill(64)(rnd.nextFloat() * 2 - 1),
+      Seq.fill(65)(rnd.nextFloat() * 2 - 1),
+      Seq.fill(100)(rnd.nextFloat() * 4 - 2)
+    ).map(_.map(java.lang.Float.valueOf)) ++ (0 until 300).map { _ =>
+      Seq.fill(Seq(0, 1, 3, 63, 64, 65, 100)(rnd.nextInt(7))) {
+        val x = if (rnd.nextBoolean()) tie(rnd.nextInt(2000) - 1000) else rnd.nextFloat() * 2 - 1
+        java.lang.Float.valueOf(x)
+      }
+    } ++ Seq(
+      Seq[java.lang.Float](1f, null, 2f),
+      Seq[java.lang.Float](null),
+      Seq[java.lang.Float](0f, 0f, null),
+      null)
+    val gen = onDisk(generated.zipWithIndex.map { case (v, i) => (-1L - i, v) }
+      .toDF("vec_id", "embedding"))
+    val emb = Tables.embeddings(spark, TestSpark.sfDir).select(col("vec_id"), col("embedding"))
+      .unionByName(gen)
+    val xs = (0 until ann.Ann.IvfDims).map(d => s"x$d")
+    // overflow: q² past the long range, and q itself past it
+    val overflowing = Seq(1e4f -> "ARITHMETIC_OVERFLOW", 1e20f -> "CAST_OVERFLOW").map {
+      case (x, cls) => onDisk(Seq((1L, Seq(1f, x))).toDF("vec_id", "embedding")) -> cls
+    }
+    bothCodegenModes {
+      val fused = ann.Ann.ivfProj(emb, "embedding").select("vec_id", xs: _*)
+      val decl = declarativeIvfProj(emb, "embedding").select("vec_id", xs: _*)
+      val joined = fused.as("f").join(decl.as("d"), Seq("vec_id"), "full_outer")
+      val same = xs.map(x => col(s"f.$x") <=> col(s"d.$x")).reduce(_ && _)
+      assert(joined.count() == emb.count())
+      assert(joined.filter(not(same)).count() == 0, "ivfProj diverges from the declarative chain")
+      val nulls = fused.filter(col("vec_id") <= -generated.size + 3L)
+        .select(xs.map(x => col(x).isNull.cast("int")).reduce(_ + _)).as[Int].collect()
+      assert(nulls.toSeq == Seq.fill(4)(xs.size), "a null element or array must null every x")
+      for ((bad, cls) <- overflowing) {
+        for (proj <- Seq(ann.Ann.ivfProj _, declarativeIvfProj _)) {
+          val msg = failure(proj(bad, "embedding").select(xs.map(col): _*).collect())
+          assert(msg.contains(cls), msg)
+        }
+      }
+    }
+  }
+
+  test("kmeans_assign in a 64-column z projection equals its interpreted result") {
+    val feats = ann.Ann.ivfProj(
+      Tables.embeddings(spark, TestSpark.sfDir).select(col("vec_id"), col("embedding")),
+      "embedding")
+    val xs = (0 until ann.Ann.IvfDims).map(d => s"x$d")
+    val rows = feats.select(xs.map(col(_).cast("double")): _*).collect()
+      .map(r => Array.tabulate(xs.size)(r.getDouble))
+    val centers = rows.take(9) :+ rows(3).clone() // a duplicate center: ties go to index 3
+    val model = ml.DetKMeans.Model(rows.length.toLong, Array.fill(xs.size)(0.0),
+      Array.fill(xs.size)(1.0), centers)
+    def assigned(): Map[Long, Long] = ml.DetKMeans.assign(feats, xs, model)
+      .select(col("vec_id").cast("long"), col("cluster")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val runs = Seq.newBuilder[Map[Long, Long]]
+    bothCodegenModes(runs += assigned())
+    val Seq(compiled, interpreted) = runs.result()
+    assert(compiled.size == rows.length && compiled == interpreted)
+    assert(compiled.values.toSet.subsetOf((0L until 10L).toSet - 9L), "a tie left the first index")
+    // centers as a column (not foldable) take the per-row conversion path
+    val cs = typedLit(centers.map(_.toSeq).toSeq)
+    val viaColumn = feats.withColumn("cs", cs)
+      .select(col("vec_id").cast("long"),
+        graft.functions.KMeansAssign.of(array(xs.map(col(_).cast("double")): _*),
+          when(col("vec_id") >= 0, col("cs"))).as("cluster"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaColumn == compiled)
+  }
+
+  test("ivfProj's optimized plan holds no interpreted (CodegenFallback) expression") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val feats = ann.Ann.ivfProj(
+      Tables.embeddings(spark, TestSpark.sfDir).select(col("vec_id"), col("embedding")),
+      "embedding")
+    val plan = org.apache.spark.sql.GraftInternal.analyzedToOptimized(feats)
+    val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: HigherOrderFunction => e
+      case e: CodegenFallback => e
+    }))
+    assert(fallbacks.isEmpty, s"interpreted expressions in ivfProj: $fallbacks")
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.functions.SphereQ20]))))
+  }
+
   test("simhash64_md5 token hash equals DuckDB's md5_number_upper") {
     import spark.implicits._
     // md5('abc') = 900150983cd24fb0..., DuckDB md5_number_upper('abc') =

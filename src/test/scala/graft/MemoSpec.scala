@@ -71,10 +71,8 @@ class MemoSpec extends AnyFunSuite {
       "count served from before the in-place rewrite")
   }
 
-  test("Tables.read resolves a schema once per file listing") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("memo_schema").toString
-    (0L until 5L).toDF("id").write.parquet(s"$dir/t.parquet")
+  /** Spark jobs `f` launches on this thread, and its result. */
+  private def jobsOf[T](f: => T): (Int, T) = {
     val group = "memo-schema-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -83,25 +81,57 @@ class MemoSpec extends AnyFunSuite {
           js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
     }
     val sc = spark.sparkContext
-    def readJobs(): (Int, Seq[String]) = {
-      org.apache.spark.TestBus.drain(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "Tables.read")
-      val cols = try Tables.read(spark, dir, "t").columns.toSeq finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      (jobs.get, cols)
-    }
+    org.apache.spark.TestBus.drain(sc)
     sc.addSparkListener(listener)
     try {
-      val (first, cols) = readJobs()
-      assert(first >= 1 && cols == Seq("id"), "the first read infers the schema")
-      assert(readJobs() == (0, Seq("id")), "a re-read of an unchanged listing launched jobs")
-      // an in-place rewrite that adds a column changes the listing
-      (0L until 3L).map(i => (i, i.toString)).toDF("id", "tag")
-        .write.mode("overwrite").parquet(s"$dir/t.parquet")
-      assert(readJobs()._2 == Seq("id", "tag"), "schema served from before the rewrite")
-      assert(Tables.read(spark, dir, "t").count() == 3L)
+      sc.setJobGroup(group, "Tables.read")
+      val out = try f finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      (jobs.get, out)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.read resolves a schema once per file listing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo_schema").toString
+    (0L until 5L).toDF("id").write.parquet(s"$dir/t.parquet")
+    def readJobs(): (Int, Seq[String]) = jobsOf(Tables.read(spark, dir, "t").columns.toSeq)
+    val (first, cols) = readJobs()
+    assert(first >= 1 && cols == Seq("id"), "the first read infers the schema")
+    assert(readJobs() == (0, Seq("id")), "a re-read of an unchanged listing launched jobs")
+    // an in-place rewrite that adds a column changes the listing
+    (0L until 3L).map(i => (i, i.toString)).toDF("id", "tag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(readJobs()._2 == Seq("id", "tag"), "schema served from before the rewrite")
+    assert(Tables.read(spark, dir, "t").count() == 3L)
+  }
+
+  test("a schema resolved before Tables.events turns nanosAsLong on is reused after it") {
+    import spark.implicits._
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    def session(on: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set(nanosAsLong, on.toString)
+      s
+    }
+    // why reuse is safe: with the conf off, Spark refuses to infer a schema
+    // for a file with ns timestamps, so a conf-off schema holds none
+    val ns = getClass.getResource("/ns_timestamps.parquet").getPath
+    val refused = intercept[Exception](Tables.parquet(session(on = false), ns))
+    assert(refused.getMessage.contains("TIMESTAMP(NANOS"), refused.getMessage)
+    assert(Tables.parquet(session(on = true), ns).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    // the other direction stays keyed: the conf-on schema is not served with it off
+    intercept[Exception](Tables.parquet(session(on = false), ns))
+
+    val dir = java.nio.file.Files.createTempDirectory("memo_nanos").toString
+    (0L until 5L).toDF("id").write.parquet(s"$dir/t.parquet")
+    val s = session(on = false)
+    assert(jobsOf(Tables.read(s, dir, "t"))._1 >= 1, "the first read infers the schema")
+    Tables.events(s, TestSpark.sfDir)
+    assert(s.conf.get(nanosAsLong) == "true")
+    assert(jobsOf(Tables.read(s, dir, "t").columns.toSeq) == (0, Seq("id")),
+      "a schema inferred with the conf off was inferred again after events")
   }
 
   test("Memo is the only module-level cache in the library") {
