@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * query computed serves the next. Each call site states why its value
   * may be reused; plan-keyed values ([[PlanKey]]) cannot outlive an
   * in-place rewrite of their inputs, dir-keyed ones are trusted once
-  * validated (see `Ann.persistedIndex`). */
+  * validated (see `VectorIndex.ensureFresh`). */
 object Memo {
   val Bound = 256
 

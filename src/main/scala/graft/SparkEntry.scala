@@ -136,13 +136,13 @@ object SparkEntry {
     "ann_ivfpq_indexed" -> ((s, d) => graft.ann.IvfPq.annIvfPqIndexed(s, d)),
     "ann_ivfpq_append" -> ((s, d) => graft.ann.IvfPq.annIvfPqAppend(s, d)),
     "streaming_ivfpq_append_replay" -> ((s, d) =>
-      graft.streaming.StreamingIvfPqIndex.streamingIvfPqAppendReplay(s, d)),
+      graft.streaming.StreamingVectorIndex.appendReplay(s, d, graft.ann.VectorIndex.Kind.IvfAdc)),
     // the ANN lambda arc: settled fit + assign-only exactly-once appends
     "ann_ivf_append"   -> ((s, d) => graft.ann.Ann.annIvfAppend(s, d)),
     // streaming twin: the appended fifth through the foreachBatch sink as
     // id-ordered micro-batches (batch-boundary-invariant => same oracle)
     "streaming_ivf_append_replay" -> ((s, d) =>
-      graft.streaming.StreamingIvfIndex.streamingIvfAppendReplay(s, d)),
+      graft.streaming.StreamingVectorIndex.appendReplay(s, d, graft.ann.VectorIndex.Kind.Ivf)),
     "ann_recall"       -> ((s, d) => graft.ann.Ann.annRecall(s, d)),
     "ann_auto"         -> ((s, d) => graft.ann.Ann.annAuto(s, d)),
     "embed_neardup"    -> ((s, d) => graft.ann.Ann.embeddingNearDups(s, d)),

@@ -199,7 +199,7 @@ object Ann {
   private[graft] def quantize(c: Column): Column =
     transform(c, x => round(x.cast("double") * lit(1048576.0), 0))
 
-  private def sqSum(c: Column): Column =
+  private[ann] def sqSum(c: Column): Column =
     aggregate(transform(c, v => v * v), lit(0.0), (acc, v) => acc + v)
 
   /** Oracle-parity cosine between two float-array columns: both sides
@@ -328,11 +328,11 @@ object Ann {
     // (semi-join right + query list, × two methods) — materialize its
     // ≤ queries·k rows once instead of recomputing the corpus scan 4×.
     // The exact leg reads the q20 vectors the persisted IVF index already
-    // materialized (fingerprint-validated via ensureIvfIndex) instead of
+    // materialized (fingerprint-validated via VectorIndex.ensure) instead of
     // re-quantizing the float corpus per run — at 100× the audit leg was
     // 49.8 s of repeated quantization; the IVF leg rides the same index
     // (annIvfIndexed ≡ annIvfTopK bit-for-bit, same oracle).
-    val idx = ensureIvfIndex(spark, dir)
+    val idx = VectorIndex.ensure(spark, dir, VectorIndex.Kind.Ivf)
     val vecs = spark.read.parquet(s"$idx/vectors")
     val brute = bruteTopKPreQuantized(vecs, vecs.filter(col("vec_id") < 10), k)
       .select(col("query_id"), col("vec_id"))
@@ -396,7 +396,7 @@ object Ann {
     * [[graft.ml.DetKMeans]] over the q20-quantized embedding components
     * themselves: each component is already an exact long (round(x·2²⁰)),
     * so the deterministic Lloyd's clusters the FULL vector space (on the
-    * 2^20 sphere — see withProj) while standardization, init, iterations,
+    * 2^20 sphere — see ivfProj) in raw space while init, iterations,
     * probe ranking, and re-score are all engine-replayable, which flips
     * ann_ivf from rows-only to hash-exact; recall vs brute force is
     * AnnSpec's measured recall/coverage curve (0.63 @ nProbe 3, 0.83 @ 5 —
@@ -407,11 +407,15 @@ object Ann {
     * the classic projection-loses-high-intrinsic-dimension failure.
     *
     * Spark shape: centroids are a k×IvfDims literal (constant-size at any
-    * corpus scale); list assignment is one projection pass; the probe join
-    * shuffles on the list id — the inverted lists ARE the partitioning at
-    * 100 TB. */
+    * corpus scale); list assignment is one projection pass; probes are
+    * ranked on the driver and the probe join is keyed on the list id —
+    * the inverted lists ARE the partitioning at 100 TB. The fit, the
+    * persisted index and its appends are [[VectorIndex]]'s IVF kind. */
   val IvfDims = 64
   val IvfIters = 10
+
+  /** The projected feature columns x0..x{IvfDims−1}. */
+  private[graft] val xCols: Seq[String] = (0 until IvfDims).map(i => s"x$i")
 
   /** Shipped probe default, scaled with the list count — piecewise on the
     * two MEASURED regimes (tools/RecallProbe, isotropic worst case):
@@ -454,8 +458,8 @@ object Ann {
     if (clustered && nLists > 8) math.max(1, nLists / 8)
     else ivfDefaultProbe(nLists)
 
-  /** floor(center) as exact longs — the IvfPq residual-floor recipe,
-    * reused for the clusteredness statistic. */
+  /** floor(center) as exact longs: the residual floor of
+    * [[VectorIndex]]'s coded kinds and of the clusteredness statistic. */
   private[graft] def floorCenters(centers: Array[Array[Double]]): Array[Array[Long]] =
     centers.map(_.map(g => math.floor(g).toLong))
 
@@ -509,8 +513,7 @@ object Ann {
     // per-cluster buffer slots: Σx_d at (c·dims + d)·2, Σx_d² right after
     def zero = (new Array[Long](k), new graft.Exact.LongSums(2 * k * dims))
     val (ms, sums) = assigned
-      .select(col("cluster").cast("int") +:
-        (0 until dims).map(d => col(s"x$d").cast("long")): _*)
+      .select(col("cluster").cast("int") +: xCols.map(c => col(c).cast("long")): _*)
       .rdd.treeAggregate(zero)(
         seqOp = { (acc, r) =>
           val c = r.getInt(0)
@@ -615,7 +618,7 @@ object Ann {
     * that [[nListsFor]] sizes from, memoized via [[cachedCount]]. */
   private[graft] def distinctFeatCount(feats: DataFrame): Long =
     cachedCount(feats
-      .select((0 until IvfDims).map(i => col(s"x$i")): _*).distinct())
+      .select(xCols.map(col): _*).distinct())
 
   /** Size-derived list count for a testdata dir's embeddings corpus —
     * the one derivation the builders, ensure-keys and specs all share. */
@@ -667,77 +670,13 @@ object Ann {
     * kept IVF featurization out of whole-stage codegen. */
   private[graft] def ivfProj(df: DataFrame, emb: String): DataFrame =
     df.select(col("*"), graft.functions.SphereQ20.of(col(emb), IvfDims).as("__x"))
-      .select(col("*") +:
-        (0 until IvfDims).map(d => element_at(col("__x"), d + 1).as(s"x$d")): _*)
+      .select(col("*") +: xCols.indices.map(d => element_at(col("__x"), d + 1).as(xCols(d))): _*)
       .drop("__x")
 
-  /** The probe + exact-re-score tail shared by the fit-per-session and
-    * persisted-index IVF paths: rank every query's z-vector against the
-    * (broadcast, constant-size) centroid table, keep `nProbe` lists, score
-    * only corpus vectors in the probed lists. Bit-identical for the same
-    * (lists, centroids, mu, sigma) however those were obtained. */
-  private def ivfProbeScore(corpus: DataFrame, queries: DataFrame,
-                            lists: DataFrame, centroids: DataFrame,
-                            mu: Array[Double], sigma: Array[Double],
-                            k: Int, nProbe: Int): DataFrame = {
-    val q = ivfProj(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")), "q_emb")
-    // one select, not a 64-step withColumn foldLeft: each withColumn
-    // re-analyzes the whole (already 64-column) plan, and this runs on
-    // every probe-scoring call — measured as driver-side gap time between
-    // jobs in the r17 phase profile (guide §7.3: planning, not execution)
-    val qz = q.select(col("*") +: (0 until IvfDims).map(i =>
-      ((col(s"x$i").cast("double") - lit(mu(i))) / lit(sigma(i))).as(s"qz$i")): _*)
-    val d2 = (0 until IvfDims).map { i =>
-      (col(s"qz$i") - element_at(col("g"), i + 1)) *
-        (col(s"qz$i") - element_at(col("g"), i + 1))
-    }.reduce(_ + _)
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("__d2"), col("c_id"))
-    val probes = qz.crossJoin(broadcast(centroids))
-      .withColumn("__d2", d2)
-      .withColumn("__r", row_number().over(wq))
-      .filter(col("__r") <= nProbe)
-      .select(col("query_id"), col("c_id").as("list_id"), col("q_emb"))
-    // candidates = corpus vectors in the probed lists; exact q20 re-score
-    val cand = lists.join(probes, "list_id")
-      .filter(col("vec_id") =!= col("query_id"))
-    val cEmb = corpus.select(col("vec_id"), col("embedding"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    cand.join(cEmb, "vec_id")
-      .withColumn("cos_sim", fixedPointCosine(col("embedding"), col("q_emb")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos_sim", "rank")
-  }
-
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nLists: Int = 0, nProbe: Int = 0): DataFrame = {
-    // no seed parameter since r10: the deterministic fit consumes no
-    // randomness (md5-rank init + fixed iterations)
-    val spark = corpus.sparkSession
-    val xs = (0 until IvfDims).map(i => s"x$i")
-    val feats = ivfProj(corpus.select(col("vec_id"), col("embedding")), "embedding")
-      .persist()
-    // nLists = 0 (the default) sizes the geometry from the corpus
-    val nl = if (nLists > 0) nLists else nListsFor(distinctFeatCount(feats))
-    val (assigned, model) = graft.ml.DetKMeans.fitCached(
-      feats, "vec_id", xs, nl, IvfIters, standardize = false,
-      rankInit = true)
-    // adaptive probe default reads the FIT, so it must follow it (r17)
-    val probes = if (nProbe > 0) nProbe
-      else adaptiveProbe(nl, isClustered(assigned, model.centers))
-    val lists = assigned.select(col("vec_id"), col("cluster").as("list_id"))
-    // the persist exists for the iterative fit; releasing here means the
-    // one downstream list-assignment pass recomputes the cheap projection
-    // instead of pinning corpus-sized blocks for the lazy frame's lifetime
-    feats.unpersist()
-    // centroid table: constant-size (nLists × IvfDims) in z-space
-    val centroids = spark.createDataFrame(
-      model.centers.toIndexedSeq.zipWithIndex
-        .map { case (g, i) => (i.toLong, g.toSeq) })
-      .toDF("c_id", "g")
-    ivfProbeScore(corpus, queries, lists, centroids, model.mu, model.sigma, k, probes)
-  }
+              nLists: Int = 0, nProbe: Int = 0): DataFrame =
+    VectorIndex.withFit(corpus, VectorIndex.Kind.Ivf, nLists)(
+      VectorIndex.score(corpus, queries, _, _, k, nProbe))
 
   def annIvfTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -745,225 +684,12 @@ object Ann {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  // ------------------------------------------------- persisted IVF index
-
-  /** One-time IVF index build under `indexDir`: `lists` (vec_id, list_id,
-    * sorted within partitions for rowgroup pruning on the probe join),
-    * `centroids` (c_id, z-space center), `model` (mu/sigma arrays) and
-    * `meta` (geometry + corpus fingerprint, written LAST as the commit
-    * marker — a half-built index from a killed run rebuilds). The
-    * 3+iters-scan Lloyd's fit happens ONCE here: warm sessions and
-    * restarted executors read constant-size centroids/model plus the
-    * (vec_id, list_id) table instead of refitting — the in-memory
-    * DetKMeans model memo only helps within one JVM. Doubles round-trip parquet
-    * bit-exactly, so the indexed probe is bit-identical to the fit path. */
-  /** Cheap corpus content digest for index-staleness fingerprints: XOR of
-    * per-row xxhash64(vec_id, embedding). Order-independent, overflow-free,
-    * and sensitive to in-place content rewrites that preserve (count,
-    * max vec_id) — the aliasing hole advice-r15 flagged in the ensure*
-    * recipes. One columnar pass, runs once per JVM per index dir. */
-  private[graft] def corpusDigest(emb: DataFrame): Long = {
-    val r = emb.agg(expr("bit_xor(xxhash64(vec_id, embedding))")).head
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  def buildIvfIndex(spark: SparkSession, dir: String, indexDir: String,
-                    nLists: Int = 0): Unit =
-    buildIvfIndexFrom(spark, Tables.embeddings(spark, dir), indexDir, nLists)
-
-  /** [[buildIvfIndex]] over an explicit corpus frame — the settled-subset
-    * entry the append arc ([[annIvfAppend]]) and its spec build from. */
-  /** `withVectors = false` skips the q20 `vectors` artifact: it exists
-    * solely for [[annRecall]]'s brute-force audit leg (read through the
-    * fingerprint-validated persisted index), and the append-arc SCRATCH
-    * builds ([[annIvfAppend]], the streaming replay) never serve that leg —
-    * writing it there was a full corpus quantize+write per call for an
-    * artifact nothing read (optimization r18, guide §1.2: don't compute
-    * things you throw away). Persisted-index builds keep the default. */
-  private[graft] def buildIvfIndexFrom(spark: SparkSession, emb: DataFrame,
-                                       indexDir: String, nLists: Int = 0,
-                                       withVectors: Boolean = true): Unit = {
-    graft.Memo.invalidate("ivf.model", indexDir) // a rebuild replaces mu/sigma in place
-    val xs = (0 until IvfDims).map(i => s"x$i")
-    val feats = ivfProj(emb.select(col("vec_id"), col("embedding")), "embedding")
-      .persist()
-    val lists = if (nLists > 0) nLists else nListsFor(distinctFeatCount(feats))
-    val (assigned, model) = graft.ml.DetKMeans.fitCached(
-      feats, "vec_id", xs, lists, IvfIters, standardize = false,
-      rankInit = true)
-    // clusteredness decided at BUILD time and persisted: indexed reads
-    // must probe exactly what the fresh-fit path (and the oracle's
-    // replayed decision) would — see adaptiveProbe
-    val clustered = isClustered(assigned, model.centers)
-    assigned.select(col("vec_id"), col("cluster").as("list_id"))
-      .sortWithinPartitions("list_id")
-      .write.mode("overwrite").parquet(s"$indexDir/lists")
-    feats.unpersist()
-    // q20-quantized vectors + norms, persisted once: the exact audit legs
-    // (annRecall's brute force) read these instead of re-quantizing the
-    // float corpus per run. Exact-integer doubles round-trip parquet
-    // bit-exactly, so consumers are bit-identical to the inline path.
-    if (withVectors)
-      emb.select(col("vec_id"), quantize(col("embedding")).as("qe"))
-        .withColumn("nrm", sqSum(col("qe")))
-        .write.mode("overwrite").parquet(s"$indexDir/vectors")
-    import spark.implicits._
-    model.centers.toIndexedSeq.zipWithIndex
-      .map { case (g, i) => (i.toLong, g.toSeq) }
-      .toDF("c_id", "g")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    Seq((model.mu.toSeq, model.sigma.toSeq)).toDF("mu", "sigma")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/model")
-    // one corpus pass for fingerprint AND digest (was two separate aggs)
-    val fp = emb.agg(count(lit(1)), max(col("vec_id")),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head
-    // n_lists = EFFECTIVE count (centers.length ≤ requested when n < k;
-    // validates the centroids table), n_lists_req = the REQUESTED clamped
-    // k — the probe default derives from n_lists_req so indexed reads
-    // match the fresh-fit path and the oracle geo CTE on tiny corpora
-    // (advice r16: effective < requested when n < 8 probed fewer lists)
-    Seq((model.centers.length, lists, IvfDims, IvfIters, fp.getLong(0),
-      if (fp.isNullAt(1)) -1L else fp.getLong(1),
-      if (fp.isNullAt(2)) 0L else fp.getLong(2),
-      clustered))
-      .toDF("n_lists", "n_lists_req", "dims", "iters", "nvecs",
-        "max_vec_id", "content_digest", "clustered")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** IVF top-k against a prebuilt index: same probe + exact-re-score tail
-    * as [[ivfTopK]], quantizer artifacts read from `indexDir` — no fit. */
-  def ivfTopKIndexed(spark: SparkSession, dir: String, indexDir: String,
-                     k: Int = 10, nProbe: Int = 0): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val (mu, sigma, _, nListsReq, clustered) = readIvfModel(spark, indexDir)
-    val probes = if (nProbe > 0) nProbe else adaptiveProbe(nListsReq, clustered)
-    ivfProbeScore(emb, emb.filter(col("vec_id") < 10), lists, centroids,
-      mu, sigma, k, probes)
-  }
-
-  /** The index's frozen standardization vector + list counts — a 1-row
-    * driver-side artifact; reading it is a (tiny) Spark job per call, so
-    * memoize per index dir. Stale entries are impossible while the dir is
-    * memo-validated: [[buildIvfIndexFrom]] invalidates the entry, and
-    * [[ensureIvfIndex]] is keyed on the same dir. Returns (mu, sigma, effective
-    * n_lists, requested n_lists): probe defaults derive from REQUESTED so
-    * tiny corpora (effective < requested when n < 8) probe the same list
-    * count as the fresh-fit path and the oracle geo CTE; validation of the
-    * centroids table uses EFFECTIVE. Pre-r17 meta lacks `n_lists_req` —
-    * fall back to effective (the two only diverge below the 8-clamp). */
-  private def readIvfModel(spark: SparkSession, indexDir: String)
-      : (Array[Double], Array[Double], Int, Int, Boolean) = {
-    graft.Memo.get("ivf.model", indexDir) {
-      val m = spark.read.parquet(s"$indexDir/model").head
-      val meta = spark.read.parquet(s"$indexDir/meta").head
-      val nl = meta.getAs[Int]("n_lists")
-      val nlReq =
-        if (meta.schema.fieldNames.contains("n_lists_req"))
-          meta.getAs[Int]("n_lists_req") else nl
-      // pre-r17 meta lacks the flag: fall back to the isotropic default
-      val clustered =
-        meta.schema.fieldNames.contains("clustered") &&
-          meta.getAs[Boolean]("clustered")
-      (m.getSeq[Double](m.fieldIndex("mu")).toArray,
-        m.getSeq[Double](m.fieldIndex("sigma")).toArray, nl, nlReq, clustered)
-    }
-  }
-
-  // ------------------------------------------------- IVF append arc
-
-  /** Assign-only append to a persisted IVF index — the lambda-architecture
-    * move for ANN at 100 TB: arriving batches do NOT refit the coarse
-    * quantizer (a Lloyd's fit over the full corpus is a periodic campaign,
-    * not a per-batch cost); each new vector is PROJECTED with the index's
-    * frozen geometry, assigned to its nearest existing centroid, and the
-    * (vec_id, list_id) rows land under an exactly-once batch marker
-    * (write-then-rename, replays skip). Readers union base + committed
-    * appended lists; the probe/re-score tail is unchanged.
-    *
-    * Assignment replays DetKMeans's final assignment rule exactly — argmin
-    * z-distance with ties to the smallest centroid id — so appending a
-    * vector that WAS in the fit corpus lands it in the list the fit chose
-    * (IvfAppendSpec pins this; the [[annIvfAppendOracle]] replays the rule
-    * in SQL). Periodic refit = a fresh [[buildIvfIndex]], the compaction
-    * story, same shape as the hybrid index's fold. Cost per batch: one
-    * constant-size centroid literal riding a single projection over the
-    * batch — no corpus scan, no shuffle at all. */
-  def appendToIvfIndex(spark: SparkSession, indexDir: String,
-                       batch: DataFrame, batchId: Long): Unit = {
-    val root = s"$indexDir/appends"
-    if (graft.streaming.ExactlyOnce.isCommitted(spark, root, batchId)) return
-    val (mu, sigma, nLists, _, _) = readIvfModel(spark, indexDir)
-    // centroid literal: nLists rows (bounded by the 65536 clamp), same
-    // collect contract as IvfPq.loadCoarse; c_id IS the array position
-    // (zipWithIndex at build time), so KMeansAssign's ties-to-first-index
-    // rule is exactly the old window's ORDER BY (__d2, c_id)
-    val coarse = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy("c_id").collect().map(r => r.getSeq[Double](1).toArray)
-    require(coarse.length == nLists,
-      s"IVF index at $indexDir: centroids table has ${coarse.length} rows " +
-        s"but meta says n_lists=$nLists — inconsistent index; rebuild")
-    val feats = ivfProj(batch.select(col("vec_id"), col("embedding")), "embedding")
-    // frozen coarse argmin via the codegen'd KMeansAssign kernel: one
-    // projection over the batch instead of a batch×nLists crossJoin plus a
-    // per-vec_id window shuffle (r16 verdict #1 — at the 65536-list clamp
-    // the old shape materialized ~65B intermediate rows for a 1M-row
-    // batch). z_i = (x_i − mu_i)/sigma_i matches the fit's standardization;
-    // the kernel's ascending-dim d += t·t IS the old left-assoc reduce, so
-    // assignments (and the DuckDB oracle) are bit-identical.
-    val zArr = array((0 until IvfDims).map(i =>
-      (col(s"x$i").cast("double") - lit(mu(i))) / lit(sigma(i))): _*)
-    feats
-      .select(col("vec_id"),
-        graft.functions.KMeansAssign.of(
-          zArr, typedLit(coarse.map(_.toSeq).toSeq)).as("list_id"))
-      .sortWithinPartitions("list_id")
-      .write.mode("overwrite").parquet(s"$root/batch=$batchId/lists")
-    graft.streaming.ExactlyOnce.commit(spark, root, batchId)
-  }
-
-  /** [[ivfTopKIndexed]] over base ∪ committed appended lists — the read
-    * side of the append arc. Uncommitted (crashed) append dirs are
-    * invisible by the marker protocol. */
-  def ivfTopKIndexedWithAppends(spark: SparkSession, dir: String,
-                                indexDir: String, k: Int = 10,
-                                nProbe: Int = 0): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val base = spark.read.parquet(s"$indexDir/lists")
-    val appended = graft.streaming.ExactlyOnce
-      .committedBatches(spark, s"$indexDir/appends")
-    val lists =
-      if (appended.isEmpty) base
-      else base.unionByName(
-        spark.read.parquet(appended.map(_ + "/lists"): _*))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val (mu, sigma, _, nListsReq, clustered) = readIvfModel(spark, indexDir)
-    val probes = if (nProbe > 0) nProbe else adaptiveProbe(nListsReq, clustered)
-    ivfProbeScore(emb, emb.filter(col("vec_id") < 10), lists, centroids,
-      mu, sigma, k, probes)
-  }
-
-  /** Driver query: the full ANN lambda arc as one gateable value. The
+  /** Driver query: the IVF append arc ([[VectorIndex.appendArc]]): the
     * settled corpus (vec_id % 5 ≠ 4) fits the quantizer into a per-run
-    * scratch index; the remaining fifth arrives as two assign-only appends
-    * (vec_id % 10 = 4, then % 10 = 9) through the exactly-once marker
-    * protocol; the probe unions base + appended lists and exact-rescored
-    * top-k comes back over the WHOLE corpus — so the appended vectors are
-    * both findable (in lists) and queryable (queries 4 and 9 are appended
-    * ids). Scratch dirs via ReplayScratch (JVM-exit cleanup), the
-    * verification-surface precedent from the streaming replays. */
-  def annIvfAppend(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val idx = graft.streaming.ReplayScratch.dir("ivf_append_idx")
-    buildIvfIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), idx,
-      withVectors = false) // scratch index never serves annRecall's audit leg
-    appendToIvfIndex(spark, idx, emb.filter(col("vec_id") % 10 === 4), 0L)
-    appendToIvfIndex(spark, idx, emb.filter(col("vec_id") % 10 === 9), 1L)
-    ivfTopKIndexedWithAppends(spark, dir, idx, k)
-      .orderBy(col("query_id"), col("rank"))
-  }
+    * scratch index, the remaining fifth arrives as two assign-only appends,
+    * and top-k comes back over the whole corpus. */
+  def annIvfAppend(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    VectorIndex.appendArc(spark, dir, VectorIndex.Kind.Ivf, "ivf_append_idx", k)()
 
   /** DuckDB oracle replaying [[annIvfAppend]] end-to-end: the DetKMeans
     * chain over the SETTLED subset only, frozen-centroid argmin assignment
@@ -1041,65 +767,10 @@ object Ann {
          |SELECT query_id, vec_id, cos_sim, "rank" FROM rr WHERE "rank" <= $k""".stripMargin
   }
 
-  /** Build-once glue for the persisted vector indexes (IVF, PQ, IVFADC):
-    * the index lives under java.io.tmpdir at a path named by the MD5 of
-    * `key` (dir + geometry + layout version), and its meta carries the
-    * build-time corpus fingerprint — count, max vec_id and
-    * [[corpusDigest]]. A mismatch with the live embeddings table, a
-    * pre-fingerprint meta, or a meta that cannot be read (a run killed
-    * mid-write leaves meta/ with only _temporary) runs `build` instead of
-    * serving or wedging. */
-  private[graft] def ensureVectorIndex(spark: SparkSession, tag: String, dir: String,
-                                       key: String)(build: String => Unit): String =
-    persistedIndex(tag, key) { idx =>
-      val p = new org.apache.hadoop.fs.Path(s"$idx/meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = fs.exists(p) && scala.util.Try {
-        val meta = spark.read.parquet(s"$idx/meta")
-        meta.columns.contains("content_digest") && {
-          val m = meta.head
-          val live = Tables.embeddings(spark, dir)
-          val fp = live.agg(count(lit(1)), max(col("vec_id"))).head
-          m.getAs[Long]("nvecs") == fp.getLong(0) &&
-            m.getAs[Long]("max_vec_id") ==
-              (if (fp.isNullAt(1)) -1L else fp.getLong(1)) &&
-            m.getAs[Long]("content_digest") == corpusDigest(live)
-        }
-      }.getOrElse(false)
-      if (!fresh) build(idx)
-    }
-
-  /** `java.io.tmpdir/graft_<tag>_idx_<md5(key)>`, passed through `validate`
-    * once per JVM. The on-disk fingerprint exists to protect ACROSS process
-    * restarts (a durable index must not serve data regenerated at the same
-    * path after the process that built it is gone); re-proving it on every
-    * call would charge each query a corpus scan, so the first use validates
-    * and later uses trust the dir until the memo forgets it. */
-  private[graft] def persistedIndex(tag: String, key: String)(validate: String => Unit): String = {
-    val hash = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_${tag}_idx_$hash").getAbsolutePath
-    graft.Memo.get(s"$tag.ensure", idx)(validate(idx))
-    idx
-  }
-
-  /** The persisted IVF index for `dir` ([[ensureVectorIndex]]). */
-  private[graft] def ensureIvfIndex(spark: SparkSession, dir: String,
-                                    nLists: Int = 0): String = {
-    // nLists = 0 derives the size-derived geometry BEFORE keying, so the
-    // key (and the index layout behind it) is pinned to the derived value
-    val lists = if (nLists > 0) nLists else derivedLists(spark, dir)
-    // "v3": r16 switched the coarse fit to rank init + size-derived lists —
-    // version retires v2 maxmin-fit dirs by never touching them
-    ensureVectorIndex(spark, "ivf", dir, s"$dir|$IvfDims|$IvfIters|$lists|v3")(
-      buildIvfIndex(spark, dir, _, lists))
-  }
-
   /** Driver query: the persisted-index IVF path — oracle-identical to
     * ann_ivf (same lists, same centroids, precomputed). */
   def annIvfIndexed(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    ivfTopKIndexed(spark, dir, ensureIvfIndex(spark, dir), k)
+    VectorIndex.topK(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Kind.Ivf), k)
       .orderBy(col("query_id"), col("rank"))
 
   /** Size-adaptive ANN dispatch — the hybrid_search_auto lesson (31×/query

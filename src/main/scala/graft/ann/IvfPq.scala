@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVFADC — the inverted-file + product-quantization composite (Jégou,
@@ -44,160 +43,25 @@ import org.apache.spark.sql.functions._
   *    the inverted-file restriction is the join itself, no filter pass;
   *  - exact fixed-point-cosine re-rank over the adaptive shortlist.
   *
-  * Scale shape: fit + encode are one-time (persisted-index variants of
-  * the siblings apply verbatim); the per-query scan is
+  * The fit, the persisted index, its appends and the score path are
+  * [[VectorIndex]]'s IVFADC kind. Scale shape: fit + encode are one-time;
+  * the per-query scan is
   * (nProbe/nLists)·n code rows × 16 array lookups, shuffle-free (codes
   * join a broadcast), and the only window is the per-query shortlist. */
 object IvfPq {
 
-  /** Coarse geometry: the ann_ivf size-derived defaults
-    * ([[Ann.nListsFor]] over the distinct projected-vector count; probe
-    * default piecewise via [[Ann.ivfDefaultProbe]] — 7/8 coverage in the
-    * min-clamp regime (nLists ≤ 8), 3/4 coverage at size-derived
-    * nLists > 8, both measured ≥0.9-recall floors); residual PQ
-    * geometry: the ann_pq defaults (16 subspaces × 16 codewords =
-    * 8 B/vector). */
-
   /** (query_id, vec_id, cos_sim, rank) top-k per query — the standard ANN
     * surface. Recall = IVF's probed-list coverage × the residual-ADC
-    * shortlist quality; both knobs exposed. */
+    * shortlist quality; both knobs exposed. Coarse geometry: the ann_ivf
+    * size-derived defaults; residual PQ geometry: the ann_pq defaults
+    * (16 subspaces × 16 codewords = 8 B/vector). */
   def ivfPqTopK(spark: SparkSession, dir: String, k: Int = 10,
                 nLists: Int = 0, nProbe: Int = 0,
                 nCodes: Int = Pq.CodeBook, subSpaces: Int = Pq.SubSpaces,
                 shortlist: Int = 0): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val rerank =
-      if (shortlist > 0) shortlist
-      else Pq.adaptiveShortlist(Ann.cachedCount(emb.select("vec_id")))
-    val xs = (0 until Ann.IvfDims).map(i => s"x$i")
-    val feats = Ann.ivfProj(emb, "embedding").persist()
-    val lists =
-      if (nLists > 0) nLists else Ann.nListsFor(Ann.distinctFeatCount(feats))
-
-    // 1. coarse quantizer (the ann_ivf fit, cached across queries)
-    val (assigned, cmodel) = graft.ml.DetKMeans.fitCached(
-      feats, "vec_id", xs, lists, Ann.IvfIters, standardize = false,
-      rankInit = true)
-    // adaptive probe default reads the coarse FIT (r17, see Ann)
-    val probes = if (nProbe > 0) nProbe
-      else Ann.adaptiveProbe(lists, Ann.isClustered(assigned, cmodel.centers))
-
-    // 2. floor-quantized coarse centroids (LONG) → exact integer residuals
-    val fc = floorCentroids(cmodel.centers)
-    import spark.implicits._
-    val fcDf = fc.toIndexedSeq.zipWithIndex
-      .map { case (row, c) => (c.toLong, row.toSeq) }.toDF("cluster", "fcv")
-    val resid = assigned.select(col("vec_id") +: col("cluster") +: xs.map(col): _*)
-      .join(broadcast(fcDf), "cluster")
-      .select(col("vec_id") +:
-        (0 until Ann.IvfDims).map(i =>
-          (col(s"x$i") - element_at(col("fcv"), i + 1)).as(s"x$i")) :+
-        col("cluster"): _*)
-      .persist() // the shared-codebook fit stacks this frame subSpaces×
-
-    // 3. shared residual codebook + per-vector codes (the ann_pq fit);
-    //    `cluster` rides the codes projection instead of a full-corpus
-    //    join back onto `assigned` (optimization r17, guide §2.4)
-    val (codesWithList0, pmodel) =
-      Pq.fitSharedCodebook(resid, nCodes, subSpaces, carry = Seq("cluster"))
-    val codesWithList = codesWithList0
-      .localCheckpoint(false) // scanned once per query batch; 18 narrow cols
-
-    val qRows = feats.filter(col("vec_id") < 10)
-      .select(col("vec_id") +: xs.map(col): _*).collect()
-    resid.unpersist()
-    feats.unpersist()
-    scoreWithArtifacts(spark, emb, codesWithList, cmodel.centers, fc,
-      pmodel.centers, qRows, lists, probes, nCodes, subSpaces, rerank, k)
-  }
-
-  private def floorCentroids(centers: Array[Array[Double]]): Array[Array[Long]] =
-    centers.map(_.map(g => math.floor(g).toLong))
-
-  /** Steps 4-6 shared by the fit-per-session and persisted-index paths:
-    * driver-side probe ranking + per-(query, list) ADC tables, the
-    * broadcast list-restricted ADC scan, the adaptive shortlist window,
-    * and the exact fixed-point-cosine re-rank. Bit-identical for the same
-    * (codesWithList, coarse centers, codebook) however obtained. */
-  private def scoreWithArtifacts(spark: SparkSession, emb: DataFrame,
-                                 codesWithList: DataFrame,
-                                 coarse: Array[Array[Double]],
-                                 fc: Array[Array[Long]],
-                                 pcenters: Array[Array[Double]],
-                                 qRows: Array[org.apache.spark.sql.Row],
-                                 nLists: Int, probes: Int, nCodes: Int,
-                                 subSpaces: Int, rerank: Int, k: Int): DataFrame = {
-    val subDim = Ann.IvfDims / subSpaces
-    // 4. driver-side query prep (bounded: 10 query rows × nProbe lists).
-    //    Probe selection replays the oracle's (d², cluster) ranking with
-    //    the same left-assoc IEEE arithmetic; ADC tables are the Pq
-    //    driver-constant recipe per probed list.
-    val qarrRows = qRows.flatMap { r =>
-      val qx = Array.tabulate(Ann.IvfDims)(i => r.getLong(1 + i))
-      val byDist = (0 until nLists).map { c =>
-        var acc = 0.0
-        var i = 0
-        while (i < Ann.IvfDims) { // left-assoc: ((d0²+d1²)+d2²)+…
-          val diff = qx(i).toDouble - coarse(c)(i)
-          val sq = diff * diff
-          acc = if (i == 0) sq else acc + sq
-          i += 1
-        }
-        (acc, c)
-      }.sortBy { case (d, c) => (d, c) }.take(probes)
-      byDist.map { case (_, list) =>
-        val qr = Array.tabulate(Ann.IvfDims)(i => qx(i) - fc(list)(i))
-        val tables = (0 until subSpaces).map { m =>
-          (0 until nCodes).map { j =>
-            var acc = 0.0
-            var i = 0
-            while (i < subDim) { // left-assoc, ascending dims
-              val diff = qr(subDim * m + i).toDouble - pcenters(j)(i)
-              val sq = diff * diff
-              acc = if (i == 0) sq else acc + sq
-              i += 1
-            }
-            acc
-          }
-        }
-        org.apache.spark.sql.Row.fromSeq(r.getLong(0) +: list.toLong +: tables)
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("query_id",
-        org.apache.spark.sql.types.LongType) +:
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.LongType) +:
-        (0 until subSpaces).map(m => org.apache.spark.sql.types.StructField(
-          s"a$m", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-    val qarr = spark.createDataFrame(
-      spark.sparkContext.parallelize(qarrRows.toSeq, 1), schema)
-
-    // 5. inverted-file ADC scan: the cluster join IS the list restriction
-    val approx = (0 until subSpaces).map { m =>
-      element_at(col(s"a$m"), col(s"c$m").cast("int") + 1)
-    }.reduce(_ + _)
-    val ws = Window.partitionBy(col("query_id")).orderBy(col("approx"), col("vec_id"))
-    val short = codesWithList.join(broadcast(qarr), "cluster")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", approx)
-      .withColumn("__r", row_number().over(ws))
-      .filter(col("__r") <= rerank)
-      .select(col("query_id"), col("vec_id"))
-
-    // 6. exact re-rank over the shortlist
-    val qEmb = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    short.join(emb, "vec_id")
-      .join(broadcast(qEmb), "query_id")
-      .withColumn("cos_sim", Ann.fixedPointCosine(col("embedding"), col("q_emb")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rank"))
+    VectorIndex.withFit(emb, VectorIndex.Kind.IvfAdc, nLists, nCodes, subSpaces)(
+      VectorIndex.score(emb, emb.filter(col("vec_id") < 10), _, _, k, nProbe, shortlist))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -205,310 +69,17 @@ object IvfPq {
   def annIvfPq(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     ivfPqTopK(spark, dir, k)
 
-  // --------------------------------------------- persisted IVFADC index
-
-  /** Persist the IVFADC index: `codes` (vec_id, cluster, c0..c{M-1} —
-    * list id + 8 B of residual codes per vector, sorted within partitions
-    * on the list id for rowgroup pruning on the probe join), `coarse`
-    * (the nLists×64 centroid doubles — parquet round-trips them
-    * bit-exactly; floor-centroids re-derive identically at read), the
-    * residual `codebook`, and `meta` (geometry + corpus fingerprint,
-    * written LAST as the commit marker). The two fits happen ONCE here —
-    * the representation that actually ships at 100 TB: every query after
-    * is a broadcast ADC-table scan over the probed lists' codes plus the
-    * shortlist re-rank, no corpus-wide float math, no fit. */
-  private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String,
-                                     indexDir: String, nLists: Int = 0,
-                                     nCodes: Int = Pq.CodeBook,
-                                     subSpaces: Int = Pq.SubSpaces): Unit =
-    buildIvfPqIndexFrom(spark,
-      graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      indexDir, nLists, nCodes, subSpaces)
-
-  private[graft] def buildIvfPqIndexFrom(spark: SparkSession, emb0: DataFrame,
-                                         indexDir: String, nLists: Int = 0,
-                                         nCodes: Int = Pq.CodeBook,
-                                         subSpaces: Int = Pq.SubSpaces): Unit = {
-    graft.Memo.invalidate("ivfpq.artifacts", indexDir) // a rebuild replaces the artifacts
-    import spark.implicits._
-    val emb = emb0.select(col("vec_id"), col("embedding"))
-    val xs = (0 until Ann.IvfDims).map(i => s"x$i")
-    val feats = Ann.ivfProj(emb, "embedding").persist()
-    val lists =
-      if (nLists > 0) nLists else Ann.nListsFor(Ann.distinctFeatCount(feats))
-    val (assigned, cmodel) = graft.ml.DetKMeans.fitCached(
-      feats, "vec_id", xs, lists, Ann.IvfIters, standardize = false,
-      rankInit = true)
-    // clusteredness decided at BUILD time and persisted (see Ann meta)
-    val clustered = Ann.isClustered(assigned, cmodel.centers)
-    val fc = floorCentroids(cmodel.centers)
-    val fcDf = fc.toIndexedSeq.zipWithIndex
-      .map { case (row, c) => (c.toLong, row.toSeq) }.toDF("cluster", "fcv")
-    val resid = assigned.select(col("vec_id") +: col("cluster") +: xs.map(col): _*)
-      .join(broadcast(fcDf), "cluster")
-      .select(col("vec_id") +:
-        (0 until Ann.IvfDims).map(i =>
-          (col(s"x$i") - element_at(col("fcv"), i + 1)).as(s"x$i")) :+
-        col("cluster"): _*)
-      .persist()
-    // `cluster` rides the codes projection — no corpus-wide join back
-    // onto `assigned` (optimization r17, guide §2.4)
-    val (codes, pmodel) =
-      Pq.fitSharedCodebook(resid, nCodes, subSpaces, carry = Seq("cluster"))
-    codes
-      .sortWithinPartitions("cluster")
-      .write.mode("overwrite").parquet(s"$indexDir/codes")
-    resid.unpersist()
-    feats.unpersist()
-    cmodel.centers.toIndexedSeq.zipWithIndex
-      .map { case (g, c) => (c.toLong, g.toSeq) }
-      .toDF("c_id", "g")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/coarse")
-    pmodel.centers.toIndexedSeq.zipWithIndex
-      .map { case (g, j) => (j.toLong, g.toSeq) }
-      .toDF("j", "g")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    // one corpus pass for fingerprint AND digest (was two separate aggs)
-    val fp = emb.agg(count(lit(1)), max(col("vec_id")),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head
-    // EFFECTIVE list count (centers.length ≤ requested when n < k)
-    Seq((cmodel.centers.length, lists, subSpaces, Ann.IvfDims / subSpaces,
-      nCodes, Pq.PqIters,
-      fp.getLong(0), if (fp.isNullAt(1)) -1L else fp.getLong(1),
-      if (fp.isNullAt(2)) 0L else fp.getLong(2), clustered))
-      .toDF("n_lists", "n_lists_req", "sub_spaces", "sub_dim", "n_codes",
-        "iters", "nvecs", "max_vec_id", "content_digest", "clustered")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** Read + geometry-validate an index's meta row — shared by the
-    * fit-free probe, the append writer, and the append-aware reader
-    * (advice-r15: appending against a geometry-drifted index must fail
-    * fast, never silently write corrupt codes into durable index state).
-    * Returns (effective nLists, requested nLists, subSpaces, subDim,
-    * nCodes): probe defaults derive from REQUESTED so tiny corpora
-    * (effective < requested when n < 8) probe the same list count as the
-    * fresh-fit path and the oracle geo CTE; the coarse-table validation
-    * uses EFFECTIVE. Pre-r17 meta lacks `n_lists_req` — fall back to
-    * effective (the two only diverge below the 8-clamp). */
-  private def readValidatedMeta(
-      spark: SparkSession, indexDir: String): (Int, Int, Int, Int, Int, Boolean) = {
-    val meta = spark.read.parquet(s"$indexDir/meta").head
-    val nLists = meta.getAs[Int]("n_lists")
-    val nListsReq =
-      if (meta.schema.fieldNames.contains("n_lists_req"))
-        meta.getAs[Int]("n_lists_req") else nLists
-    // pre-r17 meta lacks the flag: fall back to the isotropic default
-    val clustered =
-      meta.schema.fieldNames.contains("clustered") &&
-        meta.getAs[Boolean]("clustered")
-    val subSpaces = meta.getAs[Int]("sub_spaces")
-    val nCodes = meta.getAs[Int]("n_codes")
-    require(subSpaces > 0 && Ann.IvfDims % subSpaces == 0,
-      s"IVFADC index at $indexDir: sub_spaces=$subSpaces does not divide " +
-        s"the projection width ${Ann.IvfDims}")
-    val metaSubDim = meta.getAs[Int]("sub_dim")
-    require(metaSubDim == Ann.IvfDims / subSpaces,
-      s"IVFADC index at $indexDir: meta sub_dim=$metaSubDim != " +
-        s"${Ann.IvfDims}/$subSpaces — built under a different geometry; rebuild")
-    (nLists, nListsReq, subSpaces, metaSubDim, nCodes, clustered)
-  }
-
-  /** Collect + validate the coarse-centroid table (bounded: nLists rows). */
-  private def loadCoarse(spark: SparkSession, indexDir: String,
-                         nLists: Int): Array[Array[Double]] = {
-    val coarse = spark.read.parquet(s"$indexDir/coarse")
-      .orderBy("c_id").collect().map(r => r.getSeq[Double](1).toArray)
-    require(coarse.length == nLists,
-      s"IVFADC index at $indexDir: coarse table has ${coarse.length} rows " +
-        s"but meta says n_lists=$nLists — inconsistent index; rebuild")
-    coarse
-  }
-
-  /** Collect + validate the residual codebook (bounded: nCodes rows). */
-  private def loadCodebook(spark: SparkSession, indexDir: String,
-                           nCodes: Int, subDim: Int): Array[Array[Double]] = {
-    val pcenters = spark.read.parquet(s"$indexDir/codebook")
-      .orderBy("j").collect().map(r => r.getSeq[Double](1).toArray)
-    require(pcenters.length == nCodes,
-      s"IVFADC index at $indexDir: codebook has ${pcenters.length} rows " +
-        s"but meta says n_codes=$nCodes — inconsistent index; rebuild")
-    require(pcenters.forall(_.length == subDim),
-      s"IVFADC index at $indexDir: codebook centroid width != sub_dim=$subDim")
-    pcenters
-  }
-
-  /** IVFADC top-k against a prebuilt index — NO fit, no corpus-wide float
-    * math; bit-identical to [[ivfPqTopK]] for a fresh index over the same
-    * corpus. Fails fast on geometry drift (the Pq advice-r14 contract). */
-  def ivfPqTopKIndexed(spark: SparkSession, dir: String, indexDir: String,
-                       k: Int = 10, nProbe: Int = 0,
-                       shortlist: Int = 0): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val (nLists, nListsReq, subSpaces, metaSubDim, nCodes, clustered) =
-      readValidatedMeta(spark, indexDir)
-    val probes = if (nProbe > 0) nProbe
-      else Ann.adaptiveProbe(nListsReq, clustered)
-    val rerank =
-      if (shortlist > 0) shortlist
-      else Pq.adaptiveShortlist(Ann.cachedCount(emb.select("vec_id")))
-    val codesWithList = spark.read.parquet(s"$indexDir/codes")
-    val coarse = loadCoarse(spark, indexDir, nLists)
-    val pcenters = loadCodebook(spark, indexDir, nCodes, metaSubDim)
-    val xs = (0 until Ann.IvfDims).map(i => s"x$i")
-    val qRows = Ann.ivfProj(emb.filter(col("vec_id") < 10), "embedding")
-      .select(col("vec_id") +: xs.map(col): _*).collect()
-    scoreWithArtifacts(spark, emb, codesWithList, coarse,
-      floorCentroids(coarse), pcenters, qRows, nLists, probes, nCodes,
-      subSpaces, rerank, k)
-  }
-
-  /** The persisted IVFADC index for `dir` ([[Ann.ensureVectorIndex]]). */
-  private[graft] def ensureIvfPqIndex(spark: SparkSession, dir: String): String = {
-    // size-derived coarse geometry resolved BEFORE keying (the
-    // ensureIvfIndex recipe); "v2" retires v1 fixed-8 maxmin-fit dirs
-    val lists = Ann.derivedLists(spark, dir)
-    Ann.ensureVectorIndex(spark, "ivfpq", dir,
-      s"$dir|$lists|${Pq.SubSpaces}|${Pq.CodeBook}|${Pq.PqIters}|v2")(
-      buildIvfPqIndex(spark, dir, _, lists))
-  }
-
   /** Driver query: the persisted-index IVFADC path — oracle-identical to
     * ann_ivfpq (same lists, same codes, same codebooks, precomputed). */
   def annIvfPqIndexed(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    ivfPqTopKIndexed(spark, dir, ensureIvfPqIndex(spark, dir), k)
+    VectorIndex.topK(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Kind.IvfAdc), k)
+      .orderBy(col("query_id"), col("rank"))
 
-  // ------------------------------------------ exactly-once append ingest
-
-  /** Append a micro-batch of embeddings to a prebuilt IVFADC index with
-    * FROZEN geometry (the ann_ivf_append lambda rule, fourth index
-    * family): batch vectors are argmin-assigned to the existing coarse
-    * lists and encoded against the existing residual codebook — refits
-    * are periodic compaction campaigns, not per-batch costs. Exactly-once
-    * by the write-then-mark protocol; assign-only appends never mutate
-    * the settled codes, so there is no in-place fold to crash. */
-  /** Per-index artifact memo for the append hot path: (geometry, coarse
-    * centers, floor centers, codebook) — keeps the 3 bounded collect jobs
-    * (coarse/codebook/floor) off every micro-batch. Invalidated by
-    * [[buildIvfPqIndexFrom]] (in-JVM rebuild) AND re-validated against the
-    * on-disk meta's `content_digest` on EVERY call (advice r16): index
-    * dirs under java.io.tmpdir are shared across processes, so a rebuild
-    * by another JVM must not leave this appender encoding batches against
-    * the old coarse centers/codebook and committing corrupt codes into
-    * the new index's durable appends/. Cost per batch: one 1-row meta
-    * read — the part worth memoizing is the k-row collects, not the
-    * staleness probe. */
-  private def appendArtifacts(spark: SparkSession, indexDir: String)
-      : (Int, Int, Array[Array[Double]], Array[Array[Long]], Array[Array[Double]]) = {
-    // the build nonce: meta is written LAST by the builder (the commit
-    // marker), and content_digest changes with the fitted corpus — so a
-    // completed rebuild by ANY process flips the nonce this memo is
-    // stamped with
-    val nonce = spark.read.parquet(s"$indexDir/meta")
-      .head.getAs[Long]("content_digest")
-    def load() = {
-      val (nLists, _, subSpaces, subDim, nCodes, _) = readValidatedMeta(spark, indexDir)
-      val coarse = loadCoarse(spark, indexDir, nLists)
-      val pcenters = loadCodebook(spark, indexDir, nCodes, subDim)
-      (nonce, (subSpaces, subDim, coarse, floorCentroids(coarse), pcenters))
-    }
-    val (stamp, art) = graft.Memo.get("ivfpq.artifacts", indexDir)(load())
-    if (stamp == nonce) art
-    else {
-      graft.Memo.invalidate("ivfpq.artifacts", indexDir)
-      graft.Memo.get("ivfpq.artifacts", indexDir)(load())._2
-    }
-  }
-
-  def appendToIvfPqIndex(spark: SparkSession, indexDir: String,
-                         batch: DataFrame, batchId: Long): Unit = {
-    val root = s"$indexDir/appends"
-    if (graft.streaming.ExactlyOnce.isCommitted(spark, root, batchId)) return
-    val (subSpaces, subDim, coarse, fc, pcenters) =
-      appendArtifacts(spark, indexDir)
-
-    val feats = Ann.ivfProj(
-      batch.select(col("vec_id"), col("embedding")), "embedding")
-    // frozen coarse argmin via the codegen'd KMeansAssign kernel (raw
-    // mode: z ≡ x as double) — same left-assoc distance and ties-to-min-
-    // list rule the previous crossJoin+window formulation computed, in
-    // ONE projection instead of a broadcast-join + window shuffle (r16:
-    // the append path was ~10 s/micro-batch of pure plan/job overhead;
-    // the kernel carries the centers as one array literal, so codegen
-    // stays iteration-invariant — the DetKMeans rationale)
-    val zArr = array((0 until Ann.IvfDims).map(i => col(s"x$i").cast("double")): _*)
-    val withList = feats.withColumn("cluster",
-      graft.functions.KMeansAssign.of(zArr, typedLit(coarse.map(_.toSeq).toSeq)))
-    // exact-integer residuals vs the SAME floor centroids the build used
-    import spark.implicits._
-    val fcDf = fc.toIndexedSeq.zipWithIndex
-      .map { case (row, c) => (c.toLong, row.toSeq) }.toDF("cluster", "fcv")
-    val resid = withList.join(broadcast(fcDf), "cluster")
-      .select(col("vec_id") +: col("cluster") +:
-        (0 until Ann.IvfDims).map(i =>
-          (col(s"x$i") - element_at(col("fcv"), i + 1)).as(s"x$i")): _*)
-    // frozen codebook argmin per subvector — one KMeansAssign per
-    // subspace over the shared codebook literal (ties to min codeword,
-    // ascending-dim left-assoc: the stacked-window formulation's exact
-    // values, minus the 16-branch union, the second window shuffle and
-    // the pivot agg)
-    val cbLit = typedLit(pcenters.map(_.toSeq).toSeq)
-    val codeCols = (0 until subSpaces).map { m =>
-      graft.functions.KMeansAssign.of(
-        array((0 until subDim).map(i =>
-          col(s"x${subDim * m + i}").cast("double")): _*), cbLit).as(s"c$m")
-    }
-    resid.select(col("vec_id") +: codeCols :+ col("cluster"): _*)
-      .sortWithinPartitions("cluster")
-      .write.mode("overwrite").parquet(s"$root/batch=$batchId/codes")
-    graft.streaming.ExactlyOnce.commit(spark, root, batchId)
-  }
-
-  /** [[ivfPqTopKIndexed]] over base ∪ committed appended codes — the read
-    * side of the append arc; uncommitted (crashed) append dirs are
-    * invisible by the marker protocol. */
-  def ivfPqTopKIndexedWithAppends(spark: SparkSession, dir: String,
-                                  indexDir: String, k: Int = 10,
-                                  nProbe: Int = 0): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val (nLists, nListsReq, subSpaces, subDim, nCodes, clustered) =
-      readValidatedMeta(spark, indexDir)
-    val probes = if (nProbe > 0) nProbe
-      else Ann.adaptiveProbe(nListsReq, clustered)
-    val rerank = Pq.adaptiveShortlist(Ann.cachedCount(emb.select("vec_id")))
-    val base = spark.read.parquet(s"$indexDir/codes")
-    val appended = graft.streaming.ExactlyOnce
-      .committedBatches(spark, s"$indexDir/appends")
-    val codesWithList =
-      if (appended.isEmpty) base
-      else base.unionByName(
-        spark.read.parquet(appended.map(_ + "/codes"): _*))
-    val coarse = loadCoarse(spark, indexDir, nLists)
-    val pcenters = loadCodebook(spark, indexDir, nCodes, subDim)
-    val xs = (0 until Ann.IvfDims).map(i => s"x$i")
-    val qRows = Ann.ivfProj(emb.filter(col("vec_id") < 10), "embedding")
-      .select(col("vec_id") +: xs.map(col): _*).collect()
-    scoreWithArtifacts(spark, emb, codesWithList, coarse,
-      floorCentroids(coarse), pcenters, qRows, nLists, probes, nCodes,
-      subSpaces, rerank, k)
-  }
-
-  /** Driver query: the full IVFADC lambda arc as one gateable value — the
-    * settled corpus (vec_id % 5 ≠ 4) builds the index; the remaining
-    * fifth arrives as two assign-only appends through the exactly-once
-    * protocol; top-k comes back over the WHOLE corpus (appended vectors
-    * both findable and queryable — queries 4 and 9 are appended ids). */
-  def annIvfPqAppend(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val idx = graft.streaming.ReplayScratch.dir("ivfpq_append_idx")
-    buildIvfPqIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), idx)
-    appendToIvfPqIndex(spark, idx, emb.filter(col("vec_id") % 10 === 4), 0L)
-    appendToIvfPqIndex(spark, idx, emb.filter(col("vec_id") % 10 === 9), 1L)
-    ivfPqTopKIndexedWithAppends(spark, dir, idx, k)
-  }
+  /** Driver query: the IVFADC append arc ([[VectorIndex.appendArc]]) —
+    * the settled corpus builds the index, the remaining fifth arrives as
+    * two assign-only appends, top-k comes back over the whole corpus. */
+  def annIvfPqAppend(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    VectorIndex.appendArc(spark, dir, VectorIndex.Kind.IvfAdc, "ivfpq_append_idx", k)()
 
   /** DuckDB oracle: the ann_ivf coarse-fit replay, the floor-centroid /
     * integer-residual CTEs, ONE prefix-"p" DetKMeans replay over the

@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product-quantization ANN (Jégou, Douze, Schmid 2011: "Product
@@ -48,7 +47,9 @@ import org.apache.spark.sql.functions._
   * are exact integers as doubles, codeword coordinates are the portable
   * DetKMeans means, every d² chain and the M-term ADC sum are
   * left-associated identically in the DuckDB oracle, and ties break on
-  * vec_id — so the query is hash-gated, not rows-only. */
+  * vec_id — so the query is hash-gated, not rows-only. The fit, the
+  * persisted index and the score path are [[VectorIndex]]'s PQ kind: one
+  * list whose centroid is the origin, so each residual is the vector. */
 object Pq {
 
   /** Shipped geometry, sized on the measured isotropic worst case (the
@@ -72,219 +73,24 @@ object Pq {
     * computes the same GREATEST(200, n//10). */
   def adaptiveShortlist(n: Long): Int = math.max(200L, n / 10L).toInt
 
-  private def xs(n: Int) = (0 until n).map(i => s"x$i")
-
-  /** Stack every vector's [[SubSpaces]] subvectors into one training
-    * frame keyed by uid = vec_id·M + m, and fit the shared codebook.
-    * Returns (codes: vec_id, c0..c{M-1} ∪ `carry`; the model). `feats`
-    * must carry x0..x63 from [[Ann.ivfProj]]; `carry` names extra feats
-    * columns to ride the codes projection (the IVFADC builds carry
-    * `cluster`, which used to cost a full-corpus join back onto the
-    * codes — guide §2.4). */
-  private[ann] def fitSharedCodebook(feats: DataFrame, nCodes: Int, subSpaces: Int,
-                                     carry: Seq[String] = Nil)
-      : (DataFrame, graft.ml.DetKMeans.Model) = {
-    val subDim = Ann.IvfDims / subSpaces
-    val stacked = (0 until subSpaces).map { m =>
-      feats.select(
-        (col("vec_id") * subSpaces + lit(m)).as("uid") +:
-          (0 until subDim).map(i => col(s"x${subDim * m + i}").as(s"x$i")): _*)
-    }.reduce(_ unionByName _).persist()
-    val (_, model) = graft.ml.DetKMeans.fitCached(
-      stacked, "uid", xs(subDim), nCodes, PqIters, standardize = false)
-    // codes via the frozen-codebook argmin kernel, ONE projection over
-    // `feats` (optimization r17, guide §2.3/§2.4): the previous form
-    // re-derived the stacked assignment (n·M rows through the kernel,
-    // then an n·M→n pivot SHUFFLE) on every build — but the model is the
-    // only thing the stacked frame is needed for, and the r16 append-path
-    // gate already proved the per-subspace kernel codes are bit-identical
-    // to the stacked assignment (same KMeansAssign expression, same
-    // centers, same ties-to-min-codeword rule; raw-space mode so z ≡
-    // x as double). Cold fits still pay the stacked passes; every build —
-    // warm or cold — now skips the pivot exchange entirely.
-    val cbLit = typedLit(model.centers.map(_.toSeq).toSeq)
-    val codes = feats.select(col("vec_id") +:
-      ((0 until subSpaces).map { m =>
-        graft.functions.KMeansAssign.of(
-          array((0 until subDim).map(i =>
-            col(s"x${subDim * m + i}").cast("double")): _*), cbLit).as(s"c$m")
-      } ++ carry.map(col)): _*)
-    stacked.unpersist()
-    (codes, model)
-  }
-
-  /** Per-query ADC tables: a[m][j] = d²(query subvector m, codeword j).
-    * Computed on the DRIVER from the collected query features (bounded:
-    * the 10-row query set) with the identical left-assoc IEEE arithmetic
-    * the oracle replays — an expression form generated a ~5000-line
-    * wholestage class that FAILED janino's method limit and re-attempted
-    * compilation on every execution (measured 8-40 s/call at sf0.1; the
-    * literal table makes the call sub-second). In a real deployment the
-    * ADC table is client-side query prep anyway. */
-  private def adcTables(spark: SparkSession,
-                        qRows: Array[org.apache.spark.sql.Row],
-                        centers: Array[Array[Double]],
-                        nCodes: Int, subSpaces: Int): DataFrame = {
-    val subDim = Ann.IvfDims / subSpaces
-    val rows = qRows.map { r =>
-      val tables = (0 until subSpaces).map { m =>
-        (0 until nCodes).map { j =>
-          var acc = 0.0
-          var i = 0
-          while (i < subDim) { // left-assoc: ((d0²+d1²)+d2²)+…
-            val diff = r.getLong(1 + subDim * m + i).toDouble - centers(j)(i)
-            val sq = diff * diff
-            acc = if (i == 0) sq else acc + sq
-            i += 1
-          }
-          acc
-        }
-      }
-      org.apache.spark.sql.Row.fromSeq(r.getLong(0) +: tables)
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("query_id",
-        org.apache.spark.sql.types.LongType) +:
-        (0 until subSpaces).map(m => org.apache.spark.sql.types.StructField(
-          s"a$m", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-  }
-
-  /** The ADC scan + exact re-rank tail shared by the fit-per-session and
-    * persisted-index paths: M array lookups + M−1 adds per corpus vector,
-    * the query-keyed shortlist window, then fixed-point cosine over the
-    * shortlist. Bit-identical for the same (codes, qarr) however obtained. */
-  private def pqScore(emb: DataFrame, codes: DataFrame, qarr: DataFrame,
-                      subSpaces: Int, rerank: Int, k: Int): DataFrame = {
-    val approx = (0 until subSpaces).map { m =>
-      element_at(col(s"a$m"), col(s"c$m").cast("int") + 1)
-    }.reduce(_ + _)
-    val ws = Window.partitionBy(col("query_id")).orderBy(col("approx"), col("vec_id"))
-    val short = codes.crossJoin(broadcast(qarr))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", approx)
-      .withColumn("__r", row_number().over(ws))
-      .filter(col("__r") <= rerank)
-      .select(col("query_id"), col("vec_id"))
-    val qEmb = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    short.join(emb, "vec_id")
-      .join(broadcast(qEmb), "query_id")
-      .withColumn("cos_sim", Ann.fixedPointCosine(col("embedding"), col("q_emb")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   def pqTopK(spark: SparkSession, dir: String, k: Int = 10,
              nCodes: Int = CodeBook, shortlist: Int = 0,
              subSpaces: Int = SubSpaces): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val rerank =
-      if (shortlist > 0) shortlist
-      else adaptiveShortlist(Ann.cachedCount(emb.select("vec_id")))
-    val feats = Ann.ivfProj(emb, "embedding").persist()
-    val (codes, model) = fitSharedCodebook(feats, nCodes, subSpaces)
-    val qRows = feats.filter(col("vec_id") < 10)
-      .select(col("vec_id") +:
-        (0 until Ann.IvfDims).map(i => col(s"x$i")): _*)
-      .collect() // bounded: one row per query
-    feats.unpersist()
-    val qarr = adcTables(spark, qRows, model.centers, nCodes, subSpaces)
-    pqScore(emb, codes, qarr, subSpaces, rerank, k)
+    VectorIndex.withFit(emb, VectorIndex.Kind.Pq, nCodes = nCodes, subSpaces = subSpaces)(
+      VectorIndex.score(emb, emb.filter(col("vec_id") < 10), _, _, k, shortlist = shortlist))
+      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Driver query. */
   def annPq(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     pqTopK(spark, dir, k)
 
-  // ------------------------------------------------- persisted PQ index
-
-  /** Persist the PQ index: the codes ARE the index (8 B/vector), plus the
-    * k×[[SubDim]] codebook and a staleness fingerprint — the ann_ivf_indexed
-    * recipe for the representation that actually ships at 100 TB (the coded
-    * corpus is written ONCE; every query is a broadcast-table scan over
-    * 32×-smaller data plus a shortlist re-rank). */
-  private[graft] def buildPqIndex(spark: SparkSession, dir: String,
-                                  indexDir: String, nCodes: Int = CodeBook,
-                                  subSpaces: Int = SubSpaces): Unit = {
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val feats = Ann.ivfProj(emb, "embedding").persist()
-    val (codes, model) = fitSharedCodebook(feats, nCodes, subSpaces)
-    feats.unpersist()
-    codes.sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(s"$indexDir/codes")
-    model.centers.toIndexedSeq.zipWithIndex
-      .map { case (g, j) => (j.toLong, g.toSeq) }
-      .toDF("j", "g")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val fp = emb.agg(count(lit(1)), max(col("vec_id"))).head
-    Seq((subSpaces, SubDim, nCodes, PqIters, fp.getLong(0),
-      if (fp.isNullAt(1)) -1L else fp.getLong(1), Ann.corpusDigest(emb)))
-      .toDF("sub_spaces", "sub_dim", "n_codes", "iters", "nvecs",
-        "max_vec_id", "content_digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** PQ top-k against a prebuilt index: codes + codebook read from disk
-    * (doubles round-trip parquet bit-exactly), the query-side projection is
-    * 10 rows — NO fit, no corpus-wide float math. Bit-identical to
-    * [[pqTopK]] for a fresh index over the same corpus. */
-  def pqTopKIndexed(spark: SparkSession, dir: String, indexDir: String,
-                    k: Int = 10, shortlist: Int = 0): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val rerank =
-      if (shortlist > 0) shortlist
-      else adaptiveShortlist(Ann.cachedCount(emb.select("vec_id")))
-    val meta = spark.read.parquet(s"$indexDir/meta").head
-    val subSpaces = meta.getAs[Int]("sub_spaces")
-    val nCodes = meta.getAs[Int]("n_codes")
-    // fail-fast geometry validation (advice-r14): an index built under a
-    // different geometry read through this direct (non-ensure) path would
-    // otherwise mis-decode codes SILENTLY — sub_dim must agree with the
-    // current projection width, and the codebook actually read must carry
-    // exactly n_codes rows of sub_dim-wide centroids.
-    require(subSpaces > 0 && Ann.IvfDims % subSpaces == 0,
-      s"PQ index at $indexDir: sub_spaces=$subSpaces does not divide the " +
-        s"projection width ${Ann.IvfDims}")
-    val metaSubDim = meta.getAs[Int]("sub_dim")
-    require(metaSubDim == Ann.IvfDims / subSpaces,
-      s"PQ index at $indexDir: meta sub_dim=$metaSubDim != " +
-        s"${Ann.IvfDims}/$subSpaces — built under a different geometry; rebuild")
-    val codes = spark.read.parquet(s"$indexDir/codes")
-    val centers = spark.read.parquet(s"$indexDir/codebook")
-      .orderBy("j").collect() // bounded: nCodes rows
-      .map(r => r.getSeq[Double](1).toArray)
-    require(centers.length == nCodes,
-      s"PQ index at $indexDir: codebook has ${centers.length} rows but meta " +
-        s"says n_codes=$nCodes — inconsistent index; rebuild")
-    require(centers.forall(_.length == metaSubDim),
-      s"PQ index at $indexDir: codebook centroid width != sub_dim=$metaSubDim")
-    val qRows = Ann.ivfProj(emb.filter(col("vec_id") < 10), "embedding")
-      .select(col("vec_id") +:
-        (0 until Ann.IvfDims).map(i => col(s"x$i")): _*)
-      .collect() // bounded: one row per query
-    val qarr = adcTables(spark, qRows, centers, nCodes, subSpaces)
-    pqScore(emb, codes, qarr, subSpaces, rerank, k)
-  }
-
-  /** The persisted PQ index for `dir` ([[Ann.ensureVectorIndex]]). */
-  private[graft] def ensurePqIndex(spark: SparkSession, dir: String): String =
-    Ann.ensureVectorIndex(spark, "pq", dir, s"$dir|$SubSpaces|$CodeBook|$PqIters|v1")(
-      buildPqIndex(spark, dir, _))
-
   /** Driver query: the persisted-index PQ path — oracle-identical to
     * ann_pq (same codes, same codebook, precomputed). */
   def annPqIndexed(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    pqTopKIndexed(spark, dir, ensurePqIndex(spark, dir), k)
+    VectorIndex.topK(spark, dir, VectorIndex.ensure(spark, dir, VectorIndex.Kind.Pq), k)
+      .orderBy(col("query_id"), col("rank"))
 
   /** DuckDB oracle: ONE DetKMeans replay over the stacked subvectors
     * (uid = vec_id·M + m), then the code pivot, the per-query

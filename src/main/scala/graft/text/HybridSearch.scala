@@ -159,22 +159,22 @@ object HybridSearch {
   /** Index build over an explicit docs frame (`doc_id`, `text`) — the
     * streaming-replay gate seeds a settled-corpus SUBSET and streams the
     * rest through [[appendToIndex]]; the dir-based [[buildIndex]] delegates
-    * here with the full documents table. Fingerprint (ndocs/max_doc_id)
-    * and adaptive bits come from the given frame in one agg pass. */
+    * here with the full documents table. The fingerprint (ndocs,
+    * max_doc_id, content_digest) and adaptive bits come from the given
+    * frame in one agg pass. */
   def buildIndexFrom(spark: SparkSession, docs: DataFrame, indexDir: String,
                      dim: Int = Embeddings.Dim, tables: Int = IndexTables,
                      seed: Long = IndexSeed): Unit = {
     graft.Memo.invalidate("hybrid.geometry", indexDir) // a rebuild may change adaptive bits
-    val fp = docs.agg(count(lit(1)).as("n"), max(col("doc_id")).as("m")).head
-    val (nd, mx) = (fp.getLong(0), if (fp.isNullAt(1)) -1L else fp.getLong(1))
-    val bits = graft.ann.Ann.adaptiveBits(nd)
+    val fp = graft.ann.VectorIndex.fingerprint(docs, "doc_id", FingerprintCols)
+    val bits = graft.ann.Ann.adaptiveBits(fp.rows)
     val vecs = docs.select(col("doc_id"), q20Vec(col("text"), dim).as("qvec"))
     vecs.write.mode("overwrite").parquet(s"$indexDir/corpus/vecs")
     writeBuckets(spark, spark.read.parquet(s"$indexDir/corpus/vecs"),
       s"$indexDir/corpus/buckets", tables, bits, dim, seed)
     import spark.implicits._
-    Seq((tables, bits, dim, seed, nd, mx))
-      .toDF("tables", "bits", "dim", "seed", "ndocs", "max_doc_id")
+    Seq((tables, bits, dim, seed, fp.rows, fp.maxId, fp.digest))
+      .toDF("tables", "bits", "dim", "seed", "ndocs", "max_doc_id", "content_digest")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/corpus/meta")
   }
 
@@ -194,16 +194,9 @@ object HybridSearch {
       .write.mode("overwrite").parquet(out)
   }
 
-  /** Cheap corpus fingerprint for index-staleness checks: (row count,
-    * max doc_id) off one doc_id-pruned scan. Not a content digest — a
-    * rewrite that preserves both values still aliases — but it catches the
-    * realistic in-place-rewrite cases: rescaled or regrown data at the same
-    * path. */
-  private def corpusFingerprint(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = Tables.documents(spark, dir)
-      .agg(count(lit(1)).as("n"), max(col("doc_id")).as("m")).head
-    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-  }
+  /** The documents columns an index build reads: its fingerprint digests
+    * exactly these, so rewriting any document's text in place is seen. */
+  private val FingerprintCols = Seq("doc_id", "text")
 
   /** The query's bkeys under the index geometry — driver-side (tables·bits
     * exact long dot products over the dim-length q20 query vector). Sign
@@ -467,33 +460,25 @@ object HybridSearch {
     committed.size
   }
 
-  /** Build-once glue for the driver queries: index under java.io.tmpdir
-    * keyed by (dir, geometry), built on first use (`meta` is the commit
-    * marker — a half-built index from a killed run rebuilds) and validated
-    * once per JVM ([[graft.ann.Ann.persistedIndex]]). The disk cache
-    * survives JVM restarts, so a stale index could silently serve a corpus
-    * REGENERATED IN PLACE at the same path — meta therefore carries the
-    * build-time corpus fingerprint (count + max doc_id) and bits, and a
-    * mismatch with the live documents table (or a pre-fingerprint or
-    * unreadable meta) forces a rebuild. A rewrite preserving count AND max
-    * doc_id still aliases: this fingerprint is not a content digest. */
+  /** Build-once glue for the driver queries: the index under
+    * java.io.tmpdir keyed by (dir, geometry), built on first use and
+    * validated once per JVM by the vector indexes' ensure helper
+    * ([[graft.ann.VectorIndex.ensureFresh]]). `meta` is the commit marker
+    * and carries the build corpus' fingerprint — count, max doc_id and an
+    * xxhash64 content digest of (doc_id, text) — so a half-built index, a
+    * corpus regenerated in place at the same path, or a rewrite of one
+    * document that keeps count and max doc_id all rebuild. */
   private[graft] def ensureIndex(spark: SparkSession, dir: String): String =
-    graft.ann.Ann.persistedIndex("hybrid",
+    graft.ann.VectorIndex.ensureFresh("hybrid",
         s"$dir|${Embeddings.Dim}|$IndexTables|$IndexSeed") { idx =>
       recoverCorpus(spark, idx)
-      val p = new org.apache.hadoop.fs.Path(s"$idx/corpus/meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = fs.exists(p) && scala.util.Try {
-        val meta = spark.read.parquet(s"$idx/corpus/meta")
-        meta.columns.contains("ndocs") && {
-          val m = meta.head
-          val (nd, mx) = corpusFingerprint(spark, dir)
-          m.getAs[Long]("ndocs") == nd && m.getAs[Long]("max_doc_id") == mx &&
-            m.getAs[Int]("bits") == graft.ann.Ann.adaptiveBits(nd)
-        }
-      }.getOrElse(false)
-      if (!fresh) buildIndex(spark, dir, idx)
-    }
+      val m = spark.read.parquet(s"$idx/corpus/meta").head
+      val nd = m.getAs[Long]("ndocs")
+      require(m.getAs[Int]("bits") == graft.ann.Ann.adaptiveBits(nd))
+      graft.ann.VectorIndex.Fingerprint(nd, m.getAs[Long]("max_doc_id"),
+        m.getAs[Long]("content_digest"))
+    }(graft.ann.VectorIndex.fingerprint(Tables.documents(spark, dir), "doc_id", FingerprintCols))(
+      buildIndex(spark, dir, _))
 
   /** Driver query: the persisted-vector path — oracle-identical to
     * hybrid_search (same scores, precomputed). */
@@ -518,7 +503,7 @@ object HybridSearch {
   private[graft] def autoRoute(spark: SparkSession, dir: String,
                                threshold: Long = AutoIndexThreshold): Boolean =
     graft.Memo.get("hybrid.route", (dir, threshold))(
-      corpusFingerprint(spark, dir)._1 >= threshold)
+      Tables.documents(spark, dir).select("doc_id").count() >= threshold)
 
   /** Size-adaptive hybrid search: the flat one-pass form on small corpora,
     * the persisted index (built on first use, fingerprint-validated) at or

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-class AnnSpec extends AnyFunSuite {
+class AnnSpec extends AnyFunSuite with VectorIndexBehaviours {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
@@ -312,31 +312,5 @@ class AnnSpec extends AnyFunSuite {
     assert(live("spec.filler") < Memo.Bound, s"no filler entry was evicted: $live")
   }
 
-  test("persisted IVF index: warm path is bit-identical to the fit path") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_idx_spec").toString
-    Ann.buildIvfIndex(spark, dir, idx)
-    def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
-      (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-        r.getAs[Long]("vec_id"), r.getAs[Double]("cos_sim"))).toSet
-    val fit = key(Ann.annIvfTopK(spark, dir).collect())
-    val warm = key(Ann.ivfTopKIndexed(spark, dir, idx)
-      .orderBy(col("query_id"), col("rank")).collect())
-    assert(fit == warm, s"indexed IVF diverged: ${fit.diff(warm).take(3)} vs ${warm.diff(fit).take(3)}")
-  }
-
-  test("ensureIvfIndex rebuilds when the corpus fingerprint mismatches") {
-    val idx = Ann.ensureIvfIndex(spark, dir)
-    // simulate an in-place corpus rewrite: doctor the persisted fingerprint
-    import spark.implicits._
-    Seq((8, Ann.IvfDims, Ann.IvfIters, -999L, -999L))
-      .toDF("n_lists", "dims", "iters", "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    // the staleness check runs once per JVM (Memo); a rewrite is
-    // only detectable from a fresh process — simulate that restart
-    Memo.resetAll()
-    val idx2 = Ann.ensureIvfIndex(spark, dir)
-    assert(idx2 == idx)
-    val m = spark.read.parquet(s"$idx2/meta").head
-    assert(m.getAs[Long]("nvecs") > 0L, "stale meta served instead of a rebuild")
-  }
+  indexTests(graft.ann.VectorIndex.Kind.Ivf)
 }

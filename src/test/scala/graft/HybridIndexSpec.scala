@@ -96,6 +96,33 @@ class HybridIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$half/corpus/meta").count() === 1)
   }
 
+  test("ensureIndex rebuilds when one document is rewritten at equal count and max doc_id") {
+    val corpus = java.nio.file.Files.createTempDirectory("hybrid_rewrite").toString
+    val docsPath = s"$corpus/documents.parquet"
+    Tables.documents(spark, dir).write.parquet(docsPath)
+    val idx = HybridSearch.ensureIndex(spark, corpus)
+    def meta = spark.read.parquet(s"$idx/corpus/meta").head
+    val before = meta
+    // rewrite one document's text in place: count and max doc_id unchanged
+    val docs = spark.read.parquet(docsPath)
+    val first = docs.agg(min("doc_id")).head.getLong(0)
+    docs.withColumn("text", when(col("doc_id") === first, concat(col("text"), lit(" rewritten")))
+        .otherwise(col("text")))
+      .write.parquet(s"$corpus/rewritten.parquet")
+    val fs = new org.apache.hadoop.fs.Path(corpus).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(docsPath), true)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$corpus/rewritten.parquet"),
+      new org.apache.hadoop.fs.Path(docsPath))
+    // the check runs once per process: forget it, as a restart would
+    Memo.invalidate("hybrid.ensure", idx)
+    assert(HybridSearch.ensureIndex(spark, corpus) == idx)
+    val after = meta
+    assert(after.getAs[Long]("ndocs") == before.getAs[Long]("ndocs") &&
+      after.getAs[Long]("max_doc_id") == before.getAs[Long]("max_doc_id"))
+    assert(after.getAs[Long]("content_digest") != before.getAs[Long]("content_digest"),
+      "the index built over the old text was served")
+  }
+
   /** Recursive dir copy for crash-window simulation. */
   private def copyDir(src: String, dst: String): Unit = {
     val s = java.nio.file.Paths.get(src)

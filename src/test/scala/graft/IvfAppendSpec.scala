@@ -1,44 +1,14 @@
 package graft
 
-import graft.ann.Ann
+import graft.ann.{Ann, VectorIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class IvfAppendSpec extends AnyFunSuite {
+class IvfAppendSpec extends AnyFunSuite with VectorIndexBehaviours {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
-  private def freshIdx(): String =
-    java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
-
-  test("appending a fit-corpus vector assigns it to the list the fit chose") {
-    val idx = freshIdx()
-    val emb = Tables.embeddings(spark, dir)
-    Ann.buildIvfIndexFrom(spark, emb, idx)
-    val fitLists = spark.read.parquet(s"$idx/lists")
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("list_id")).toMap
-    // re-append a slice of the SAME corpus through the frozen-centroid path
-    Ann.appendToIvfIndex(spark, idx, emb.filter(col("vec_id") % 7 === 0), 0L)
-    val appended = spark.read.parquet(s"$idx/appends/batch=0/lists")
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("list_id"))
-    assert(appended.nonEmpty)
-    appended.foreach { case (v, l) =>
-      assert(fitLists(v) == l, s"vec $v: fit ${fitLists(v)} != append $l")
-    }
-  }
-
-  test("append is exactly-once: a replayed batchId is a no-op") {
-    val idx = freshIdx()
-    val emb = Tables.embeddings(spark, dir)
-    Ann.buildIvfIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), idx)
-    val b = emb.filter(col("vec_id") % 10 === 4)
-    Ann.appendToIvfIndex(spark, idx, b, 0L)
-    val first = spark.read.parquet(s"$idx/appends/batch=0/lists").count()
-    // second delivery of the same batchId must not rewrite (even with
-    // different content — the marker wins)
-    Ann.appendToIvfIndex(spark, idx, b.limit(1), 0L)
-    assert(spark.read.parquet(s"$idx/appends/batch=0/lists").count() == first)
-  }
+  appendTests(VectorIndex.Kind.Ivf)
 
   test("annIvfAppend finds appended vectors and answers appended queries") {
     val res = Ann.annIvfAppend(spark, dir).collect()
@@ -53,19 +23,15 @@ class IvfAppendSpec extends AnyFunSuite {
   }
 
   test("uncommitted append dirs are invisible to the reader") {
-    val idx = freshIdx()
+    val idx = VectorIndexCases.tmp("graft_ivf_append")
     val emb = Tables.embeddings(spark, dir)
-    Ann.buildIvfIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), idx)
-    Ann.appendToIvfIndex(spark, idx, emb.filter(col("vec_id") % 10 === 4), 0L)
-    val committed = Ann.ivfTopKIndexedWithAppends(spark, dir, idx).collect()
+    VectorIndex.build(spark, emb.filter(col("vec_id") % 5 =!= 4), idx, VectorIndex.Kind.Ivf)
+    VectorIndex.append(spark, idx, emb.filter(col("vec_id") % 10 === 4), 0L)
+    val committed = VectorIndexCases.rowSet(VectorIndex.topK(spark, dir, idx))
     // fake a crashed append: data present, no marker
     emb.filter(col("vec_id") % 10 === 9)
       .select(col("vec_id"), lit(0L).as("list_id"))
-      .write.mode("overwrite").parquet(s"$idx/appends/batch=1/lists")
-    val after = Ann.ivfTopKIndexedWithAppends(spark, dir, idx).collect()
-    assert(after.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-      r.getAs[Long]("vec_id"))).toSet ==
-      committed.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-        r.getAs[Long]("vec_id"))).toSet)
+      .write.mode("overwrite").parquet(s"$idx/appends/batch=1/rows")
+    assert(VectorIndexCases.rowSet(VectorIndex.topK(spark, dir, idx)) == committed)
   }
 }

@@ -4,7 +4,7 @@ import graft.ann.{Ann, IvfPq, Pq}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class IvfPqSpec extends AnyFunSuite {
+class IvfPqSpec extends AnyFunSuite with VectorIndexBehaviours {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
@@ -53,49 +53,6 @@ class IvfPqSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("the persisted index reproduces the inline path bit-for-bit") {
-    val inline = IvfPq.ivfPqTopK(spark, dir, k = 10)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
-    IvfPq.buildIvfPqIndex(spark, dir, tmp)
-    val indexed = IvfPq.ivfPqTopKIndexed(spark, dir, tmp, k = 10)
-    assert(inline.exceptAll(indexed).count() == 0 &&
-      indexed.exceptAll(inline).count() == 0)
-    // cos_sim doubles too: compare the full row set exactly
-    assert(inline.collect().map(_.toString).sorted
-      .sameElements(indexed.collect().map(_.toString).sorted))
-    spark.catalog.clearCache()
-  }
-
-  test("ensureIvfPqIndex rebuilds when the corpus fingerprint mismatches") {
-    import spark.implicits._
-    val idx = IvfPq.ensureIvfPqIndex(spark, dir)
-    Seq((nl, Pq.SubSpaces, Pq.SubDim, Pq.CodeBook, Pq.PqIters, -9L, -9L))
-      .toDF("n_lists", "sub_spaces", "sub_dim", "n_codes", "iters",
-        "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    Memo.resetAll()
-    val idx2 = IvfPq.ensureIvfPqIndex(spark, dir)
-    assert(idx2 == idx)
-    assert(spark.read.parquet(s"$idx2/meta").head.getAs[Long]("nvecs") > 0L,
-      "stale meta served instead of a rebuild")
-    spark.catalog.clearCache()
-  }
-
-  test("the direct indexed path fails fast on geometry drift") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_geom").toString
-    IvfPq.buildIvfPqIndex(spark, dir, tmp)
-    Seq((nl, Pq.SubSpaces, Pq.SubDim + 1, Pq.CodeBook, Pq.PqIters, 1L, 1L))
-      .toDF("n_lists", "sub_spaces", "sub_dim", "n_codes", "iters",
-        "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    val e = intercept[IllegalArgumentException] {
-      IvfPq.ivfPqTopKIndexed(spark, dir, tmp, k = 10)
-    }
-    assert(e.getMessage.contains("different geometry"))
-    spark.catalog.clearCache()
-  }
-
   test("every query returns k ranked rows; ranks are 1..k") {
     val out = IvfPq.ivfPqTopK(spark, dir, k = 10).persist()
     val perQ = out.groupBy("query_id").agg(count(lit(1)).as("n"),
@@ -108,4 +65,6 @@ class IvfPqSpec extends AnyFunSuite {
     out.unpersist()
     spark.catalog.clearCache()
   }
+
+  indexTests(graft.ann.VectorIndex.Kind.IvfAdc)
 }

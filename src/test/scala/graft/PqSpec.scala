@@ -4,7 +4,7 @@ import graft.ann.{Ann, Pq}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PqSpec extends AnyFunSuite {
+class PqSpec extends AnyFunSuite with VectorIndexBehaviours {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
@@ -35,60 +35,6 @@ class PqSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("the persisted index reproduces the inline path bit-for-bit") {
-    val inline = Pq.pqTopK(spark, dir, k = 10)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
-    Pq.buildPqIndex(spark, dir, tmp)
-    val indexed = Pq.pqTopKIndexed(spark, dir, tmp, k = 10)
-    assert(inline.exceptAll(indexed).count() == 0 &&
-      indexed.exceptAll(inline).count() == 0)
-    // cos_sim doubles too: compare the full row set exactly
-    assert(inline.collect().map(_.toString).sorted
-      .sameElements(indexed.collect().map(_.toString).sorted))
-    spark.catalog.clearCache()
-  }
-
-  test("ensurePqIndex rebuilds when the corpus fingerprint mismatches") {
-    import spark.implicits._
-    val idx = Pq.ensurePqIndex(spark, dir)
-    // simulate an in-place corpus rewrite: doctor the persisted fingerprint
-    Seq((Pq.SubSpaces, Pq.SubDim, Pq.CodeBook, Pq.PqIters, -999L, -999L))
-      .toDF("sub_spaces", "sub_dim", "n_codes", "iters", "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
-    // the staleness check runs once per JVM (Memo); a rewrite is
-    // only detectable from a fresh process — simulate that restart
-    Memo.resetAll()
-    val idx2 = Pq.ensurePqIndex(spark, dir)
-    assert(idx2 == idx)
-    val m = spark.read.parquet(s"$idx2/meta").head
-    assert(m.getAs[Long]("nvecs") > 0L, "stale meta served instead of a rebuild")
-    spark.catalog.clearCache()
-  }
-
-  test("the direct indexed path fails fast on a geometry mismatch") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_geom").toString
-    Pq.buildPqIndex(spark, dir, tmp)
-    // an index written under a FUTURE geometry (different sub_dim) must
-    // throw through pqTopKIndexed, not silently mis-decode (advice-r14)
-    Seq((Pq.SubSpaces, Pq.SubDim + 1, Pq.CodeBook, Pq.PqIters, 1L, 1L))
-      .toDF("sub_spaces", "sub_dim", "n_codes", "iters", "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    val e = intercept[IllegalArgumentException] {
-      Pq.pqTopKIndexed(spark, dir, tmp, k = 10)
-    }
-    assert(e.getMessage.contains("different geometry"))
-    // and a codebook/meta row-count disagreement fails too
-    Seq((Pq.SubSpaces, Pq.SubDim, Pq.CodeBook + 7, Pq.PqIters, 1L, 1L))
-      .toDF("sub_spaces", "sub_dim", "n_codes", "iters", "nvecs", "max_vec_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    val e2 = intercept[IllegalArgumentException] {
-      Pq.pqTopKIndexed(spark, dir, tmp, k = 10)
-    }
-    assert(e2.getMessage.contains("inconsistent index"))
-    spark.catalog.clearCache()
-  }
-
   test("every query returns k ranked rows; ranks are 1..k") {
     val out = Pq.pqTopK(spark, dir, k = 10).persist()
     val perQ = out.groupBy("query_id").agg(count(lit(1)).as("n"),
@@ -100,4 +46,6 @@ class PqSpec extends AnyFunSuite {
     out.unpersist()
     spark.catalog.clearCache()
   }
+
+  indexTests(graft.ann.VectorIndex.Kind.Pq)
 }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.ann.Ann
-import graft.streaming.{ExactlyOnce, StreamingIvfIndex}
+import graft.ann.{Ann, VectorIndex}
+import graft.streaming.{ExactlyOnce, StreamingVectorIndex}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +25,7 @@ class StreamingIvfIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
     val idx = tmp("sivf_idx")
-    Ann.buildIvfIndexFrom(spark, emb.filter(col("vec_id") % 5 =!= 4), idx)
+    VectorIndex.build(spark, emb.filter(col("vec_id") % 5 =!= 4), idx, VectorIndex.Kind.Ivf)
     val slice = emb.filter(col("vec_id") % 5 === 4)
       .select("vec_id", "embedding").orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -36,7 +36,7 @@ class StreamingIvfIndexSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, Array[Float])]
     val q = input.toDF().toDF("vec_id", "embedding")
       .writeStream
-      .foreachBatch(StreamingIvfIndex.indexSink(idx))
+      .foreachBatch(StreamingVectorIndex.indexSink(idx))
       .option("checkpointLocation", tmp("sivf_ckpt"))
       .start()
     try {
@@ -48,20 +48,20 @@ class StreamingIvfIndexSpec extends AnyFunSuite {
 
     val committed = ExactlyOnce.committedBatches(spark, s"$idx/appends")
     assert(committed.size == 2, s"expected 2 committed batches, got $committed")
-    val streamedIds = spark.read.parquet(committed.map(_ + "/lists"): _*)
+    val streamedIds = spark.read.parquet(committed.map(_ + "/rows"): _*)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(streamedIds == slice.map(_._1).toSet)
   }
 
   test("streamed replay equals the two-batch append arc bit-for-bit") {
-    val streamed = key(StreamingIvfIndex.streamingIvfAppendReplay(spark, dir))
+    val streamed = key(StreamingVectorIndex.appendReplay(spark, dir, VectorIndex.Kind.Ivf))
     val batch = key(Ann.annIvfAppend(spark, dir))
     assert(streamed == batch)
   }
 
   test("micro-batch boundaries cannot change the probe answer") {
-    val two = key(StreamingIvfIndex.streamingIvfAppendReplay(spark, dir, nBatches = 2))
-    val seven = key(StreamingIvfIndex.streamingIvfAppendReplay(spark, dir, nBatches = 7))
+    val two = key(StreamingVectorIndex.appendReplay(spark, dir, VectorIndex.Kind.Ivf, nBatches = 2))
+    val seven = key(StreamingVectorIndex.appendReplay(spark, dir, VectorIndex.Kind.Ivf, nBatches = 7))
     assert(two == seven)
   }
 }
