@@ -650,7 +650,7 @@ object Ann {
     * twin of [[distinctFeatCount]]. */
   private[graft] def distinctFeatCountSql(fCte: String): String =
     s"SELECT COUNT(*) FROM (SELECT DISTINCT " +
-      (0 until IvfDims).map(i => s"x$i").mkString(", ") + s" FROM $fCte)"
+      xCols.mkString(", ") + s" FROM $fCte)"
 
   /** Spherical features: each q20 component re-projected onto the 2^20
     * sphere (round(qe·2^20/||qe||) — exact-integer in, one portable

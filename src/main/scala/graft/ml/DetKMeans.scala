@@ -78,13 +78,19 @@ object DetKMeans {
   /** Re-derive z-columns + `cluster` for any frame with the model's feature
     * columns — the scoring path for a cached [[Model]] (e.g. Ann's IVF
     * index cache skips the fit but still assigns inverted lists). */
-  def assign(df: DataFrame, featCols: Seq[String], model: Model): DataFrame = {
-    val zCols = featCols.indices.map(i =>
-      ((col(featCols(i)).cast("double") - lit(model.mu(i))) / lit(model.sigma(i))).as(s"z$i"))
-    val z = df.select(col("*") +: zCols: _*)
-    z.withColumn("cluster",
-      assignExpr(featCols.indices.map(i => col(s"z$i")), model.centers))
-  }
+  def assign(df: DataFrame, featCols: Seq[String], model: Model): DataFrame =
+    df.select(col("*") +: zCols(featCols, model.mu, model.sigma): _*)
+      .withColumn("cluster", assignExpr(featCols.indices.map(i => col(s"z$i")), model.centers))
+
+  /** z_i = (x_i − μ_i)/σ_i as doubles. Where μ_i = 0 and σ_i = 1 (every
+    * feature of a raw-space fit) z_i is the feature cast to double: on an
+    * integral feature (x − 0.0)/1.0 is x bit for bit, so the no-op
+    * arithmetic stays out of the (often 64-column) projection. */
+  private def zCols(featCols: Seq[String], mu: Array[Double], sigma: Array[Double]): Seq[Column] =
+    featCols.indices.map { i =>
+      val x = col(featCols(i)).cast("double")
+      (if (mu(i) == 0.0 && sigma(i) == 1.0) x else (x - lit(mu(i))) / lit(sigma(i))).as(s"z$i")
+    }
 
   /** Fit + assign: returns (df ∪ z-columns ∪ `cluster`, model). `featCols`
     * must be integral columns
@@ -146,9 +152,7 @@ object DetKMeans {
         (n0, mu0, sigma0)
       }
 
-    val zCols = featCols.indices.map(i =>
-      ((col(featCols(i)).cast("double") - lit(mu(i))) / lit(sigma(i))).as(s"z$i"))
-    val z = df.select(col("*") +: zCols: _*)
+    val z = df.select(col("*") +: zCols(featCols, mu, sigma): _*)
 
     val zNames = featCols.indices.map(i => s"z$i")
     val work = z
