@@ -31,30 +31,66 @@ object Tables {
     * missing path falls through to Spark's own error. On a 4-core box, a
     * warm JVM resolves one sf0.1 input in about 11 ms with its schema given
     * against about 95 ms with the footer job. */
-  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    listing(spark, paths) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(listing) =>
+        val nanosAsLong = spark.conf.get(NanosAsLong, "false").toBoolean
+        var inferred: Option[DataFrame] = None // a miss returns the frame it inferred
+        val reusable =
+          if (nanosAsLong) Memo.peek[StructType]("tables.schema", (paths, listing, false))
+          else None
+        val schema = reusable.getOrElse(Memo.get("tables.schema", (paths, listing, nanosAsLong)) {
+          val df = spark.read.parquet(paths: _*)
+          inferred = Some(df)
+          df.schema
+        })
+        inferred.getOrElse(spark.read.schema(schema).parquet(paths: _*))
+    }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Every file's (path, length, modification time) under each of `paths`,
+    * or None when a path is missing. */
+  private def listing(spark: SparkSession,
+                      paths: Seq[String]): Option[Seq[Seq[(String, Long, Long)]]] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val roots = paths.map(new org.apache.hadoop.fs.Path(_))
-    if (!roots.forall(p => p.getFileSystem(conf).exists(p))) spark.read.parquet(paths: _*)
-    else {
-      val listing = roots.map { p =>
-        val files = p.getFileSystem(conf).listFiles(p, true)
-        val out = Seq.newBuilder[(String, Long, Long)]
-        while (files.hasNext) {
-          val f = files.next()
-          out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-        }
-        out.result()
+    if (!roots.forall(p => p.getFileSystem(conf).exists(p))) None
+    else Some(roots.map { p =>
+      val files = p.getFileSystem(conf).listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-      val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean
-      var inferred: Option[DataFrame] = None // a miss returns the frame it inferred
-      val reusable =
-        if (nanosAsLong) Memo.peek[StructType]("tables.schema", (paths, listing, false)) else None
-      val schema = reusable.getOrElse(Memo.get("tables.schema", (paths, listing, nanosAsLong)) {
-        val df = spark.read.parquet(paths: _*)
-        inferred = Some(df)
-        df.schema
-      })
-      inferred.getOrElse(spark.read.schema(schema).parquet(paths: _*))
+      out.result()
+    })
+  }
+
+  /** True when a parquet file under `path` stores a TIMESTAMP(NANOS)
+    * column: read from the parquet footers in this JVM (no Spark job),
+    * memoized per file listing. */
+  private def holdsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    listing(spark, Seq(path)).exists { l =>
+      Memo.get("tables.nanos", l) {
+        l.flatten.map(f => new org.apache.hadoop.fs.Path(f._1))
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .exists { f =>
+            val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+            try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists {
+              _.getPrimitiveType.getLogicalTypeAnnotation match {
+                case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+                case _ => false
+              }
+            } finally reader.close()
+          }
+      }
     }
   }
 
@@ -65,23 +101,25 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = read(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = read(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = read(spark, dir, "lineitem")
-  /** events.parquet carries ns-precision timestamps, which the vectorized
-    * parquet reader rejects; read nanos as long and convert to µs timestamps
-    * (truncation — matches DuckDB's ns→µs handling).
+  /** events.parquet may carry ns-precision timestamps, which the vectorized
+    * parquet reader rejects; such a file is read with nanos as long and
+    * converted to µs timestamps (truncation — matches DuckDB's ns→µs
+    * handling). The shipped files store µs timestamps and read as they are.
     *
-    * SESSION-LEVEL SIDE EFFECT (documented contract): Spark exposes
+    * SESSION-LEVEL SIDE EFFECT (documented contract), only when the file
+    * holds a TIMESTAMP(NANOS) column: Spark exposes
     * `spark.sql.legacy.parquet.nanosAsLong` only as a SQL conf — there is no
-    * per-read parquet option — so this reader flips it for the whole session
-    * and leaves it set. Any later read of ns-timestamp parquet in the same
-    * session will also see ns as LongType; wrap such reads the way this one
-    * wraps events (convert explicitly), or unset the conf. Restoring the
+    * per-read parquet option — so this reader then flips it for the whole
+    * session and leaves it set. Any later read of ns-timestamp parquet in the
+    * same session will also see ns as LongType; wrap such reads the way this
+    * one wraps events (convert explicitly), or unset the conf. Restoring the
     * conf here would be unsafe: the scan re-reads it lazily at execution. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (holdsNanos(spark, s"$dir/events.parquet")) spark.conf.set(NanosAsLong, "true")
     val df = read(spark, dir, "events")
-    // schema-dispatch: the driver's file carries ns-as-long (converted here);
-    // corpora rewritten by other tools (replication harnesses) carry a real
-    // timestamp column already — accept both layouts
+    // schema-dispatch: a TIMESTAMP(NANOS) file reads as ns longs (converted
+    // here); the shipped files and corpora rewritten by other tools carry a
+    // real timestamp column already — accept both layouts
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, InterpretedOrdering, Nondeterministic, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.types._
 
-/** The partition-local prefix behind every [[graft.operators.RankOps]]
-  * form: `struct<pid: int, p: long>`, where `pid` is the partition index
+/** The partition-local prefix behind [[graft.operators.RankOps]]' ranks and
+  * running sums: `struct<pid: int, p: long>`, where `pid` is the partition index
   * and `p` the inclusive running sum of the long summand (first child) over
   * the rows the partition has produced so far, restarting wherever the
   * group keys (the other children) change; keys compare as the sort does.

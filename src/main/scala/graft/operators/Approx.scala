@@ -6,52 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Approximate scale-path variants of the exact operators.
   *
-  * The oracle-checked queries use exact semantics (exact NTILE via RankOps,
-  * exact countDistinct) because the correctness gate demands bit-equality.
-  * At 100 TB you usually trade that for one less shuffle / no global rank:
-  * these variants score against *approximate quantile thresholds* (a tiny
-  * driver-side array, broadcast back) and use HLL distinct counts. Errors
-  * are bounded (`relativeError`, ±2.3% for HLL) and the plans are pure
-  * map-side joins after one aggregate.
+  * The oracle-checked queries use exact semantics (exact countDistinct)
+  * because the correctness gate demands bit-equality. At 100 TB you usually
+  * trade that for one less shuffle: these variants use HLL distinct counts
+  * (±2.3%) and drop the count-distinct Expand. (Exact RFM scoring is
+  * already threshold lookups after one aggregate — RankOps' NTILE boundary
+  * selection — so it has no approximate twin.)
   */
 object Approx {
   import Exact._
-
-  /** RFM scoring via approx-quantile thresholds (the reference's global-sort
-    * ntile, spark_gold.py:114-116, replaced by threshold lookups; the exact
-    * twin is Gold.rfmSegments). score 1 = best, matching the exact variant's
-    * DESC ntile orientation. */
-  def rfmApprox(spark: SparkSession, dir: String, relativeError: Double = 0.001): DataFrame = {
-    val o = Tables.ordersWithCountry(spark, dir)
-    val metrics = o.groupBy(col("o_custkey").as("customer_id"), col("country"))
-      .agg(
-        max(to_date(col("o_orderdate"))).as("last_purchase"),
-        countAll.as("transaction_count"),
-        decSum(col("o_totalprice")).as("__spent"))
-      .withColumn("total_spent", col("__spent").cast("double"))
-      .withColumn("recency_days", datediff(current_date(), col("last_purchase")).cast("double"))
-      .drop("__spent")
-
-    // one pass over the (already small) customer-grain frame for all 12 cuts
-    val qs = Array(0.2, 0.4, 0.6, 0.8)
-    val Array(rq, fq, mq) = metrics.stat.approxQuantile(
-      Array("recency_days", "transaction_count", "total_spent"), qs, relativeError)
-
-    def scoreAsc(c: String, cuts: Array[Double]) = // low value = score 1 (recency)
-      when(col(c) <= cuts(0), 1L).when(col(c) <= cuts(1), 2L)
-        .when(col(c) <= cuts(2), 3L).when(col(c) <= cuts(3), 4L).otherwise(5L)
-    def scoreDesc(c: String, cuts: Array[Double]) = // high value = score 1 (freq/monetary)
-      when(col(c) > cuts(3), 1L).when(col(c) > cuts(2), 2L)
-        .when(col(c) > cuts(1), 3L).when(col(c) > cuts(0), 4L).otherwise(5L)
-
-    metrics
-      .withColumn("recency_score", scoreAsc("recency_days", rq))
-      .withColumn("frequency_score", scoreDesc("transaction_count", fq.map(_.toDouble)))
-      .withColumn("monetary_score", scoreDesc("total_spent", mq))
-      .withColumn("rfm_score",
-        concat(col("recency_score").cast("string"), col("frequency_score").cast("string"),
-          col("monetary_score").cast("string")))
-  }
 
   /** Sales summary with HLL distinct counts — same plan shape as the exact
     * query minus the count-distinct Expand (which doubles shuffle volume). */

@@ -78,8 +78,8 @@ object Gold {
   }
 
   /** RFM customer segmentation (reference: src/etl/gold/spark_gold.py:93-137).
-    * ntile scoring is exact SQL NTILE semantics but computed scalably via
-    * RankOps (the reference's unpartitioned Window.orderBy is its own
+    * ntile scoring is exact SQL NTILE semantics but computed scalably by
+    * RankOps' boundary selection (the reference's unpartitioned Window.orderBy is its own
     * scale-killer — see RankOps scaladoc). Segment labels use the reference's
     * regex CASE ladder. */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
@@ -96,20 +96,19 @@ object Gold {
         datediff(col("last_purchase"), col("first_purchase")).cast("long"))
       .drop("__spent")
 
-    // Three global NTILE(5)s, each with customer_id as the unique tie-breaker
-    // (matches NTILE(5) OVER (ORDER BY x DESC, customer_id) in the oracle).
-    val scored0 = RankOps.withGlobalNtile(metrics, "recency_score", 5,
-      Seq(col("last_purchase").desc, col("customer_id").asc))
-    val scored1 = RankOps.withGlobalNtile(scored0, "frequency_score", 5,
-      Seq(col("transaction_count").desc, col("customer_id").asc))
-    val scored2 = RankOps.withGlobalNtile(scored1, "monetary_score", 5,
-      Seq(col("total_spent").desc, col("customer_id").asc))
+    // Three global NTILE(5)s in one call, each with customer_id as the unique
+    // tie-breaker (matches NTILE(5) OVER (ORDER BY x DESC, customer_id) in
+    // the oracle).
+    val scored = RankOps.withGlobalNtile(metrics, 5, Seq(
+      "recency_score" -> Seq(col("last_purchase").desc, col("customer_id").asc),
+      "frequency_score" -> Seq(col("transaction_count").desc, col("customer_id").asc),
+      "monetary_score" -> Seq(col("total_spent").desc, col("customer_id").asc)))
 
     // NTILE over DESC ordering makes 1 the best score. The segment regex
     // ladder below is deliberately re-authored: the reference's own ladder
     // (spark_gold.py:120-137) is internally inconsistent about which end is
     // "best", so this is a coherent remap, not a faithful copy.
-    val withScore = scored2.withColumn("rfm_score",
+    val withScore = scored.withColumn("rfm_score",
       concat(col("recency_score").cast("string"),
              col("frequency_score").cast("string"),
              col("monetary_score").cast("string")))

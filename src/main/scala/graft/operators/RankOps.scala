@@ -1,10 +1,12 @@
 package graft.operators
 
-import graft.functions.PartitionPrefix
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.functions.{NtileScore, PartitionPrefix}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftInternal, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
-  InterpretedOrdering, UnsafeProjection}
+  InterpretedOrdering, NullOrdering, SortDirection, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.BroadcastDistribution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
@@ -13,11 +15,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
-/** Distributed global rank, grouped rank, NTILE and running sum — one
-  * mechanism. The reference scores RFM with `Window.orderBy(...)` and **no
-  * partition** (reference: src/etl/gold/spark_gold.py:114-116), which Spark
-  * collapses to a single-partition sort, the classic scale-killer.
+/** Distributed global rank, grouped rank, running sum and NTILE. The
+  * reference scores RFM with `Window.orderBy(...)` and **no partition**
+  * (reference: src/etl/gold/spark_gold.py:114-116), which Spark collapses
+  * to a single-partition sort, the classic scale-killer.
   *
+  * Ranks and running sums share one prefix core; NTILE has its own path
+  * (below).
   * Every form is one prefix sum of a summand `v` (1 for ranks, the value
   * for running sums) under `groupCols ++ sortCols` order: range-partition
   * on that order (each group occupies consecutive partitions) and
@@ -34,11 +38,14 @@ import scala.jdk.CollectionConverters._
   * sort, no `limit` scan. A call costs 3 Spark jobs besides its input's
   * own stages: the range sample, the range shuffle's map stage, and the
   * offsets fold, which also materializes the checkpoint (4 when the
-  * sampler re-samples a skewed input partition). An input that would
-  * re-run a shuffle of its own (a join, an aggregate) is persisted while
-  * the range sample and the shuffle map read it, then released, so it is
-  * evaluated once; a scan, a checkpoint or a frame the caller already
-  * persisted is read twice instead.
+  * sampler re-samples a skewed input partition). An input whose plan runs
+  * a shuffle of its own (a join, an aggregate — including the exchanges
+  * AQE's `EnsureRequirements` adds) is checkpointed, non-eagerly: the range
+  * sample fills the checkpoint and the shuffle map reads it, so the input
+  * is evaluated once with no job of its own (a persisted input would be
+  * one more job under AQE, a table-cache query stage); a scan, a
+  * checkpoint or a frame the caller already persisted is read twice
+  * instead.
   *
   * Why the checkpoint: the offsets are only valid for the exact boundaries
   * the range sampler drew, and a cache-evicted recompute could draw others
@@ -50,8 +57,22 @@ import scala.jdk.CollectionConverters._
   * past [[MaxBoundedFrame]] rows it fails loudly rather than broadcast a
   * data-proportional table.
   *
+  * NTILE is not a rank: `NTILE(k)` needs only the k − 1 rows where its
+  * buckets end, so `withGlobalNtile` selects those boundary keys and scores
+  * every row with a projection, `1 + #{i : row sorts after boundary i}`
+  * ([[graft.functions.NtileScore]]) — no exchange, no output checkpoint, no
+  * broadcast join. The selection serves any number of orders over one frame
+  * in the same jobs: one count-and-sample job (a reservoir of keys per
+  * partition; it also materializes an input that would re-run a shuffle,
+  * which is checkpointed), one exact histogram over splitters drawn from
+  * the sample, and one bounded collect of the buckets that hold the
+  * boundary ranks. A bucket over the collect bound is split once more on
+  * the sampled keys inside it (one job for every such bucket), and past
+  * that the call fails loudly. The result depends only on row values, so a
+  * recompute cannot draw other boundaries.
+  *
   * Sort keys must be a total order (callers append a unique tie-breaker),
-  * so `withGlobalNtile`'s SQL bucket formula matches `NTILE(k) OVER (ORDER
+  * so ranks and NTILE buckets match `row_number()` / `NTILE(k) OVER (ORDER
   * BY …)` bit-for-bit.
   *
   * Per-group order statistics (medians, quartiles, p90–p99, MAD, a series'
@@ -72,7 +93,8 @@ object RankOps {
   /** Ceiling for frames that ride an UNPARTITIONED window because they are
     * calendar/bucket-bounded (daily series, monthly rollups, KPI buckets):
     * ~550 years of days — far above any real calendar frame, far below any
-    * data-proportional one. Also bounds the prefix core's offset table. */
+    * data-proportional one. Also bounds the prefix core's offset table and
+    * the rows one NTILE boundary bucket may collect. */
   val MaxBoundedFrame = 200000L
 
   /** Guard rail for unpartitioned-window expressions whose legality rests
@@ -104,11 +126,9 @@ object RankOps {
     val keys = groupCols.map(col)
     val order = keys ++ sortCols
     // the range sample and the shuffle map both read the input: one that
-    // would re-run a shuffle of its own is persisted so it runs once
-    val input = if (rereadsCheaply(df)) df else df.persist()
-    val ranged =
-      try input.repartitionByRange(parts, order: _*).localCheckpoint(false)
-      finally if (input ne df) input.unpersist()
+    // would re-run a shuffle of its own is checkpointed so it runs once
+    val input = if (rereadsCheaply(df)) df else df.localCheckpoint(false)
+    val ranged = input.repartitionByRange(parts, order: _*).localCheckpoint(false)
     val aux = partitionTotals(ranged, keys, summand)
     if (aux.length > MaxBoundedFrame)
       throw new IllegalStateException(s"bounded-frame guard 'rank_offsets': more " +
@@ -139,16 +159,26 @@ object RankOps {
     (out.drop("__pp" +: "__pid" +: "__off" +: "__tot" +: auxKeys: _*), aux.map(_._3).sum)
   }
 
-  /** True when reading `df` twice costs no more than caching it: it is
+  /** True when reading `df` again costs no more than caching it: it is
     * already persisted, or its physical plan runs no shuffle (a scan, a
-    * checkpoint, a broadcast join onto either). */
+    * checkpoint, a broadcast join onto either). Under AQE the executed plan
+    * is the adaptive root, whose `inputPlan` is planned before
+    * `EnsureRequirements` adds the aggregate and join exchanges; so a
+    * shuffle is also a node whose child does not yet satisfy the
+    * distribution the node requires (a broadcast side is not a shuffle). */
   private def rereadsCheaply(df: DataFrame): Boolean =
     df.storageLevel != StorageLevel.NONE || {
       val plan = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.inputPlan
         case p => p
       }
-      !plan.exists(_.isInstanceOf[ShuffleExchangeLike])
+      !plan.exists {
+        case _: ShuffleExchangeLike => true
+        case p => p.children.zip(p.requiredChildDistribution).exists {
+          case (_, _: BroadcastDistribution) => false
+          case (c, d) => !c.outputPartitioning.satisfies(d)
+        }
+      }
     }
 
   /** One row per (partition, group) of the range-partitioned checkpoint:
@@ -219,20 +249,169 @@ object RankOps {
   def valueAt(value: Column, rankCol: String, pos: Column): Column =
     min(when(col(rankCol) === pos, value))
 
-  /** Adds `ntileCol` = exact `NTILE(k) OVER (ORDER BY sortCols)` (long). */
-  def withGlobalNtile(df: DataFrame, ntileCol: String, k: Int, sortCols: Seq[Column]): DataFrame = {
+  /** Adds one column per `(name, sortCols)` in `tiles`: exact `NTILE(k)
+    * OVER (ORDER BY sortCols)` (long), every order scored over the same
+    * frame in the same three jobs by boundary selection (see above). A
+    * bucket that holds a boundary is collected only up to `collectBound`
+    * rows; a larger one is split once more, and past that the call fails. */
+  def withGlobalNtile(df: DataFrame, k: Int, tiles: Seq[(String, Seq[Column])],
+                      collectBound: Long = MaxBoundedFrame): DataFrame = {
     require(k > 0, "ntile bucket count must be positive")
-    val (ranked, n) = withGlobalRankCounted(df, "__grank", sortCols)
-    val q = n / k // base bucket size
-    val r = n % k // first r buckets get one extra row
-    val rank = col("__grank")
-    val bucket =
-      if (q == 0) rank // fewer rows than buckets: row i -> bucket i
-      else if (r == 0) (rank - 1) / lit(q) + 1
-      else
-        when(rank <= lit((q + 1) * r), (rank - 1) / lit(q + 1) + 1)
-          .otherwise(lit(r) + (rank - 1 - lit(r * (q + 1))) / lit(q) + 1)
-    // integer division: operands are longs; use floor to force integral result
-    ranked.withColumn(ntileCol, floor(bucket).cast("long")).drop("__grank")
+    val orders = tiles.map { case (_, sortCols) => sortCols.map(GraftInternal.sortKey) }
+    val keys = orders.map(o => struct(o.map(_._1): _*))
+    val dirs = orders.map(_.map { case (_, dir, nulls) => (dir, nulls) })
+    // the three jobs and the scoring projection all read the input: one
+    // that would re-run a shuffle of its own is checkpointed, so it runs once
+    val input = if (k == 1 || rereadsCheaply(df)) df else df.localCheckpoint(false)
+    val bounds =
+      if (k == 1) dirs.map(_ => Array.empty[InternalRow])
+      else ntileBounds(input.select(keys: _*), k, dirs, collectBound)
+    tiles.indices.foldLeft(input) { (out, j) =>
+      out.withColumn(tiles(j)._1, NtileScore.of(keys(j), bounds(j), dirs(j)))
+    }
+  }
+
+  /** Reservoir size per input partition in the count-and-sample job, and
+    * the cap on the whole sample (keys per order, across partitions). */
+  private val SamplePerPartition = 256
+  private val SampleBudget = 1 << 18
+  /** Sampled keys per first-round bucket (so a bucket that needs a second
+    * round has sampled keys inside it to split on), and the cap on the
+    * first round's splitters. */
+  private val SamplesPerBucket = 16
+  private val MaxSplitters = 1023
+
+  /** A key range `(lo, hi]` of order `order` (a null end is open): `below`
+    * rows sort at or before `lo`, `size` rows fall inside, and `round`
+    * histograms have narrowed it so far. */
+  private case class Span(order: Int, lo: InternalRow, hi: InternalRow,
+                          below: Long, size: Long, round: Int)
+
+  /** For each order (a struct column of `keyed` and its field directions),
+    * the keys at the ranks where NTILE(k)'s buckets end, ascending: bucket
+    * `b` ends at rank `b·q + min(b, r)` for `n = q·k + r` rows, and a
+    * boundary at rank `n` has no row after it, so it is left out. */
+  private def ntileBounds(keyed: DataFrame, k: Int,
+                          dirs: Seq[Seq[(SortDirection, NullOrdering)]],
+                          collectBound: Long): Seq[Array[InternalRow]] = {
+    val types = keyed.schema.map(_.dataType.asInstanceOf[StructType])
+    val ords = types.zip(dirs).map { case (t, d) => NtileScore.ordering(t, d) }
+    val widths = types.map(_.size)
+    val rows = keyed.queryExecution.toRdd
+    val perPart = math.max(1, math.min(SamplePerPartition,
+      SampleBudget / math.max(1, rows.getNumPartitions)))
+    // job 1: each partition's row count and a reservoir of its key rows
+    val drawn = rows.mapPartitionsWithIndex { (pid, it) =>
+      val rnd = new scala.util.Random(pid)
+      val kept = new Array[InternalRow](perPart)
+      var n = 0L
+      while (it.hasNext) {
+        val row = it.next()
+        val slot = if (n < perPart) n else rnd.nextLong(n + 1)
+        if (slot < perPart) kept(slot.toInt) = row.copy()
+        n += 1
+      }
+      Iterator((n, kept.take(math.min(n, perPart.toLong).toInt)))
+    }.collect()
+    val n = drawn.map(_._1).sum
+    val (q, r) = (n / k, n % k)
+    val targets = (1 until k).map(b => b * q + math.min(b, r)).filter(_ < n).distinct
+    if (targets.isEmpty) return ords.map(_ => Array.empty[InternalRow])
+    // each order's sample, sorted, weighted by its partition's rows per key
+    val samples = ords.indices.map { j =>
+      drawn.flatMap { case (c, kept) =>
+        kept.map(row => (row.getStruct(j, widths(j)), c.toDouble / kept.length))
+      }.sortBy(_._1)(ords(j))
+    }
+    // split points in (lo, hi): the first round cuts the whole sample into
+    // equal weights; the second round splits on every sampled key inside
+    def splitters(s: Span): Array[InternalRow] = {
+      val ord = ords(s.order)
+      val inside = samples(s.order).filter { case (key, _) =>
+        (s.lo == null || ord.gt(key, s.lo)) && (s.hi == null || ord.lt(key, s.hi))
+      }
+      if (s.round > 0) inside.map(_._1)
+      else {
+        val cuts = math.min(MaxSplitters, inside.length / SamplesPerBucket)
+        val step = inside.map(_._2).sum / (cuts + 1)
+        val out = Array.newBuilder[InternalRow]
+        var (acc, taken) = (0.0, 0)
+        inside.foreach { case (key, w) =>
+          acc += w
+          if (taken < cuts && acc >= step * (taken + 1)) { out += key; taken += 1 }
+        }
+        out.result()
+      }
+    }
+    val found = ords.map(_ => scala.collection.mutable.Map.empty[Long, InternalRow])
+    var pending: Map[Span, Seq[Long]] =
+      ords.indices.map(j => Span(j, null, null, 0L, n, 0) -> targets).toMap
+    // jobs 2 and on: one exact pass per round serves every order and target
+    while (pending.nonEmpty) {
+      val plan = pending.keys.toSeq.map { s =>
+        if (s.round > 0 && s.size <= collectBound) (s, null)
+        else {
+          val cuts = if (s.round > 1) Array.empty[InternalRow] else splitters(s)
+          if (cuts.nonEmpty) (s, cuts)
+          else if (s.size <= collectBound) (s, null)
+          else throw new IllegalStateException(s"bounded-frame guard 'ntile_bounds': an " +
+            s"NTILE boundary lies in a bucket of ${s.size} rows after ${s.round} histogram " +
+            s"rounds, past the collect bound of $collectBound rows — the frame is too " +
+            "large to select its boundaries within the bound")
+        }
+      }
+      val passed = selectionPass(rows, widths, ords, plan)
+      pending = plan.zip(passed).flatMap { case ((s, cuts), (counts, keys)) =>
+        val ts = pending(s)
+        if (cuts == null) {
+          val sorted = keys.sorted(ords(s.order))
+          ts.foreach(t => found(s.order)(t) = sorted((t - s.below - 1).toInt))
+          Nil
+        } else {
+          val below = counts.scanLeft(s.below)(_ + _)
+          val ends = (s.lo +: cuts) :+ s.hi
+          ts.groupBy(t => below.lastIndexWhere(_ < t)).map { case (b, inB) =>
+            Span(s.order, ends(b), ends(b + 1), below(b), counts(b), s.round + 1) -> inB
+          }
+        }
+      }.toMap
+    }
+    found.map(f => targets.map(f).toArray)
+  }
+
+  /** One pass over the key rows for every span of `plan` at once: a span
+    * with splitters counts its rows per sub-range `(cut(i-1), cut(i)]`; one
+    * without (null) collects its keys, whose number the previous round
+    * counted exactly. */
+  private def selectionPass(rows: RDD[InternalRow], widths: Seq[Int],
+                            ords: Seq[InterpretedOrdering],
+                            plan: Seq[(Span, Array[InternalRow])]
+                           ): Seq[(Array[Long], Array[InternalRow])] = {
+    val probes = plan.map { case (s, cuts) => (s.order, s.lo, s.hi, cuts) }.toArray
+    val (counts, keys) = rows.mapPartitions { it =>
+      val counts = probes.map(p => if (p._4 == null) Array.emptyLongArray
+        else new Array[Long](p._4.length + 1))
+      val picked = probes.map(_ => Array.newBuilder[InternalRow])
+      while (it.hasNext) {
+        val row = it.next()
+        val keys = widths.indices.map(j => row.getStruct(j, widths(j)))
+        var i = 0
+        while (i < probes.length) {
+          val (j, lo, hi, cuts) = probes(i)
+          val key = keys(j)
+          val ord = ords(j)
+          if ((lo == null || ord.gt(key, lo)) && (hi == null || ord.lteq(key, hi))) {
+            if (cuts == null) picked(i) += key.copy()
+            else counts(i)(NtileScore.after(key, cuts, ord)) += 1
+          }
+          i += 1
+        }
+      }
+      Iterator((counts, picked.map(_.result())))
+    }.reduce { case ((c1, k1), (c2, k2)) =>
+      (c1.zip(c2).map { case (a, b) => a.indices.map(i => a(i) + b(i)).toArray },
+        k1.zip(k2).map { case (a, b) => a ++ b })
+    }
+    counts.toSeq.zip(keys.toSeq)
   }
 }

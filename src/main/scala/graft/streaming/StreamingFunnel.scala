@@ -112,8 +112,8 @@ object StreamingFunnel {
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     val stateDir = ReplayScratch.dir("sfunnel_state")
     val banded = graft.operators.RankOps
-      .withGlobalNtile(ev, "__b", nBatches, Seq(col("ts"), col("event_id")))
-      .localCheckpoint(false) // one rank pass, reused by every micro-batch filter
+      .withGlobalNtile(ev, nBatches, Seq("__b" -> Seq(col("ts"), col("event_id"))))
+      .localCheckpoint(false) // banded once, reused by every micro-batch filter
     val sink = funnelSink(stateDir)
     (1 to nBatches).foreach { k =>
       sink(banded.filter(col("__b") === k).drop("__b"), (k - 1).toLong)

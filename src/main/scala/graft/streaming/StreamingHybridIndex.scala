@@ -87,8 +87,8 @@ object StreamingHybridIndex {
     val slice = docs.filter(col("source") === graft.dedup.IncrementalDedup.BatchSource)
       .select("doc_id", "text")
     val banded = graft.operators.RankOps
-      .withGlobalNtile(slice, "__b", nBatches, Seq(col("doc_id")))
-      .localCheckpoint(false) // one rank pass, reused by every micro-batch filter
+      .withGlobalNtile(slice, nBatches, Seq("__b" -> Seq(col("doc_id"))))
+      .localCheckpoint(false) // banded once, reused by every micro-batch filter
     val sink = indexSink(indexDir, compactEvery = 2)
     (1 to nBatches).foreach { k =>
       sink(banded.filter(col("__b") === k).select("doc_id", "text"), (k - 1).toLong)

@@ -37,8 +37,8 @@ object StreamingVectorIndex {
                    nBatches: Int = 4): DataFrame =
     VectorIndex.appendArc(spark, dir, kind, s"s${kind.tag}_replay_idx") { fifth =>
       val banded = graft.operators.RankOps
-        .withGlobalNtile(fifth, "__b", nBatches, Seq(col("vec_id")))
-        .localCheckpoint(false) // one rank pass, reused by every micro-batch filter
+        .withGlobalNtile(fifth, nBatches, Seq("__b" -> Seq(col("vec_id"))))
+        .localCheckpoint(false) // banded once, reused by every micro-batch filter
       (1 to nBatches).map(b => banded.filter(col("__b") === b).select("vec_id", "embedding"))
     }
 }

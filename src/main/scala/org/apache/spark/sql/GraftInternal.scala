@@ -34,6 +34,22 @@ object GraftInternal {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** A sort Column (`col.desc`, `col.asc_nulls_last`, …) as its key Column,
+    * direction and null ordering; a plain Column sorts ascending, nulls
+    * first. (A sort Column's expression is resolved lazily, so the
+    * direction is read from its column node.) */
+  def sortKey(c: Column): (Column, catalyst.expressions.SortDirection,
+      catalyst.expressions.NullOrdering) = {
+    import catalyst.expressions.{Ascending, Descending, NullsFirst, NullsLast}
+    c.node match {
+      case internal.SortOrder(child, dir, nulls, _) =>
+        (new Column(child),
+          if (dir == internal.SortOrder.Ascending) Ascending else Descending,
+          if (nulls == internal.SortOrder.NullsFirst) NullsFirst else NullsLast)
+      case _ => (c, Ascending, NullsFirst)
+    }
+  }
+
   /** Spark's ANSI overflow errors (`QueryExecutionErrors` is
     * `private[sql]`), so a native kernel fails with the same error class
     * as the cast or arithmetic it replaces. */

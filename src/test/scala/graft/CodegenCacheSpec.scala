@@ -33,4 +33,28 @@ class CodegenCacheSpec extends AnyFunSuite {
     pass()
     assert(pass() == 0L)
   }
+
+  test("NTILE scoring of an input with other boundaries compiles no class") {
+    import graft.functions.NtileScore
+    import graft.operators.RankOps
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ntile_codegen").toString
+    Seq(0L, 7919L).foreach { shift =>
+      (1L to 500L).map(i => (i, (i * 31L + shift) % 1000L)).toDF("id", "v")
+        .write.parquet(s"$dir/t$shift")
+    }
+    def scored(shift: Long) = RankOps.withGlobalNtile(spark.read.parquet(s"$dir/t$shift"), 5,
+      Seq("a" -> Seq(col("v").desc, col("id")), "b" -> Seq(col("id").desc)))
+    val first = scored(0L)
+    first.write.format("noop").mode("overwrite").save()
+    // the scoring projection is whole-stage code, not an interpreted fallback
+    val fused = first.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[NtileScore]))))
+    assert(fused, first.queryExecution.executedPlan.toString)
+    val before = compiles
+    scored(7919L).write.format("noop").mode("overwrite").save()
+    assert(compiles - before == 0L)
+  }
 }

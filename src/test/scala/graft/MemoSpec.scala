@@ -128,7 +128,14 @@ class MemoSpec extends AnyFunSuite {
     (0L until 5L).toDF("id").write.parquet(s"$dir/t.parquet")
     val s = session(on = false)
     assert(jobsOf(Tables.read(s, dir, "t"))._1 >= 1, "the first read infers the schema")
+    // the shipped events store µs timestamps: reading them leaves the conf off
     Tables.events(s, TestSpark.sfDir)
+    assert(s.conf.get(nanosAsLong) == "false")
+    // an events file holding a TIMESTAMP(NANOS) column turns it on
+    java.nio.file.Files.copy(java.nio.file.Paths.get(ns),
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    assert(Tables.events(s, dir).schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
     assert(s.conf.get(nanosAsLong) == "true")
     assert(jobsOf(Tables.read(s, dir, "t").columns.toSeq) == (0, Seq("id")),
       "a schema inferred with the conf off was inferred again after events")

@@ -27,7 +27,7 @@ class RankOpsSpec extends AnyFunSuite {
 
   test("withGlobalNtile matches SQL NTILE semantics exactly (n not divisible by k)") {
     val n = 1237; val k = 5
-    val got = RankOps.withGlobalNtile(sampleDf(n), "nt", k, Seq(col("v").desc, col("id").asc))
+    val got = RankOps.withGlobalNtile(sampleDf(n), k, Seq("nt" -> Seq(col("v").desc, col("id").asc)))
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("nt"))).toMap
     spark.catalog.clearCache()
     val sorted = sampleDf(n).collect().map(r => (r.getLong(0), r.getInt(1)))
@@ -91,7 +91,7 @@ class RankOpsSpec extends AnyFunSuite {
   test("ntile handles n < k (each row its own bucket)") {
     import spark.implicits._
     val df = Seq((1L, 10), (2L, 5), (3L, 1)).toDF("id", "v")
-    val got = RankOps.withGlobalNtile(df, "nt", 5, Seq(col("v").desc, col("id").asc))
+    val got = RankOps.withGlobalNtile(df, 5, Seq("nt" -> Seq(col("v").desc, col("id").asc)))
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("nt"))).toMap
     spark.catalog.clearCache()
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
@@ -103,51 +103,69 @@ class RankOpsSpec extends AnyFunSuite {
     import spark.implicits._
     // duplicate sort values (broken by the unique id), a null group, one
     // group holding at least half the rows, summands with 0 and negatives;
-    // plus a one-row group and a constant (MAD = 0) group in every case
+    // plus a one-row group and a constant (MAD = 0) group in every case.
+    // One NTILE call scores three orders: descending, a nullable key
+    // ascending with a descending tie-breaker, and doubles with nulls, NaN,
+    // ±0.0 and ±∞ descending with nulls first; over the whole frame and
+    // over its first `cut` ids (n = 0 and n < k), with k = 1 among the ks
     val caseGen = for {
       n <- Gen.choose(0, 400)
       parts <- Gen.choose(1, 8)
       twoKeys <- Gen.oneOf(false, true)
       k <- Gen.choose(1, 7)
+      cut <- Gen.choose(0, 6)
       seed <- Gen.long
     } yield {
       val rnd = new scala.util.Random(seed)
+      val doubles = Seq(None, Some(Double.NaN), Some(-0.0), Some(0.0), Some(1.5), Some(-2.5),
+        Some(Double.PositiveInfinity), Some(Double.NegativeInfinity))
       val rows = (0 until n).map { i =>
         val big = rnd.nextBoolean() || rnd.nextBoolean()
         val g1 = if (big) Some("big") else Seq(None, Some("a"), Some("b"))(rnd.nextInt(3))
         val g2 = if (big) Some(0) else Seq(None, Some(0), Some(1))(rnd.nextInt(3))
-        (i.toLong, rnd.nextInt(20), g1, g2, rnd.between(-5L, 6L))
+        (i.toLong, rnd.nextInt(20), g1, g2, rnd.between(-5L, 6L),
+          doubles(rnd.nextInt(doubles.size)))
       }
       val fixed = Seq((n, 3, "one"), (n + 1, 7, "flat"), (n + 2, 7, "flat"), (n + 3, 7, "flat"))
-        .map { case (i, s, g) => (i.toLong, s, Option(g), Option(1), 1L) }
-      (rows ++ fixed, parts, if (twoKeys) Seq("g1", "g2") else Seq("g1"), k)
+        .map { case (i, s, g) => (i.toLong, s, Option(g), Option(1), 1L, Option(-0.0)) }
+      (rows ++ fixed, parts, if (twoKeys) Seq("g1", "g2") else Seq("g1"), k, cut)
     }
-    val prop = Prop.forAllNoShrink(caseGen) { case (rows, parts, groups, k) =>
-      val df = rows.toDF("id", "s", "g1", "g2", "v")
+    val prop = Prop.forAllNoShrink(caseGen) { case (rows, parts, groups, k, cut) =>
+      val df = rows.toDF("id", "s", "g1", "g2", "v", "d")
       val order = Seq(col("s").desc, col("id").asc)
+      val tiles = Seq("ntile" -> order,
+        "ntile_g2" -> Seq(col("g2").asc, col("id").desc),
+        "ntile_d" -> Seq(col("d").desc_nulls_first, col("id").asc))
       val all = Window.orderBy(order: _*)
       val inGroup = Window.partitionBy(groups.map(col): _*)
       val ref = df.select(col("id"),
           row_number().over(all).cast("long").as("rank"),
           row_number().over(inGroup.orderBy(order: _*)).cast("long").as("grank"),
           count(lit(1)).over(inGroup).as("gcount"),
-          ntile(k).over(all).cast("long").as("ntile"),
           sum(col("v")).over(all.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .as("cum"))
-        .collect().map(r => r.getLong(0) -> (1 to 5).map(r.getLong)).toMap
+        .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
       def byId(out: org.apache.spark.sql.DataFrame, cols: String*) =
         out.select(col("id") +: cols.map(col): _*).collect()
           .map(r => r.getLong(0) -> cols.indices.map(i => r.getLong(i + 1))).toMap
+      def ntiles(f: org.apache.spark.sql.DataFrame) =
+        f.select(col("id") +: tiles.map { case (name, o) =>
+          ntile(k).over(Window.orderBy(o: _*)).cast("long").as(name) }: _*)
       val (ranked, total) = RankOps.withGlobalRankCounted(df, "rank", order, parts)
+      val small = df.filter(col("id") < cut)
       val got = Seq(
         byId(ranked, "rank"),
         byId(RankOps.withGroupedRank(df, "grank", groups, order, parts, Some("gcount")),
           "grank", "gcount"),
-        byId(RankOps.withGlobalNtile(df, "ntile", k, order), "ntile"),
+        byId(RankOps.withGlobalNtile(df, k, tiles), tiles.map(_._1): _*),
+        byId(RankOps.withGlobalNtile(small, k, tiles), tiles.map(_._1): _*),
         byId(RankOps.withGlobalCumSum(df, "cum", col("v"), order, parts), "cum"))
       spark.catalog.clearCache()
-      val want = Seq(Seq(0), Seq(1, 2), Seq(3), Seq(4))
-        .map(ix => ref.view.mapValues(v => ix.map(v)).toMap)
+      val want = Seq(ref.view.mapValues(v => Seq(v(0))).toMap,
+        ref.view.mapValues(v => Seq(v(1), v(2))).toMap,
+        byId(ntiles(df), tiles.map(_._1): _*),
+        byId(ntiles(small), tiles.map(_._1): _*),
+        ref.view.mapValues(v => Seq(v(3))).toMap)
       // order statistics of s per group (lower median, ceil(n·p), the last
       // row) and the MAD, from valueAt over the grouped core against
       // min(when(row_number() === pos, v)) over plain Windows
@@ -205,8 +223,8 @@ class RankOpsSpec extends AnyFunSuite {
       s"wrong failure: ${e.getMessage}")
   }
 
-  test("each RankOps form launches no more Spark jobs than the per-form code did") {
-    import spark.implicits._
+  /** The Spark jobs `body` launches, and its value. */
+  private def jobsOf[T](body: => T): (Int, T) = {
     val group = "rankops-job-count"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -215,39 +233,105 @@ class RankOpsSpec extends AnyFunSuite {
           js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
     }
     val sc = spark.sparkContext
-    def jobsOf(construct: => org.apache.spark.sql.DataFrame): Int = {
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "rankops")
+      val out = try body finally sc.clearJobGroup()
       org.apache.spark.TestBus.drain(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "rankops form")
-      try construct.write.format("noop").mode("overwrite").save()
-      finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
+      (jobs.get, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def write(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("each RankOps form launches no more Spark jobs than the per-form code did") {
+    import spark.implicits._
+    def jobsOfForm(construct: => org.apache.spark.sql.DataFrame): Int = {
+      val (n, _) = jobsOf(write(construct))
       spark.catalog.clearCache()
-      jobs.get
+      n
     }
     val order = Seq(col("v").desc, col("id").asc)
     val rnd = new scala.util.Random(11)
     val grouped = (1 to 4013).map(i => (i.toLong, s"g${rnd.nextInt(5)}", rnd.nextInt(40)))
       .toDF("id", "g", "v")
-    sc.addSparkListener(listener)
-    try {
-      val counts = Map(
-        "rank" -> jobsOf(RankOps.withGlobalRank(sampleDf(1237), "r", order)),
-        "ntile" -> jobsOf(RankOps.withGlobalNtile(sampleDf(1237), "nt", 5, order)),
-        "grouped" -> jobsOf(RankOps.withGroupedRank(grouped, "r", Seq("g"), order)),
-        "grouped_count" -> jobsOf(RankOps.withGroupedRank(grouped, "r", Seq("g"), order,
-          countCol = Some("n"))),
-        "cumsum" -> jobsOf(RankOps.withGlobalCumSum(sampleDf(1237), "c", col("v"), order)))
-      // the per-form implementations launched 6 jobs each on these frames
-      // (7 for cumsum), and the exchanged offsets collect kept the shared
-      // core at 6; the partition-local offsets pass makes every form 5:
-      // the range sample, the range shuffle's map stage, the offsets fold
-      // (which materializes the checkpoint), then the offsets broadcast
-      // and the write
-      val want = Map("rank" -> 5, "ntile" -> 5, "grouped" -> 5, "grouped_count" -> 5,
-        "cumsum" -> 5)
-      assert(counts == want, s"job counts per form: $counts, want $want")
-    } finally sc.removeSparkListener(listener)
+    val counts = Map(
+      "rank" -> jobsOfForm(RankOps.withGlobalRank(sampleDf(1237), "r", order)),
+      "ntile" -> jobsOfForm(RankOps.withGlobalNtile(sampleDf(1237), 5, Seq("nt" -> order))),
+      "ntile3" -> jobsOfForm(RankOps.withGlobalNtile(sampleDf(1237), 5, Seq("a" -> order,
+        "b" -> Seq(col("v").asc, col("id").desc), "c" -> Seq(col("id"))))),
+      "grouped" -> jobsOfForm(RankOps.withGroupedRank(grouped, "r", Seq("g"), order)),
+      "grouped_count" -> jobsOfForm(RankOps.withGroupedRank(grouped, "r", Seq("g"), order,
+        countCol = Some("n"))),
+      "cumsum" -> jobsOfForm(RankOps.withGlobalCumSum(sampleDf(1237), "c", col("v"), order)))
+    // the per-form implementations launched 6 jobs each on these frames
+    // (7 for cumsum), and the exchanged offsets collect kept the shared
+    // core at 6; the partition-local offsets pass makes every prefix form
+    // 5: the range sample, the range shuffle's map stage, the offsets fold
+    // (which materializes the checkpoint), then the offsets broadcast and
+    // the write. NTILE's boundary selection is 4 for any number of orders:
+    // count-and-sample, histogram, boundary-bucket collect, the write
+    // (it was 5 per order as a rank)
+    val want = Map("rank" -> 5, "ntile" -> 4, "ntile3" -> 4, "grouped" -> 5,
+      "grouped_count" -> 5, "cumsum" -> 5)
+    assert(counts == want, s"job counts per form: $counts, want $want")
+  }
+
+  test("a small collect bound splits a boundary bucket once more; past that NTILE fails") {
+    import org.apache.spark.sql.expressions.Window
+    val order = Seq(col("v").desc, col("id").asc)
+    val df = sampleDf(1237)
+    val want = df.select(col("id"), ntile(5).over(Window.orderBy(order: _*)).cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def scored(bound: Long) = RankOps.withGlobalNtile(df, 5, Seq("nt" -> order), bound)
+    val (defaultJobs, _) = jobsOf(scored(RankOps.MaxBoundedFrame))
+    // 1,024 sampled keys cut into 64 first-round buckets of ~19 rows: a
+    // bound of 8 sends every boundary bucket to a second histogram over the
+    // sampled keys inside it, which leaves ~1 row per bucket
+    val (smallJobs, out) = jobsOf(scored(8))
+    assert(defaultJobs == 3 && smallJobs == 4, s"jobs: $defaultJobs, then $smallJobs")
+    assert(out.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("nt")).toMap == want)
+    val e = intercept[IllegalStateException](scored(0))
+    assert(e.getMessage.contains("bounded-frame guard 'ntile_bounds'"), e.getMessage)
+  }
+
+  test("an aggregate input is evaluated once by the rank core and the NTILE selection") {
+    // under AQE the aggregate's exchange is added inside the adaptive plan,
+    // where an input plan check does not see it; unpersisted, the rank
+    // core's range sample and shuffle map would each evaluate the
+    // aggregate's output
+    val evals = spark.sparkContext.longAccumulator("aggregate evaluations")
+    val counted = udf { (v: Long) => evals.add(1); v }.asNondeterministic()
+    val agg = spark.range(0, 6000, 1, 4).groupBy((col("id") % 600).as("g"))
+      .agg(sum(col("id")).as("s"))
+      .select(col("g"), counted(col("s")).as("s"))
+    def evaluations(out: => org.apache.spark.sql.DataFrame): Long = {
+      evals.reset()
+      write(out)
+      spark.catalog.clearCache()
+      evals.value
+    }
+    val order = Seq(col("s").desc, col("g").asc)
+    assert(evaluations(RankOps.withGlobalRank(agg, "r", order)) == 600L)
+    assert(evaluations(RankOps.withGroupedRank(agg.withColumn("h", col("g") % 3), "r",
+      Seq("h"), order)) == 600L)
+    assert(evaluations(RankOps.withGlobalNtile(agg, 5, Seq("a" -> order,
+      "b" -> Seq(col("g").desc)))) == 600L)
+  }
+
+  test("rfm_segments constructs its three NTILEs in 6 Spark jobs at sf0.01") {
+    val sf001 = new java.io.File(new java.io.File(TestSpark.sfDir).getParentFile, "sf0.01").getPath
+    val rfm = SparkEntry.queries("rfm_segments")
+    write(rfm(spark, sf001)) // the inputs' schemas are set-up, not construction
+    spark.catalog.clearCache()
+    // the three query stages of the orders ⋈ customer aggregate, then the
+    // count-and-sample job that checkpoints it, the histogram and the
+    // boundary collect; the three rank-based NTILEs took 14
+    val (jobs, _) = jobsOf(rfm(spark, sf001))
+    spark.catalog.clearCache()
+    assert(jobs <= 6, s"rfm_segments constructed in $jobs jobs")
   }
 
   private val mainRoot = new java.io.File("src/main/scala")
