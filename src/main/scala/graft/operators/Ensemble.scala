@@ -23,8 +23,9 @@ object Ensemble {
   import Exact._
 
   def anomalyEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    // persisted while its two grouped ranks read it (see Quality.madOutliers)
-    val o = Quality.countryCents(spark, dir).persist()
+    // checkpointed: its two grouped ranks, the moment aggregates and the
+    // final join all read it (see Quality.madOutliers)
+    val o = Quality.countryCents(spark, dir).localCheckpoint(false)
 
     // moment stats (z-score): shifted-data variance in exact integer cents
     val agg1 = o.groupBy(col("country").as("a_country"))
@@ -44,7 +45,6 @@ object Ensemble {
         .as("std_price"))
 
     val ordStats = Quality.withCountryMad(o, Quality.countryCentsStats(o))
-    o.unpersist()
 
     val scored = o
       .join(broadcast(zStats), o("country") === col("z_country")).drop("z_country")

@@ -127,12 +127,13 @@ object Quality {
     * 0.6745·(x-med)/MAD is a fixed IEEE sequence. MAD=0 groups emit NULL z
     * on both engines (explicit guard — engines disagree on x/0). */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
-    // persisted because the two grouped ranks and the final join all read
-    // it: uncached, the orders-with-country join would run three times
-    val o = countryCents(spark, dir).persist()
+    // checkpointed because the two grouped ranks and the final join all
+    // read it: uncached, the orders-with-country join would run three
+    // times. Not persisted: under AQE a persisted input is one more
+    // table-cache job, and an unpersist before the final join would re-run
+    // the join at execute
+    val o = countryCents(spark, dir).localCheckpoint(false)
     val mad = withCountryMad(o, countryCentsStats(o))
-    // both ranks are checkpointed, so `mad` no longer reaches `o`
-    o.unpersist()
     o.join(broadcast(mad), col("country") === col("s_country"))
       .withColumn("median_price", col("med_cents").cast("double") / 100.0)
       .withColumn("mad_price", col("mad_cents").cast("double") / 100.0)

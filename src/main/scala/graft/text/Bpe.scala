@@ -57,7 +57,8 @@ object Bpe {
     // one corpus-scale pass: word frequencies (the vocab_topk tokenizer)
     val words = graft.Tables.documents(spark, dir)
       .withColumn("__tokens", expr("""split(lower(trim(text)), '\\s+')"""))
-      .select(explode(col("__tokens")).as("word"))
+      // explode_outer: one split per row (TextOps.withTokens)
+      .select(explode_outer(col("__tokens")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("n"))
     mergesFromWords(spark, words, numMerges)
@@ -238,7 +239,8 @@ object Bpe {
                 numMerges: Int = NumMerges): DataFrame = {
     val docWords = graft.Tables.documents(spark, dir)
       .withColumn("__tokens", expr("""split(lower(trim(text)), '\\s+')"""))
-      .select(col("doc_id"), explode(col("__tokens")).as("word"))
+      // explode_outer: one split per row (TextOps.withTokens)
+      .select(col("doc_id"), explode_outer(col("__tokens")).as("word"))
       .filter(length(col("word")) > 0)
     val words = docWords.groupBy("word").agg(count(lit(1)).as("n"))
     // learn + apply on the SAME frame: encodedLengths rides the learner's

@@ -56,7 +56,8 @@ object Dsir {
     val docs = Tables.documents(spark, dir)
     val toks = docs
       .withColumn("__tokens", expr("""split(lower(trim(text)), '\\s+')"""))
-      .select(col("doc_id"), col("lang"), explode(col("__tokens")).as("token"))
+      // explode_outer: one split per row (TextOps.withTokens)
+      .select(col("doc_id"), col("lang"), explode_outer(col("__tokens")).as("token"))
       .filter(length(col("token")) > 0)
       .withColumn("bucket",
         TrainPrep.hashBucket(concat(lit("dsir:"), col("token")), buckets))

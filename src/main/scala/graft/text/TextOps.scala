@@ -27,6 +27,14 @@ object TextOps {
     * punctuation marks (the common GPT-2-style split shape). */
   val bpePattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
+  /** Whitespace tokens of `text` as `__tokens`. Token rows come from
+    * `explode_outer(__tokens)` followed by a `length(token) > 0` filter, at
+    * every site that tokenizes this way (here, Bpe, Dsir): a plain `explode`
+    * of an attribute makes Spark's InferFiltersFromGenerate add
+    * `size(split(...)) > 0 AND isnotnull(split(...))` below the Generate,
+    * which evaluates the regex split three times per document. The outer
+    * form's null row for an empty or null array fails the length filter,
+    * so the rows are the same. */
   private def withTokens(df: DataFrame): DataFrame =
     df.withColumn("__tokens", expr("""split(lower(trim(text)), '\\s+')"""))
 
@@ -151,7 +159,7 @@ object TextOps {
   def vocabTopK(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = withTokens(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(col("__tokens")).as("token"))
+      .select(col("doc_id"), explode_outer(col("__tokens")).as("token"))
       .filter(length(col("token")) > 0)
     // total token mass ≡ Σ n_occurrences over byTok, so the denominator
     // never needs a second corpus pass BY CONSTRUCTION — the original
@@ -203,7 +211,7 @@ object TextOps {
   def tfidfTopTerms(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = withTokens(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(col("__tokens")).as("token"))
+      .select(col("doc_id"), explode_outer(col("__tokens")).as("token"))
       .filter(length(col("token")) > 0)
     // localCheckpoint: dfreq and the score join both consume tf — without
     // it Catalyst re-plans the whole explode+aggregate subtree under the

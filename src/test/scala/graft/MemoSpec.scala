@@ -73,22 +73,8 @@ class MemoSpec extends AnyFunSuite {
 
   /** Spark jobs `f` launches on this thread, and its result. */
   private def jobsOf[T](f: => T): (Int, T) = {
-    val group = "memo-schema-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Tables.read")
-      val out = try f finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      (jobs.get, out)
-    } finally sc.removeSparkListener(listener)
+    val run = Traced(spark)(f)
+    (run.jobs, run.value)
   }
 
   test("Tables.read resolves a schema once per file listing") {

@@ -225,22 +225,8 @@ class RankOpsSpec extends AnyFunSuite {
 
   /** The Spark jobs `body` launches, and its value. */
   private def jobsOf[T](body: => T): (Int, T) = {
-    val group = "rankops-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "rankops")
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      (jobs.get, out)
-    } finally sc.removeSparkListener(listener)
+    val run = Traced(spark)(body)
+    (run.jobs, run.value)
   }
 
   private def write(df: org.apache.spark.sql.DataFrame): Unit =

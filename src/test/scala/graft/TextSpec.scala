@@ -1,10 +1,13 @@
 package graft
 
 import graft.text.TextOps
+import org.apache.spark.sql.catalyst.expressions.StringSplit
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TextSpec extends AnyFunSuite {
+class TextSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
@@ -85,6 +88,29 @@ class TextSpec extends AnyFunSuite {
       val tf = r.getAs[Long]("tf"); val df = r.getAs[Long]("df_docs")
       assert(df >= 1 && tf >= 1)
       assert(r.getAs[Long]("score_scaled") == tf * 1000000L * nTotal / df)
+    }
+  }
+
+  test("the tokenizing paths split each document once per documents scan") {
+    // a plain explode of the split array lets Spark infer
+    // size(split(...)) > 0 AND isnotnull(split(...)) below the Generate:
+    // three regex splits per document instead of one
+    Seq("bpe_encode", "bpe_vocab", "vocab_topk", "tfidf_topterms", "dsir_selection").foreach { q =>
+      val run = Traced(spark) {
+        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+      spark.catalog.clearCache()
+      val perPlan = run.plans.map { p =>
+        val splits = collect(p)(n => n.expressions.flatMap(_.collect { case s: StringSplit => s }))
+          .flatten.size
+        val scans = collect(p) {
+          case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains("documents")) => f
+        }.size
+        (splits, scans)
+      }
+      assert(perPlan.exists(_._1 > 0) && perPlan.forall { case (sp, sc) => sp <= sc },
+        s"$q: (splits, documents scans) per executed plan: $perPlan")
     }
   }
 }
