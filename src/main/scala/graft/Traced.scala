@@ -25,13 +25,13 @@ object Traced {
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
+    org.apache.spark.TracedBus.drain(sc)
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     try {
       sc.setJobGroup(group, "traced")
       val out = try body finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.TracedBus.drain(sc)
       import scala.jdk.CollectionConverters._
       Run(jobs.get, plans.asScala.toSeq, out)
     } finally {

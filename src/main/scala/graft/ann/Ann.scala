@@ -418,7 +418,7 @@ object Ann {
   private[graft] val xCols: Seq[String] = (0 until IvfDims).map(i => s"x$i")
 
   /** Shipped probe default, scaled with the list count — piecewise on the
-    * two MEASURED regimes (tools/RecallProbe, isotropic worst case):
+    * two MEASURED regimes (`graft.tools.Profile recall`, isotropic worst case):
     *
     *  - nLists ≤ 8 (the min-clamp regime, n ≤ 64): 7/8 coverage
     *    (nLists − max(1, nLists/8)), the r14 rule — at 8 coarse lists

@@ -168,34 +168,15 @@ class AnnSpec extends AnyFunSuite with VectorIndexBehaviours {
   }
 
   test("clusteredness is one Spark job cold and none on a memo hit") {
-    val group = "clusteredness-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
     val centers = Array.tabulate(3, Ann.IvfDims)((c, d) => (c * 100 + d).toDouble)
     val rows = (0 until 300).map(i => (i % 3,
       Array.tabulate(Ann.IvfDims)(d => (i % 3) * 100L + d + (i % 7) - 3)))
     val df = assignedFrame(rows, 4) // a fresh plan: its digest is not memoized
-    sc.addSparkListener(listener)
-    try {
-      def jobsOf(call: => Boolean): (Boolean, Int) = {
-        org.apache.spark.TestBus.drain(sc)
-        jobs.set(0)
-        sc.setJobGroup(group, "isClustered")
-        val v = try call finally sc.clearJobGroup()
-        org.apache.spark.TestBus.drain(sc)
-        (v, jobs.get)
-      }
-      val (first, coldJobs) = jobsOf(Ann.isClustered(df, centers))
-      assert(coldJobs == 1, s"cold isClustered launched $coldJobs jobs")
-      val (again, warmJobs) = jobsOf(Ann.isClustered(df, centers))
-      assert(warmJobs == 0, s"memo hit launched $warmJobs jobs")
-      assert(first && again == first)
-    } finally sc.removeSparkListener(listener)
+    val cold = Traced(spark)(Ann.isClustered(df, centers))
+    assert(cold.jobs == 1, s"cold isClustered launched ${cold.jobs} jobs")
+    val hit = Traced(spark)(Ann.isClustered(df, centers))
+    assert(hit.jobs == 0, s"memo hit launched ${hit.jobs} jobs")
+    assert(cold.value && hit.value == cold.value)
   }
 
   test("LSH top-k recall >= 0.9 vs brute force") {

@@ -32,6 +32,22 @@ class DocCountsSpec extends AnyFunSuite {
     assert(firstInt("""# (\d+) ok, 0 fail""") === SparkEntry.oracleSql.size)
   }
 
+  test("README's Mains: line names exactly the objects under src/main that define a main") {
+    val para = """(?s)Mains:(.*?)\n\s*\n""".r.findFirstMatchIn(readme)
+    assert(para.isDefined, "README.md no longer has a Mains: paragraph")
+    val named = """`(graft(?:\.\w+)+)""".r.findAllMatchIn(para.get.group(1)).map(_.group(1)).toSet
+    val defined = MainSources.files.flatMap { f =>
+      val text = MainSources.text(f)
+      val pkg = """(?m)^package ([\w.]+)""".r.findFirstMatchIn(text).map(_.group(1) + ".")
+      """\bdef main\(""".r.findAllMatchIn(text).map { m =>
+        val obj = """\bobject (\w+)""".r.findAllMatchIn(text.take(m.start)).toSeq.last.group(1)
+        pkg.getOrElse("") + obj
+      }
+    }.toSet
+    assert(defined.nonEmpty)
+    assert(named === defined)
+  }
+
   test("every query has an oracle (the r14 gate invariant: zero rows-only)") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracles: $missing")

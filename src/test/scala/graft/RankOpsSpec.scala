@@ -320,19 +320,7 @@ class RankOpsSpec extends AnyFunSuite {
     assert(jobs <= 6, s"rfm_segments constructed in $jobs jobs")
   }
 
-  private val mainRoot = new java.io.File("src/main/scala")
-
-  private def mainSources: Seq[java.io.File] = {
-    assert(mainRoot.isDirectory, s"library sources not found under ${mainRoot.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    files(mainRoot).filter(_.getName.endsWith(".scala"))
-  }
-
-  private def text(f: java.io.File) = {
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try src.mkString finally src.close()
-  }
+  import MainSources.{text, files => mainSources}
 
   test("RankOps is one range-partitioned prefix core; no partition-id tricks remain") {
     val banned = Seq("monotonically_increasing_id", "spark_partition_id",
@@ -342,7 +330,7 @@ class RankOpsSpec extends AnyFunSuite {
       b <- banned if text(f).contains(b)
     } yield s"${f.getPath}: $b"
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    val rankOps = text(new java.io.File(mainRoot, "graft/operators/RankOps.scala"))
+    val rankOps = text(new java.io.File(MainSources.root, "graft/operators/RankOps.scala"))
     assert("repartitionByRange".r.findAllIn(rankOps).size == 1)
   }
 

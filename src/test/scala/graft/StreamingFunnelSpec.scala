@@ -86,24 +86,9 @@ class StreamingFunnelSpec extends AnyFunSuite {
     // (count-and-sample, histogram, boundary collect) and each batch's sink
     // write; banding by a global rank made it 12, and the per-batch join,
     // distinct, anti-join and state-schema inference before that 33
-    val group = "sfunnel-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-          js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
     Tables.events(spark, dir).schema // the input's schema is set-up, not construction
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "streaming funnel replay")
-      try StreamingFunnel.streamingFunnelReplay(spark, dir, nBatches = 4)
-      finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
+    val jobs = Traced(spark)(StreamingFunnel.streamingFunnelReplay(spark, dir, nBatches = 4)).jobs
     spark.catalog.clearCache()
-    assert(jobs.get <= 11, s"a 4-batch replay constructed in ${jobs.get} jobs")
+    assert(jobs <= 11, s"a 4-batch replay constructed in $jobs jobs")
   }
 }
